@@ -23,6 +23,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from amazon_personalize_connectors_spark.streaming.epoch_store import (
+    run_concurrently,
+)
+
 
 def dot(a: Column, b: Column) -> Column:
     """Sequential-fold dot product of two double arrays."""
@@ -1684,9 +1688,7 @@ def _hnsw_assemble(
     # overlap them from a driver thread pool (guide §2.6) so the
     # trivial nodes/hubs jobs back-fill the edge write's tail; _META
     # still lands only after every write completes (r12 wave 9).
-    from concurrent.futures import ThreadPoolExecutor
-
-    writes = (
+    run_concurrently([
         lambda: local.unionByName(cross)
         .distinct()
         .write.mode("overwrite")
@@ -1697,10 +1699,7 @@ def _hnsw_assemble(
         lambda: entries.distinct()
         .write.mode("overwrite")
         .parquet(f"{index_path}/hubs"),
-    )
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        for done in [pool.submit(w) for w in writes]:
-            done.result()
+    ])
     # version stamp: which hash family produced the signatures/qv grid
     # (block_col builds record the trusted key + grid suffix — their
     # candidate geometry never touched _rp_weight). The sidecar uses

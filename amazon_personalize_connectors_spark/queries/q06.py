@@ -1110,7 +1110,10 @@ def q_stream_capped_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # orders by mtime, so the balance still hops the micro-batch
     # boundaries in time order).
     import shutil
-    from concurrent.futures import ThreadPoolExecutor
+
+    from amazon_personalize_connectors_spark.streaming.epoch_store import (
+        run_concurrently,
+    )
 
     def _write_slice(i: int) -> str:
         lo = bounds[0] + i * span
@@ -1121,8 +1124,9 @@ def q_stream_capped_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         sl.coalesce(1).write.mode("overwrite").parquet(d)
         return d
 
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        slice_dirs = list(pool.map(_write_slice, range(4)))
+    slice_dirs = run_concurrently(
+        [lambda i=i: _write_slice(i) for i in range(4)]
+    )
     for i, d in enumerate(slice_dirs):
         for f in sorted(glob.glob(d + "/*.parquet")):
             dst = os.path.join(landing, f"slice{i}-" + os.path.basename(f))

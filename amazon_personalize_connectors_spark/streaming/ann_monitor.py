@@ -55,12 +55,14 @@ from amazon_personalize_connectors_spark.functions.similarity import (
     lsh_signed_nodes,
 )
 from amazon_personalize_connectors_spark.streaming.epoch_store import (
-    checkpoint_identity,
     commit_version,
     current_version as _current_version,
+    drain_into_store,
     plan_fold,
     prune_versions as _prune_versions,
     read_meta,
+    run_concurrently,
+    write_atomic,
 )
 
 _EDGE_SCHEMA = "src long, dst long, qdot long"
@@ -330,15 +332,12 @@ def apply_vectors_batch(
     )
 
     # the three store writes are independent jobs over disjoint output
-    # directories — overlap them from a small driver thread pool so
-    # one write's straggler tail back-fills with the others' tasks
-    # (guide §2.6); the manifest is written only after ALL of them
-    # complete (the join below), so the crash-safety discipline —
-    # version directory fully written before the pointer flips — is
-    # unchanged (r12 wave 7).
-    from concurrent.futures import ThreadPoolExecutor
-
-    writes = (
+    # directories — overlap them so one write's straggler tail
+    # back-fills with the others' tasks (guide §2.6); the manifest is
+    # written only after ALL of them complete, so the crash-safety
+    # discipline — version directory fully written before the pointer
+    # flips — is unchanged (r12 wave 7).
+    run_concurrently([
         lambda: next_edges.write.mode("overwrite")
         .partitionBy("bucket")
         .parquet(os.path.join(out, "edges")),
@@ -349,10 +348,7 @@ def apply_vectors_batch(
         lambda: vec_part.write.mode("overwrite")
         .partitionBy("bucket")
         .parquet(os.path.join(out, "vecs")),
-    )
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        for done in [pool.submit(w) for w in writes]:
-            done.result()
+    ])
     cand.unpersist()
     a_sigs.unpersist()
 
@@ -385,11 +381,8 @@ def apply_vectors_batch(
         "vecs": {**man["vecs"], **{str(b): version for b in new_parts}},
         "edges": edge_entries,
     }
-    tmp_man = _manifest_path(store_path, version) + ".tmp"
     os.makedirs(out, exist_ok=True)
-    with open(tmp_man, "w") as f:
-        json.dump(new_man, f)
-    os.replace(tmp_man, _manifest_path(store_path, version))
+    write_atomic(_manifest_path(store_path, version), json.dumps(new_man))
     commit_version(store_path, version, int(epoch_id), prior,
                    int(epoch_id), token=checkpoint_token)
 
@@ -403,27 +396,13 @@ def maintain_from_stream(
 ) -> None:
     """Drain a vector stream (Trigger.AvailableNow), maintaining the
     kNN edge store one micro-batch at a time."""
-    os.makedirs(store_path, exist_ok=True)
-    # per-checkpoint nonce, not the path: a recreated checkpoint
-    # at the same location must read as a FOREIGN stream (ADVICE r9)
-    _stream_token = checkpoint_identity(checkpoint_dir)
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda b, e: apply_vectors_batch(
-                b, e, store_path, checkpoint_token=_stream_token,
-                **graph_kwargs
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain_into_store(
+        stream, store_path, checkpoint_dir,
+        lambda b, e, token: apply_vectors_batch(
+            b, e, store_path, checkpoint_token=token, **graph_kwargs
+        ),
+        timeout_s,
     )
-    try:
-        if not q.awaitTermination(timeout_s):
-            raise TimeoutError(f"ann monitor still running after {timeout_s}s")
-    finally:
-        if q.isActive:
-            q.stop()
 
 
 def compact_store(spark: SparkSession, store_path: str) -> None:
@@ -474,9 +453,7 @@ def compact_store(spark: SparkSession, store_path: str) -> None:
     # pointer-flip crash-safety discipline is unchanged (r12 wave 7).
     # bucket rides back in via the owning node's t0 — the same
     # re-derivation the fold's carry path uses.
-    from concurrent.futures import ThreadPoolExecutor
-
-    writes = (
+    run_concurrently([
         lambda: sigs.withColumn("bucket", F.col("t0"))
         .write.mode("overwrite")
         .partitionBy("bucket")
@@ -496,10 +473,7 @@ def compact_store(spark: SparkSession, store_path: str) -> None:
         .write.mode("overwrite")
         .partitionBy("bucket")
         .parquet(os.path.join(out, "edges")),
-    )
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        for done in [pool.submit(w) for w in writes]:
-            done.result()
+    ])
     new_man = {
         "n_bits": man["n_bits"],
         "n_tables": n_tables,
@@ -512,11 +486,8 @@ def compact_store(spark: SparkSession, store_path: str) -> None:
         "vecs": {b: version for b in man["vecs"]},
         "edges": {b: version for b in man["edges"]},
     }
-    tmp_man = _manifest_path(store_path, version) + ".tmp"
     os.makedirs(out, exist_ok=True)
-    with open(tmp_man, "w") as f:
-        json.dump(new_man, f)
-    os.replace(tmp_man, _manifest_path(store_path, version))
+    write_atomic(_manifest_path(store_path, version), json.dumps(new_man))
     commit_version(
         store_path,
         version,

@@ -55,9 +55,14 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def _version_file(store_path: str) -> str:
-    return os.path.join(store_path, "_VERSION")
+from amazon_personalize_connectors_spark.streaming.epoch_store import (
+    _version_file,
+    checkpoint_identity,
+    current_version,
+    drain_into_store,
+    prune_versions,
+    write_atomic,
+)
 
 
 def _cdc_meta_path(store_path: str) -> str:
@@ -82,12 +87,7 @@ def _snapshot_at(
 
 def read_snapshot(spark: SparkSession, store_path: str) -> DataFrame | None:
     """Current snapshot, or None before the first applied batch."""
-    vf = _version_file(store_path)
-    if not os.path.exists(vf):
-        return None
-    with open(vf) as f:
-        version = int(f.read().strip())
-    return _snapshot_at(spark, store_path, version)
+    return _snapshot_at(spark, store_path, current_version(store_path))
 
 
 def apply_batch(
@@ -137,11 +137,7 @@ def apply_batch(
             f"overlapping keys), or drain/stop the owning stream "
             f"first."
         )
-    cur_version: int | None = None
-    if os.path.exists(_version_file(store_path)):
-        with open(_version_file(store_path)) as f:
-            cur_version = int(f.read().strip())
-
+    cur_version = current_version(store_path)
     prior_version: int | None = cur_version
     if epoch_id is not None and cur_version is not None:
         last = meta.get("last_epoch")
@@ -246,32 +242,19 @@ def apply_batch(
             "token": meta.get("token"),
         }
     if new_meta is not None:
-        tmp_m = _cdc_meta_path(store_path) + ".tmp"
-        with open(tmp_m, "w") as f:
-            json.dump(new_meta, f)
-        os.replace(tmp_m, _cdc_meta_path(store_path))
-    tmp = _version_file(store_path) + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(str(version))
-    os.replace(tmp, _version_file(store_path))
+        write_atomic(_cdc_meta_path(store_path), json.dumps(new_meta))
+    write_atomic(_version_file(store_path), str(version))
 
 
 def adopt_cdc_store(store_path: str, checkpoint_dir: str) -> None:
     """Deliberately transfer cdc-store ownership to ``checkpoint_dir``
     (the _CDC_META twin of ``epoch_store.adopt_store`` — see its
     docstring for why migration is explicit, never automatic)."""
-    from amazon_personalize_connectors_spark.streaming.epoch_store import (
-        checkpoint_identity,
-    )
-
     meta = _read_cdc_meta(store_path)
     if meta.get("last_epoch") is None:
         return  # not stream-owned yet — first epoch stamps ownership
     meta["token"] = checkpoint_identity(checkpoint_dir)
-    tmp = _cdc_meta_path(store_path) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, _cdc_meta_path(store_path))
+    write_atomic(_cdc_meta_path(store_path), json.dumps(meta))
 
 
 def prune_snapshots(store_path: str, keep_last: int = 2) -> None:
@@ -291,14 +274,9 @@ def prune_snapshots(store_path: str, keep_last: int = 2) -> None:
             "required by the retry-after-flip path, not just reader "
             "grace"
         )
-    if not os.path.exists(_version_file(store_path)):
+    cur = current_version(store_path)
+    if cur is None:
         return
-    with open(_version_file(store_path)) as f:
-        cur = int(f.read().strip())
-    from amazon_personalize_connectors_spark.streaming.epoch_store import (
-        prune_versions,
-    )
-
     live = {cur - i for i in range(keep_last)}
     live.add(cur)
     prev = _read_cdc_meta(store_path).get("prev")
@@ -318,34 +296,11 @@ def stream_apply_changes(
 ) -> None:
     """Drain a stream (Trigger.AvailableNow) applying every micro-batch
     onto the keyed snapshot at ``store_path``."""
-    # local import: epoch_store imports _version_file from this module
-    from amazon_personalize_connectors_spark.streaming.epoch_store import (
-        checkpoint_identity,
+    drain_into_store(
+        stream, store_path, checkpoint_dir,
+        lambda b, e, token: apply_batch(
+            b, store_path, key_cols, op_col, epoch_id=e,
+            checkpoint_token=token, seq_col=seq_col,
+        ),
+        timeout_s,
     )
-
-    os.makedirs(store_path, exist_ok=True)
-    # per-checkpoint nonce, not the path: a recreated checkpoint
-    # at the same location must read as a FOREIGN stream (ADVICE r9)
-    _stream_token = checkpoint_identity(checkpoint_dir)
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda b, epoch: apply_batch(
-                b,
-                store_path,
-                key_cols,
-                op_col,
-                epoch_id=epoch,
-                checkpoint_token=_stream_token,
-                seq_col=seq_col,
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        if not q.awaitTermination(timeout_s):
-            raise TimeoutError(f"cdc sink still running after {timeout_s}s")
-    finally:
-        if q.isActive:
-            q.stop()

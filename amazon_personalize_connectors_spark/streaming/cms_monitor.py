@@ -21,8 +21,6 @@ refused instead of double-counting.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -31,10 +29,9 @@ from amazon_personalize_connectors_spark.functions.sketches import (
     cms_sketch,
 )
 from amazon_personalize_connectors_spark.streaming.epoch_store import (
-    checkpoint_identity,
-    commit_version,
-    current_version as _current_version,
-    plan_fold,
+    drain_into_store,
+    fold_mergeable,
+    read_committed,
 )
 
 _CMS_SCHEMA = "d int, cell string, cnt long"
@@ -43,12 +40,7 @@ _CMS_SCHEMA = "d int, cell string, cnt long"
 def read_cms(spark: SparkSession, store_path: str) -> DataFrame:
     """Accumulated (d, cell, cnt) sketch at the committed version;
     empty before the first batch."""
-    ver = _current_version(store_path)
-    if ver is None:
-        return spark.createDataFrame([], _CMS_SCHEMA)
-    return spark.read.schema(_CMS_SCHEMA).parquet(
-        os.path.join(store_path, f"v{ver}")
-    )
+    return read_committed(spark, store_path, _CMS_SCHEMA)
 
 
 def apply_cms_batch(
@@ -63,25 +55,11 @@ def apply_cms_batch(
     """foreachBatch body: fold one micro-batch's CMS cells into the
     store. Epoch-keyed (epoch_store.plan_fold): a replayed epoch
     overwrites its own version from the same prior."""
-    spark = batch.sparkSession
-    delta = cms_sketch(batch, key_col, depth=depth, hex_chars=hex_chars)
-    version, prior, _meta = plan_fold(store_path, epoch_id, checkpoint_token)
-    if prior is None:
-        merged = delta
-    else:
-        current = spark.read.schema(_CMS_SCHEMA).parquet(
-            os.path.join(store_path, f"v{prior}")
-        )
-        merged = (
-            current.unionByName(delta)
-            .groupBy("d", "cell")
-            .agg(F.sum("cnt").cast("long").alias("cnt"))
-        )
-    merged.write.mode("overwrite").parquet(
-        os.path.join(store_path, f"v{version}")
+    fold_mergeable(
+        cms_sketch(batch, key_col, depth=depth, hex_chars=hex_chars),
+        epoch_id, store_path, _CMS_SCHEMA, ["d", "cell"],
+        [F.sum("cnt").cast("long").alias("cnt")], checkpoint_token,
     )
-    commit_version(store_path, version, int(epoch_id), prior,
-                   int(epoch_id), token=checkpoint_token)
 
 
 def maintain_from_stream(
@@ -95,27 +73,14 @@ def maintain_from_stream(
 ) -> None:
     """Drain a stream (Trigger.AvailableNow), folding every
     micro-batch's CMS cells into the sketch at ``store_path``."""
-    os.makedirs(store_path, exist_ok=True)
-    # per-checkpoint nonce, not the path: a recreated checkpoint
-    # at the same location must read as a FOREIGN stream (ADVICE r9)
-    _stream_token = checkpoint_identity(checkpoint_dir)
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda b, e: apply_cms_batch(
-                b, e, store_path, key_col, depth=depth, hex_chars=hex_chars,
-                checkpoint_token=_stream_token,
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain_into_store(
+        stream, store_path, checkpoint_dir,
+        lambda b, e, token: apply_cms_batch(
+            b, e, store_path, key_col, depth=depth, hex_chars=hex_chars,
+            checkpoint_token=token,
+        ),
+        timeout_s,
     )
-    try:
-        if not q.awaitTermination(timeout_s):
-            raise TimeoutError(f"cms monitor still running after {timeout_s}s")
-    finally:
-        if q.isActive:
-            q.stop()
 
 
 def estimate_from_store(

@@ -17,8 +17,6 @@ overwrite their own version, stale epochs are refused.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -26,10 +24,9 @@ from amazon_personalize_connectors_spark.functions.sketches import (
     bitmap_partials,
 )
 from amazon_personalize_connectors_spark.streaming.epoch_store import (
-    checkpoint_identity,
-    commit_version,
-    current_version as _current_version,
-    plan_fold,
+    drain_into_store,
+    fold_mergeable,
+    read_committed,
 )
 
 
@@ -43,13 +40,7 @@ def read_bitmaps(
 ) -> DataFrame:
     """Accumulated (group..., id_bucket, bm) partials at the committed
     version; empty before the first batch."""
-    ver = _current_version(store_path)
-    schema = _store_schema(group_cols)
-    if ver is None:
-        return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(
-        os.path.join(store_path, f"v{ver}")
-    )
+    return read_committed(spark, store_path, _store_schema(group_cols))
 
 
 def apply_bitmap_batch(
@@ -63,25 +54,11 @@ def apply_bitmap_batch(
     """foreachBatch body: OR one micro-batch's bitmap partials into
     the store. Epoch-keyed; replayed epochs overwrite their own
     version from the same prior."""
-    spark = batch.sparkSession
-    delta = bitmap_partials(batch, group_cols, id_col)
-    version, prior, _meta = plan_fold(store_path, epoch_id, checkpoint_token)
-    if prior is None:
-        merged = delta
-    else:
-        current = spark.read.schema(_store_schema(group_cols)).parquet(
-            os.path.join(store_path, f"v{prior}")
-        )
-        merged = (
-            current.unionByName(delta)
-            .groupBy(*group_cols, "id_bucket")
-            .agg(F.bitmap_or_agg(F.col("bm")).alias("bm"))
-        )
-    merged.write.mode("overwrite").parquet(
-        os.path.join(store_path, f"v{version}")
+    fold_mergeable(
+        bitmap_partials(batch, group_cols, id_col), epoch_id, store_path,
+        _store_schema(group_cols), [*group_cols, "id_bucket"],
+        [F.bitmap_or_agg(F.col("bm")).alias("bm")], checkpoint_token,
     )
-    commit_version(store_path, version, int(epoch_id), prior,
-                   int(epoch_id), token=checkpoint_token)
 
 
 def maintain_from_stream(
@@ -94,29 +71,13 @@ def maintain_from_stream(
 ) -> None:
     """Drain a stream (Trigger.AvailableNow), folding every
     micro-batch's bitmap partials into the store."""
-    os.makedirs(store_path, exist_ok=True)
-    # per-checkpoint nonce, not the path: a recreated checkpoint
-    # at the same location must read as a FOREIGN stream (ADVICE r9)
-    _stream_token = checkpoint_identity(checkpoint_dir)
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda b, e: apply_bitmap_batch(
-                b, e, store_path, group_cols, id_col,
-                checkpoint_token=_stream_token,
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain_into_store(
+        stream, store_path, checkpoint_dir,
+        lambda b, e, token: apply_bitmap_batch(
+            b, e, store_path, group_cols, id_col, checkpoint_token=token
+        ),
+        timeout_s,
     )
-    try:
-        if not q.awaitTermination(timeout_s):
-            raise TimeoutError(
-                f"distinct monitor still running after {timeout_s}s"
-            )
-    finally:
-        if q.isActive:
-            q.stop()
 
 
 def distinct_from_store(

@@ -29,8 +29,6 @@ pointed at an old store) is refused instead of corrupting state.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -38,10 +36,9 @@ from amazon_personalize_connectors_spark.operators.ids import (
     add_running_totals,
 )
 from amazon_personalize_connectors_spark.streaming.epoch_store import (
-    checkpoint_identity,
-    commit_version,
-    current_version as _current_version,
-    plan_fold,
+    drain_into_store,
+    fold_mergeable,
+    read_committed,
 )
 
 _GRID_SCHEMA = "v long, a long, b long"
@@ -50,48 +47,33 @@ _GRID_SCHEMA = "v long, a long, b long"
 def read_grid(spark: SparkSession, store_path: str) -> DataFrame:
     """Accumulated (value, count_a, count_b) grid at the committed
     version; empty before the first batch."""
-    ver = _current_version(store_path)
-    if ver is None:
-        return spark.createDataFrame([], _GRID_SCHEMA)
-    return spark.read.schema(_GRID_SCHEMA).parquet(
-        os.path.join(store_path, f"v{ver}")
-    )
+    return read_committed(spark, store_path, _GRID_SCHEMA)
 
 
 def apply_grid_batch(
-    batch: DataFrame, epoch_id: int, store_path: str, value_col: str, in_a, in_b
-, checkpoint_token: str | None = None) -> None:
+    batch: DataFrame,
+    epoch_id: int,
+    store_path: str,
+    value_col: str,
+    in_a,
+    in_b,
+    checkpoint_token: str | None = None,
+) -> None:
     """foreachBatch body: fold one micro-batch's per-value counts into
     the grid store. ``in_a`` / ``in_b`` are Column predicates naming
     the two populations (a row may match either, both, or neither).
     ``epoch_id`` keys the fold (epoch_store.plan_fold): a replayed
     epoch overwrites its own version from the same prior, even after
     the pointer flip."""
-    spark = batch.sparkSession
     delta = batch.groupBy(F.col(value_col).cast("long").alias("v")).agg(
         F.sum(in_a.cast("long")).alias("a"),
         F.sum(in_b.cast("long")).alias("b"),
     )
-    version, prior, _meta = plan_fold(store_path, epoch_id, checkpoint_token)
-    if prior is None:
-        merged = delta
-    else:
-        current = spark.read.schema(_GRID_SCHEMA).parquet(
-            os.path.join(store_path, f"v{prior}")
-        )
-        merged = (
-            current.unionByName(delta)
-            .groupBy("v")
-            .agg(
-                F.sum("a").cast("long").alias("a"),
-                F.sum("b").cast("long").alias("b"),
-            )
-        )
-    merged.write.mode("overwrite").parquet(
-        os.path.join(store_path, f"v{version}")
+    fold_mergeable(
+        delta, epoch_id, store_path, _GRID_SCHEMA, ["v"],
+        [F.sum(c).cast("long").alias(c) for c in ("a", "b")],
+        checkpoint_token,
     )
-    commit_version(store_path, version, int(epoch_id), prior,
-                   int(epoch_id), token=checkpoint_token)
 
 
 def monitor_from_stream(
@@ -105,27 +87,13 @@ def monitor_from_stream(
 ) -> None:
     """Drain a stream (Trigger.AvailableNow), folding every
     micro-batch's value counts into the grid at ``store_path``."""
-    os.makedirs(store_path, exist_ok=True)
-    # per-checkpoint nonce, not the path: a recreated checkpoint
-    # at the same location must read as a FOREIGN stream (ADVICE r9)
-    _stream_token = checkpoint_identity(checkpoint_dir)
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda b, e: apply_grid_batch(
-                b, e, store_path, value_col, in_a, in_b,
-                checkpoint_token=_stream_token,
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain_into_store(
+        stream, store_path, checkpoint_dir,
+        lambda b, e, token: apply_grid_batch(
+            b, e, store_path, value_col, in_a, in_b, checkpoint_token=token
+        ),
+        timeout_s,
     )
-    try:
-        if not q.awaitTermination(timeout_s):
-            raise TimeoutError(f"drift monitor still running after {timeout_s}s")
-    finally:
-        if q.isActive:
-            q.stop()
 
 
 def ks_from_store(spark: SparkSession, store_path: str) -> DataFrame:

@@ -45,8 +45,8 @@ The epoch heuristic alone has one hole (code-review r9): a store whose
 last applied epoch is 0 (a single-batch AvailableNow drain — common)
 cannot distinguish a RETRY of epoch 0 from a FRESH checkpoint's epoch
 0, which carries different data; the "retry" would then silently
-replace accumulated state. The ``token`` field closes it: each
-``maintain_from_stream`` wrapper passes ``checkpoint_identity`` — a
+replace accumulated state. The ``token`` field closes it: every
+stream drain (``drain_into_store``) passes ``checkpoint_identity`` — a
 random nonce file written INTO the checkpoint dir on first use (NOT
 the dir path: a deleted-and-recreated checkpoint at the same path
 would reuse a path token and slip through as a "retry", ADVICE r9) —
@@ -55,6 +55,14 @@ differs from the committed one is REFUSED outright (any epoch — a
 different checkpoint re-delivers everything, so e > last is
 corruption too). Direct ``apply_*_batch`` calls (tests, backfills)
 pass no token and keep the epoch-only heuristic.
+
+Every store wrapper shares the same core here: ``drain_into_store``
+(the stream side, through the package's one drain,
+``incremental.run_available_now``), ``fold_mergeable`` and
+``read_committed`` (the whole fold and read of a single-directory
+store whose state merges by a keyed re-aggregate), and
+``run_concurrently`` (the overlapped writes a fold makes before it
+commits).
 
 Known narrow window (documented, not closed): a retry after a
 crash-between-flip-and-checkpoint-commit overwrites the POINTED-AT
@@ -70,9 +78,24 @@ import json
 import os
 import warnings
 
-from amazon_personalize_connectors_spark.streaming.cdc_sink import (
-    _version_file,
+from pyspark.sql import Column, DataFrame, SparkSession
+
+from amazon_personalize_connectors_spark.streaming.incremental import (
+    run_available_now,
 )
+
+
+def _version_file(store_path: str) -> str:
+    return os.path.join(store_path, "_VERSION")
+
+
+def write_atomic(path: str, text: str) -> None:
+    """Write ``text`` through a temp file and an atomic rename: a
+    reader sees the old content or the new, never a partial file."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        f.write(text)
+    os.replace(tmp, path)
 
 
 def checkpoint_identity(checkpoint_dir: str) -> str:
@@ -182,11 +205,7 @@ def adopt_store(store_path: str, checkpoint_dir: str) -> None:
         return  # nothing committed yet — first fold stamps ownership
     meta = read_meta(store_path, cur)
     meta["token"] = checkpoint_identity(checkpoint_dir)
-    p = _meta_path(store_path, cur)
-    tmp = p + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, p)
+    write_atomic(_meta_path(store_path, cur), json.dumps(meta))
 
 
 def current_version(store_path: str) -> int | None:
@@ -292,22 +311,12 @@ def commit_version(
     atomic rename (meta before pointer: a crash between the two leaves
     the old version authoritative and the new directory inert)."""
     os.makedirs(os.path.join(store_path, f"v{version}"), exist_ok=True)
-    tmp_m = _meta_path(store_path, version) + ".tmp"
-    with open(tmp_m, "w") as f:
-        json.dump(
-            {
-                "epoch": epoch_id,
-                "prev": prior_version,
-                "last_epoch": last_epoch,
-                "token": token,
-            },
-            f,
-        )
-    os.replace(tmp_m, _meta_path(store_path, version))
-    tmp = _version_file(store_path) + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(str(version))
-    os.replace(tmp, _version_file(store_path))
+    write_atomic(
+        _meta_path(store_path, version),
+        json.dumps({"epoch": epoch_id, "prev": prior_version,
+                    "last_epoch": last_epoch, "token": token}),
+    )
+    write_atomic(_version_file(store_path), str(version))
 
 
 def prune_versions(store_path: str, live: set) -> None:
@@ -326,3 +335,81 @@ def prune_versions(store_path: str, live: set) -> None:
             and int(name[1:]) not in live
         ):
             shutil.rmtree(os.path.join(store_path, name), ignore_errors=True)
+
+
+def drain_into_store(
+    stream: DataFrame,
+    store_path: str,
+    checkpoint_dir: str,
+    fold,
+    timeout_s: float = 300.0,
+) -> None:
+    """Drain ``stream`` (Trigger.AvailableNow) into the store at
+    ``store_path``: every micro-batch goes to ``fold(batch, epoch_id,
+    token)``, where ``token`` is the checkpoint's identity nonce (not
+    its path: a recreated checkpoint at the same location must read as
+    a FOREIGN stream, ADVICE r9)."""
+    os.makedirs(store_path, exist_ok=True)
+    token = checkpoint_identity(checkpoint_dir)
+    run_available_now(
+        stream.writeStream.foreachBatch(lambda b, e: fold(b, e, token)),
+        checkpoint_dir,
+        timeout_s,
+    )
+
+
+def read_committed(
+    spark: SparkSession, store_path: str, schema: str
+) -> DataFrame:
+    """The single-directory state at the committed version; empty
+    before the first fold."""
+    ver = current_version(store_path)
+    if ver is None:
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(
+        os.path.join(store_path, f"v{ver}")
+    )
+
+
+def fold_mergeable(
+    delta: DataFrame,
+    epoch_id: int,
+    store_path: str,
+    schema: str,
+    keys: list[str],
+    aggs: list[Column],
+    token: str | None = None,
+) -> None:
+    """Fold one micro-batch's ``delta`` into a store whose state is
+    exactly mergeable: the next version is the prior state unioned
+    with the delta and re-aggregated by ``keys`` with ``aggs`` (SUM
+    for counts, OR for bitmaps — any split of the stream into batches
+    yields the same state). Epoch-keyed through ``plan_fold``: a
+    replayed epoch overwrites its own version from the same prior."""
+    version, prior, _meta = plan_fold(store_path, epoch_id, token)
+    merged = delta
+    if prior is not None:
+        merged = (
+            delta.sparkSession.read.schema(schema)
+            .parquet(os.path.join(store_path, f"v{prior}"))
+            .unionByName(delta)
+            .groupBy(*keys)
+            .agg(*aggs)
+        )
+    merged.write.mode("overwrite").parquet(
+        os.path.join(store_path, f"v{version}")
+    )
+    commit_version(store_path, version, int(epoch_id), prior,
+                   int(epoch_id), token=token)
+
+
+def run_concurrently(fns: list) -> list:
+    """Run independent driver-side jobs (writes to disjoint output
+    directories) from a thread pool so one job's straggler tail
+    back-fills with the others' tasks (guide §2.6), and return their
+    results in order. Returns only after every job completes, so a
+    commit that follows still lands after all of its writes."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(max_workers=len(fns)) as pool:
+        return [f.result() for f in [pool.submit(fn) for fn in fns]]

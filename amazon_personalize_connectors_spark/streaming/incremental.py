@@ -23,7 +23,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 
 def incremental_file_source(
@@ -46,25 +46,32 @@ def incremental_file_source(
 
 
 def run_available_now(
-    stream_df: DataFrame,
+    writer: DataStreamWriter,
     checkpoint_dir: str,
-    batch_fn: Callable[[DataFrame, int], None],
-    query_name: str = "apc-incremental",
     timeout_s: float = 300.0,
 ) -> StreamingQuery:
-    """Drain all currently-available input through ``batch_fn`` and
-    stop — the bookmark-enabled batch-job shape (T1). ``batch_fn``
-    receives each micro-batch as a plain DataFrame plus the batch id
-    (use the id for idempotent sinks: same id ⇒ same data on retry).
-    """
+    """The package's one drain: start ``writer`` (a configured
+    ``DataStreamWriter`` — foreachBatch body, sink format, output
+    mode) on ``checkpoint_dir`` with Trigger.AvailableNow, wait for it
+    to process everything available at start, and return the stopped
+    query (its ``recentProgress`` and ``exception()`` stay readable) —
+    the bookmark-enabled batch-job shape (T1). A drain still running
+    after ``timeout_s`` raises TimeoutError; a query still active on
+    the way out (timeout, failure, interrupt) is always stopped."""
     query = (
-        stream_df.writeStream.queryName(query_name)
-        .foreachBatch(batch_fn)
-        .option("checkpointLocation", checkpoint_dir)
+        writer.option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
     )
-    query.awaitTermination(timeout_s)
+    try:
+        if not query.awaitTermination(timeout_s):
+            raise TimeoutError(
+                f"AvailableNow drain on {checkpoint_dir!r} still running "
+                f"after {timeout_s}s"
+            )
+    finally:
+        if query.isActive:
+            query.stop()
     return query
 
 
@@ -82,13 +89,15 @@ def incremental_pipeline_run(
     operators — they are all plain DataFrame → DataFrame), deliver
     each micro-batch through ``sink``. Running it twice without new
     input is a no-op (the T1 idempotence the reference gets from
-    bookmarks; tested in tests/test_streaming.py)."""
+    bookmarks; tested in tests/test_delivery.py)."""
     source = incremental_file_source(spark, input_path, schema, **source_opts)
 
     def batch_fn(batch_df: DataFrame, batch_id: int) -> None:
         sink(process(batch_df), batch_id)
 
-    return run_available_now(source, checkpoint_dir, batch_fn)
+    return run_available_now(
+        source.writeStream.foreachBatch(batch_fn), checkpoint_dir
+    )
 
 
 def incremental_content_ingest(
@@ -128,4 +137,6 @@ def incremental_content_ingest(
         finally:
             fresh.unpersist()
 
-    return run_available_now(stream, checkpoint_dir, batch_fn)
+    return run_available_now(
+        stream.writeStream.foreachBatch(batch_fn), checkpoint_dir
+    )

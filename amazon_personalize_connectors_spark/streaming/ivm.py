@@ -13,19 +13,19 @@ are delta-sized joins against the accumulated opposite-side state,
 and their partial aggregates merge into the rollup by exact bigint
 addition.
 
-Storage discipline (the epoch-keyed scheme the grid monitors now
-share via streaming/epoch_store.py):
-versions are keyed by the **foreachBatch epoch id**, which Spark
-holds stable across retries of the same micro-batch. Version dir
-``v{e}`` holds this epoch's side deltas (``a_delta``/``b_delta`` —
-append cost ∝ the batch, never a state rewrite) plus the full new
-``rollup`` (∝ groups — small by construction). A retried epoch reads
-only versions < e (all immutable) and OVERWRITES its own dir, so the
+Storage discipline: the shared epoch-keyed version chain
+(streaming/epoch_store.py). Version dir ``v{n}`` holds one epoch's
+side deltas (``a_delta``/``b_delta`` — append cost ∝ the batch, never
+a state rewrite) plus the full new ``rollup`` (∝ groups — small by
+construction). ``plan_fold`` keys each fold on the foreachBatch epoch
+id, which Spark holds stable across retries: a retried epoch re-reads
+the same immutable prior chain and OVERWRITES its own dir, so the
 fold is idempotent even if the previous attempt had already flipped
-the pointer — the commit order (data dirs, then ``_VERSION`` via
-rename) never exposes a half-written version. Accumulated side state
-is the union of the per-epoch delta dirs; long-running monitors
-should compact them periodically (the ``model_refresh.compact_store``
+the pointer; a stale epoch or a foreign checkpoint is refused. The
+commit order (data dirs, then meta, then ``_VERSION`` via rename)
+never exposes a half-written version. Accumulated side state is the
+union of the per-epoch delta dirs; long-running monitors should
+compact them periodically (the ``model_refresh.compact_store``
 precedent) — the LAW is unaffected by when compaction runs.
 """
 
@@ -39,12 +39,12 @@ from pyspark.sql import functions as F
 from amazon_personalize_connectors_spark.operators.cdc import (
     incremental_join_rollup,
 )
-from amazon_personalize_connectors_spark.streaming.cdc_sink import (
-    _version_file,
-)
 from amazon_personalize_connectors_spark.streaming.epoch_store import (
-    checkpoint_identity,
+    commit_version,
     current_version as _current_version,
+    drain_into_store,
+    plan_fold,
+    run_concurrently,
 )
 
 _SCHEMA_A = "k long, grp string"
@@ -53,15 +53,17 @@ _SCHEMA_R = "grp string, sum_v long, n_rows long"
 
 
 def _read_required(
-    spark: SparkSession, schema: str, paths: list[str], what: str
+    spark: SparkSession, store_path: str, versions: list[int], what: str,
+    schema: str,
 ) -> DataFrame:
-    """Union of version-dir inputs that must ALL exist: the fold's
-    correctness depends on complete prior state, so a missing dir is
-    an error (pruned store, foreign store, partial copy), never a
+    """Union of the ``what`` subdirs of ``versions``, which must ALL
+    exist: the fold's correctness depends on complete prior state, so
+    a missing dir is an error (pruned store, foreign store, partial copy), never a
     silent empty frame (code-review r9 — the old exists-filter made a
     pruned delta dir silently undercount every later rollup)."""
-    if not paths:
+    if not versions:
         return spark.createDataFrame([], schema)
+    paths = [os.path.join(store_path, f"v{i}", what) for i in versions]
     missing = [p for p in paths if not os.path.exists(p)]
     if missing:
         raise ValueError(
@@ -73,9 +75,6 @@ def _read_required(
     return spark.read.schema(schema).parquet(*paths)
 
 
-_TOKEN_FILE = "_TOKEN"
-
-
 def apply_ivm_batch(
     batch: DataFrame,
     epoch_id: int,
@@ -84,38 +83,13 @@ def apply_ivm_batch(
 ) -> None:
     """foreachBatch body: fold one tagged micro-batch (columns
     ``side`` 'A'|'B', ``key``, ``grp``, ``val``) into the rollup
-    store at ``store_path`` under the delta rule."""
+    store at ``store_path`` under the delta rule. Epoch-keyed through
+    ``epoch_store.plan_fold`` (replays overwrite their own version,
+    stale or foreign epochs are refused)."""
     spark = batch.sparkSession
     e = int(epoch_id)
-    cur = _current_version(store_path)
-    token_path = os.path.join(store_path, _TOKEN_FILE)
-    if cur is not None and checkpoint_token is not None:
-        stored = (
-            open(token_path).read().strip()
-            if os.path.exists(token_path)
-            else None
-        )
-        if stored is not None and stored != checkpoint_token:
-            raise ValueError(
-                f"stream checkpoint {checkpoint_token!r} does not own "
-                f"the ivm store at {store_path!r} (committed by "
-                f"{stored!r}): a fresh or foreign checkpoint re-delivers "
-                f"epochs whose data differs from the originals. Use a "
-                f"new store path."
-            )
-    if cur is not None and e < cur:
-        # within one checkpoint Spark never replays an epoch behind the
-        # committed one; seeing it means a FRESH checkpoint (epochs
-        # restarting at 0) was pointed at this store — folding would
-        # overwrite v{e}'s immutable deltas with different data while
-        # leaving the rollup built from the originals (silent reset)
-        raise ValueError(
-            f"epoch {e} is behind the store's committed epoch {cur} "
-            f"(store {store_path!r}): a fresh streaming checkpoint "
-            f"cannot be pointed at an existing ivm store — use a new "
-            f"store path when restarting the stream from scratch."
-        )
-    vdir = os.path.join(store_path, f"v{e}")
+    version, prior, _meta = plan_fold(store_path, e, checkpoint_token)
+    vdir = os.path.join(store_path, f"v{version}")
     da = batch.where(F.col("side") == "A").select(
         F.col("key").cast("long").alias("k"), "grp"
     )
@@ -123,63 +97,30 @@ def apply_ivm_batch(
         F.col("key").cast("long").alias("k"),
         F.col("val").cast("long").alias("val"),
     )
-    prior = list(range(e))
-    a_state = _read_required(
-        spark, _SCHEMA_A,
-        [os.path.join(store_path, f"v{i}", "a_delta") for i in prior],
-        "a_delta",
-    )
-    b_state = _read_required(
-        spark, _SCHEMA_B,
-        [os.path.join(store_path, f"v{i}", "b_delta") for i in prior],
-        "b_delta",
-    )
-    rollup = _read_required(
-        spark, _SCHEMA_R,
-        [os.path.join(store_path, f"v{e - 1}", "rollup")] if e > 0 else [],
-        "rollup",
-    )
+    # every fold version is a chain link: side state is the union of
+    # the deltas of v0..v{prior}, the rollup lives in v{prior}
+    chain = [] if prior is None else list(range(prior + 1))
     new_rollup = incremental_join_rollup(
-        rollup, a_state, da, b_state, db,
+        _read_required(spark, store_path, chain[-1:], "rollup", _SCHEMA_R),
+        _read_required(spark, store_path, chain, "a_delta", _SCHEMA_A), da,
+        _read_required(spark, store_path, chain, "b_delta", _SCHEMA_B), db,
         a_key="k", b_key="k", group_col="grp", value_col="val",
     ).select(
         "grp",
         F.col("sum_v").cast("long").alias("sum_v"),
         F.col("n_rows").cast("long").alias("n_rows"),
     )
-    # materialize BEFORE overwriting: every input version dir is
-    # immutable (< e), so only this epoch's own (retry-overwritable)
-    # dir is ever written. The three writes are independent jobs over
-    # disjoint output directories (the rollup reads only PRIOR
-    # version dirs, never this epoch's deltas) — overlap them from a
-    # driver thread pool (guide §2.6, r13; the epoch commit below
-    # still lands only after all three complete).
-    from concurrent.futures import ThreadPoolExecutor
-
-    writes = (
-        lambda: da.write.mode("overwrite").parquet(
-            os.path.join(vdir, "a_delta")
-        ),
-        lambda: db.write.mode("overwrite").parquet(
-            os.path.join(vdir, "b_delta")
-        ),
-        lambda: new_rollup.write.mode("overwrite").parquet(
-            os.path.join(vdir, "rollup")
-        ),
-    )
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        for done in [pool.submit(w) for w in writes]:
-            done.result()
-    if checkpoint_token is not None and not os.path.exists(token_path):
-        tmp_t = token_path + ".tmp"
-        with open(tmp_t, "w") as f:
-            f.write(checkpoint_token)
-        os.replace(tmp_t, token_path)
-    if cur is None or e > cur:
-        tmp = _version_file(store_path) + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(e))
-        os.replace(tmp, _version_file(store_path))
+    # every input version dir is immutable (in the chain below
+    # ``version``), so only this epoch's own (retry-overwritable) dir
+    # is ever written; the three writes are independent jobs over
+    # disjoint output directories, overlapped, and the commit lands
+    # only after all three complete.
+    run_concurrently([
+        lambda: da.write.mode("overwrite").parquet(f"{vdir}/a_delta"),
+        lambda: db.write.mode("overwrite").parquet(f"{vdir}/b_delta"),
+        lambda: new_rollup.write.mode("overwrite").parquet(f"{vdir}/rollup"),
+    ])
+    commit_version(store_path, version, e, prior, e, token=checkpoint_token)
 
 
 def maintain_from_stream(
@@ -190,26 +131,13 @@ def maintain_from_stream(
 ) -> None:
     """Drain a tagged stream (Trigger.AvailableNow), maintaining the
     join rollup store one micro-batch at a time."""
-    os.makedirs(store_path, exist_ok=True)
-    # per-checkpoint nonce, not the path: a recreated checkpoint
-    # at the same location must read as a FOREIGN stream (ADVICE r9)
-    _stream_token = checkpoint_identity(checkpoint_dir)
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda b, e: apply_ivm_batch(
-                b, e, store_path, checkpoint_token=_stream_token
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain_into_store(
+        stream, store_path, checkpoint_dir,
+        lambda b, e, token: apply_ivm_batch(
+            b, e, store_path, checkpoint_token=token
+        ),
+        timeout_s,
     )
-    try:
-        if not q.awaitTermination(timeout_s):
-            raise TimeoutError(f"ivm maintainer still running after {timeout_s}s")
-    finally:
-        if q.isActive:
-            q.stop()
 
 
 def rollup_from_store(spark: SparkSession, store_path: str) -> DataFrame:

@@ -52,12 +52,14 @@ from amazon_personalize_connectors_spark.operators.recsys import (
     covisitation_increments,
 )
 from amazon_personalize_connectors_spark.streaming.epoch_store import (
-    checkpoint_identity,
     commit_version,
     current_version as _current_version,
+    drain_into_store,
     plan_fold,
     prune_versions as _prune_versions,
     read_meta,
+    run_concurrently,
+    write_atomic,
 )
 
 _PAIR_SCHEMA = "item long, rec_item long, n_common long"
@@ -177,8 +179,6 @@ def apply_interactions_batch(
     # thread pool (guide §2.6); the manifest is written only after
     # both complete, so the pointer-flip commit discipline is
     # unchanged (r12 wave 7).
-    from concurrent.futures import ThreadPoolExecutor
-
     def _write_pairs() -> None:
         current = _read_buckets(
             spark,
@@ -205,10 +205,9 @@ def apply_interactions_batch(
             os.path.join(out, "items")
         )
 
-    writes = ([_write_pairs] if touched_pair_buckets else []) + [_write_items]
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        for done in [pool.submit(w) for w in writes]:
-            done.result()
+    run_concurrently(
+        ([_write_pairs] if touched_pair_buckets else []) + [_write_items]
+    )
     inc.unpersist()
     batch.unpersist()
     new_man = {
@@ -222,10 +221,7 @@ def apply_interactions_batch(
             **{str(b): version for b in touched_pair_buckets},
         },
     }
-    tmp_man = _manifest_path(store_path, version) + ".tmp"
-    with open(tmp_man, "w") as f:
-        json.dump(new_man, f)
-    os.replace(tmp_man, _manifest_path(store_path, version))
+    write_atomic(_manifest_path(store_path, version), json.dumps(new_man))
     # flip LAST — commits pairs, items, manifest, and epoch meta
     # together; a retry of this epoch re-reads v{prior}'s manifest for
     # BOTH stores and idempotently overwrites v{version}
@@ -243,27 +239,13 @@ def refresh_from_stream(
     """Drain an interaction stream (Trigger.AvailableNow), folding
     every micro-batch into the co-visitation model at ``store_path``.
     ``stream`` columns: (u, i)."""
-    os.makedirs(store_path, exist_ok=True)
-    # per-checkpoint nonce, not the path: a recreated checkpoint
-    # at the same location must read as a FOREIGN stream (ADVICE r9)
-    _stream_token = checkpoint_identity(checkpoint_dir)
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda b, e: apply_interactions_batch(
-                b, e, store_path, n_buckets,
-                checkpoint_token=_stream_token,
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain_into_store(
+        stream, store_path, checkpoint_dir,
+        lambda b, e, token: apply_interactions_batch(
+            b, e, store_path, n_buckets, checkpoint_token=token
+        ),
+        timeout_s,
     )
-    try:
-        if not q.awaitTermination(timeout_s):
-            raise TimeoutError(f"model refresh still running after {timeout_s}s")
-    finally:
-        if q.isActive:
-            q.stop()
 
 
 def serve_topk(
@@ -345,10 +327,7 @@ def compact_store(spark: SparkSession, store_path: str) -> None:
         "items": {b: version for b in man["items"]},
         "pairs": new_pairs,
     }
-    tmp_man = _manifest_path(store_path, version) + ".tmp"
-    with open(tmp_man, "w") as f:
-        json.dump(new_man, f)
-    os.replace(tmp_man, _manifest_path(store_path, version))
+    write_atomic(_manifest_path(store_path, version), json.dumps(new_man))
     # compaction is a non-epoch writer: version chains past the epoch
     # counter (epoch None) while carrying last_epoch forward so the
     # stream's next fold still validates against it

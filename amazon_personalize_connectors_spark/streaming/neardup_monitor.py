@@ -43,13 +43,14 @@ from amazon_personalize_connectors_spark.functions.dedup import (
     minhash_band_table,
 )
 from amazon_personalize_connectors_spark.streaming.epoch_store import (
-    checkpoint_identity,
     _meta_path,
     commit_version,
     current_version as _current_version,
+    drain_into_store,
     plan_fold,
     prune_versions as _prune_versions,
     read_meta,
+    run_concurrently,
 )
 
 _BANDS_SCHEMA = "id long, band int, bucket string"
@@ -162,22 +163,12 @@ def apply_neardup_batch(
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_shared_bands"))
     )
     # the two writes are independent jobs over disjoint output
-    # directories off the eagerly-checkpointed band table — overlap
-    # them from a driver thread pool (guide §2.6, r13); the commit
-    # below still lands only after both complete.
-    from concurrent.futures import ThreadPoolExecutor
-
-    writes = (
-        lambda: pairs.write.mode("overwrite").parquet(
-            os.path.join(vdir, "pairs")
-        ),
-        lambda: new_bands.write.mode("overwrite").parquet(
-            os.path.join(vdir, "bands")
-        ),
-    )
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        for done in [pool.submit(w) for w in writes]:
-            done.result()
+    # directories off the eagerly-checkpointed band table — overlapped
+    # (r13); the commit below still lands only after both complete.
+    run_concurrently([
+        lambda: pairs.write.mode("overwrite").parquet(f"{vdir}/pairs"),
+        lambda: new_bands.write.mode("overwrite").parquet(f"{vdir}/bands"),
+    ])
     commit_version(store_path, version, e, prior, e, token=checkpoint_token)
 
 
@@ -190,29 +181,13 @@ def maintain_from_stream(
 ) -> None:
     """Drain a document stream (Trigger.AvailableNow), maintaining the
     near-dup store one micro-batch at a time."""
-    os.makedirs(store_path, exist_ok=True)
-    # per-checkpoint nonce, not the path: a recreated checkpoint
-    # at the same location must read as a FOREIGN stream (ADVICE r9)
-    _stream_token = checkpoint_identity(checkpoint_dir)
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda b, e: apply_neardup_batch(
-                b, e, store_path, checkpoint_token=_stream_token,
-                **band_kwargs
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain_into_store(
+        stream, store_path, checkpoint_dir,
+        lambda b, e, token: apply_neardup_batch(
+            b, e, store_path, checkpoint_token=token, **band_kwargs
+        ),
+        timeout_s,
     )
-    try:
-        if not q.awaitTermination(timeout_s):
-            raise TimeoutError(
-                f"near-dup monitor still running after {timeout_s}s"
-            )
-    finally:
-        if q.isActive:
-            q.stop()
 
 
 def candidates_from_store(

@@ -27,8 +27,6 @@ the same two pillars:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -36,24 +34,22 @@ from amazon_personalize_connectors_spark.operators.evaluation import (
     auc_from_grid,
 )
 from amazon_personalize_connectors_spark.streaming.epoch_store import (
-    checkpoint_identity,
-    commit_version,
-    current_version as _current_version,
-    plan_fold,
+    drain_into_store,
+    fold_mergeable,
+    read_committed,
 )
 
 _GRID_SCHEMA = "g long, _s long, _pos long, _neg long"
 
 
+def _sum_pos_neg() -> list:
+    return [F.sum(c).cast("long").alias(c) for c in ("_pos", "_neg")]
+
+
 def read_score_grid(spark: SparkSession, store_path: str) -> DataFrame:
     """Accumulated (g, _s, _pos, _neg) grid at the committed version;
     empty before the first batch."""
-    ver = _current_version(store_path)
-    if ver is None:
-        return spark.createDataFrame([], _GRID_SCHEMA)
-    return spark.read.schema(_GRID_SCHEMA).parquet(
-        os.path.join(store_path, f"v{ver}")
-    )
+    return read_committed(spark, store_path, _GRID_SCHEMA)
 
 
 def apply_score_batch(
@@ -69,7 +65,6 @@ def apply_score_batch(
     into the grid store. ``epoch_id`` keys the fold
     (epoch_store.plan_fold): a replayed epoch overwrites its own
     version from the same prior, even after the pointer flip."""
-    spark = batch.sparkSession
     delta = batch.groupBy(
         F.col(group_col).cast("long").alias("g"),
         F.col(score_col).cast("long").alias("_s"),
@@ -77,26 +72,8 @@ def apply_score_batch(
         F.sum(F.col(label_col).cast("long")).alias("_pos"),
         F.sum(F.lit(1) - F.col(label_col).cast("long")).alias("_neg"),
     )
-    version, prior, _meta = plan_fold(store_path, epoch_id, checkpoint_token)
-    if prior is None:
-        merged = delta
-    else:
-        current = spark.read.schema(_GRID_SCHEMA).parquet(
-            os.path.join(store_path, f"v{prior}")
-        )
-        merged = (
-            current.unionByName(delta)
-            .groupBy("g", "_s")
-            .agg(
-                F.sum("_pos").cast("long").alias("_pos"),
-                F.sum("_neg").cast("long").alias("_neg"),
-            )
-        )
-    merged.write.mode("overwrite").parquet(
-        os.path.join(store_path, f"v{version}")
-    )
-    commit_version(store_path, version, int(epoch_id), prior,
-                   int(epoch_id), token=checkpoint_token)
+    fold_mergeable(delta, epoch_id, store_path, _GRID_SCHEMA, ["g", "_s"],
+                   _sum_pos_neg(), checkpoint_token)
 
 
 def monitor_scores_from_stream(
@@ -111,27 +88,14 @@ def monitor_scores_from_stream(
     """Drain a stream (Trigger.AvailableNow), folding every
     micro-batch's (group, score) counts into the grid at
     ``store_path``."""
-    os.makedirs(store_path, exist_ok=True)
-    # per-checkpoint nonce, not the path: a recreated checkpoint
-    # at the same location must read as a FOREIGN stream (ADVICE r9)
-    _stream_token = checkpoint_identity(checkpoint_dir)
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda b, e: apply_score_batch(
-                b, e, store_path, group_col, score_col, label_col,
-                checkpoint_token=_stream_token,
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain_into_store(
+        stream, store_path, checkpoint_dir,
+        lambda b, e, token: apply_score_batch(
+            b, e, store_path, group_col, score_col, label_col,
+            checkpoint_token=token,
+        ),
+        timeout_s,
     )
-    try:
-        if not q.awaitTermination(timeout_s):
-            raise TimeoutError(f"score monitor still running after {timeout_s}s")
-    finally:
-        if q.isActive:
-            q.stop()
 
 
 def auc_from_store(spark: SparkSession, store_path: str) -> DataFrame:
@@ -155,12 +119,5 @@ def calibration_from_store(
         bins_from_grid,
     )
 
-    grid = (
-        read_score_grid(spark, store_path)
-        .groupBy("_s")
-        .agg(
-            F.sum("_pos").cast("long").alias("_pos"),
-            F.sum("_neg").cast("long").alias("_neg"),
-        )
-    )
+    grid = read_score_grid(spark, store_path).groupBy("_s").agg(*_sum_pos_neg())
     return bins_from_grid(grid, bin_width)

@@ -29,6 +29,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from amazon_personalize_connectors_spark.streaming.incremental import (
+    run_available_now,
+)
+
 SESSION_SCHEMA = T.StructType(
     [
         T.StructField("user_id", T.LongType()),
@@ -294,7 +298,7 @@ def run_stream_to_memory(
     # drain, restore after. Physical dial only: per-key emits are
     # identical at any partition count.
     _SP = "spark.sql.shuffle.partitions"
-    saved_sp = None
+    acquired, saved_sp = False, None
     if state_partitions is not None:
         # fail loudly on overlap rather than silently re-planning a
         # concurrent drain's queries at this stream's partition count
@@ -306,29 +310,26 @@ def run_stream_to_memory(
                 "mutation is session-global and must not overlap; "
                 "serialize the drains (or pass state_partitions=None)."
             )
-        saved_sp = spark.conf.get(_SP)
-        spark.conf.set(_SP, str(state_partitions))
+        acquired = True
     try:
-        q = (
+        # inside the try: a conf call that throws must not leak the lock
+        if acquired:
+            saved_sp = spark.conf.get(_SP)
+            spark.conf.set(_SP, str(state_partitions))
+        run_available_now(
             transformed.writeStream.format("memory")
             .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .outputMode(output_mode),
+            ckpt,
+            timeout_s,
         )
-        try:
-            if not q.awaitTermination(timeout_s):
-                raise TimeoutError(
-                    f"stream {name} still running after {timeout_s}s"
-                )
-        finally:
-            if q.isActive:
-                q.stop()
     finally:
-        if saved_sp is not None:
-            spark.conf.set(_SP, saved_sp)
-            _DRAIN_CONF_LOCK.release()
+        if acquired:
+            try:
+                if saved_sp is not None:
+                    spark.conf.set(_SP, saved_sp)
+            finally:
+                _DRAIN_CONF_LOCK.release()
     return spark.table(name)
 
 
