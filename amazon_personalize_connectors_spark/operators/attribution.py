@@ -8,12 +8,10 @@ user (many-to-many bridge, README.md:179-187).
 Scale notes: the user-item mapping grows with the interaction data
 (many-to-many bridge), NOT with the catalog — so it is usually *not*
 broadcastable, and forcing a broadcast makes every task rebuild a
-multi-hundred-thousand-entry hash map. Default is to let AQE pick the
-strategy from runtime sizes (it will broadcast genuinely small
-mappings on its own, and skew-split large ones); pass
-``broadcast_mapping=True`` only when the caller knows the mapping is
-dimension-sized. At 100 TB, pre-bucketing both sides on the item key
-makes this a co-located join with no shuffle of the fact side.
+multi-hundred-thousand-entry hash map. AQE picks the strategy from
+runtime sizes (it broadcasts genuinely small mappings on its own, and
+skew-splits large ones). At 100 TB, pre-bucketing both sides on the
+item key makes this a co-located join with no shuffle of the fact side.
 """
 
 from __future__ import annotations
@@ -23,20 +21,14 @@ from pyspark.sql import functions as F
 
 
 def attribute_users(
-    recs: DataFrame,
-    mapping: DataFrame,
-    recs_item_col: str = "input.itemId",
-    user_col: str = "USER_ID",
-    item_col: str = "ITEM_ID",
-    broadcast_mapping: bool = False,
+    recs: DataFrame, mapping: DataFrame, recs_item_col: str = "input.itemId"
 ) -> DataFrame:
-    """Inner-join recs to the bridge on ``<recs_item_col> = ITEM_ID``
-    and stamp each row with the mapped ``userId`` (ri:159-172)."""
+    """Inner-join recs to the USER_ID,ITEM_ID bridge on
+    ``<recs_item_col> = ITEM_ID`` and stamp each row with the mapped
+    ``userId`` (ri:159-172)."""
     mapping = mapping.select(
-        F.col(user_col).alias("userId"), F.col(item_col).alias("__join_item_id")
+        F.col("USER_ID").alias("userId"), F.col("ITEM_ID").alias("__join_item_id")
     )
-    if broadcast_mapping:
-        mapping = F.broadcast(mapping)
     return recs.join(
         mapping, recs[recs_item_col] == mapping["__join_item_id"], "inner"
     ).drop("__join_item_id")

@@ -20,7 +20,7 @@ the `renest_window_legacy` parity query). ``collect_list`` drops nulls
 in both forms, so empty/null rec lists produce ``[]`` — matching W1
 semantics (SURVEY.md §7.4).
 
-Scale notes: metadata is a broadcastable dimension (default on). The
+Scale notes: metadata is a catalog-sized dimension, always broadcast. The
 single aggregate keys on the query entity — the natural partitioning of
 the downstream sink — so no further shuffle is needed to write.
 """
@@ -98,7 +98,6 @@ def decorate_items(
     metadata: DataFrame | None,
     key_cols: Sequence[tuple[str, str]],
     metadata_fields: Sequence[str] | None = None,
-    broadcast_metadata: bool = True,
     legacy_window_mode: bool = False,
     max_recommendations: int | None = None,
 ) -> DataFrame:
@@ -128,10 +127,8 @@ def decorate_items(
     if metadata is not None:
         if metadata_fields is None:
             metadata_fields = [c for c in metadata.columns if c != "id"]
-        if broadcast_metadata:
-            metadata = F.broadcast(metadata)
         exploded = exploded.join(
-            metadata.alias("meta"),
+            F.broadcast(metadata).alias("meta"),
             exploded["recItemId"] == F.col("meta.id"),
             "left_outer",
         )

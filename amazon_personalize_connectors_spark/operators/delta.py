@@ -84,15 +84,6 @@ def _digest_cols(df: DataFrame) -> tuple[Column, Column]:
     return F.xxhash64(*cols), F.hash(*cols)
 
 
-def _record_digest(df: DataFrame) -> F.Column:
-    """96-bit record digest: xxhash64 + murmur3 over the columns in
-    name order. Two independent hash families push the collision
-    birthday bound past 10^12 records; swap in sha2(to_json(...), 256)
-    when a cryptographic digest is required."""
-    h1, h2 = _digest_cols(df)
-    return F.struct(h1.alias("h1"), h2.alias("h2"))
-
-
 def record_digests(df: DataFrame) -> DataFrame:
     """Narrow (h1, h2) digest frame of ``df`` — 12 bytes per record.
     This is what the bucketed state store persists: digests computed
@@ -103,31 +94,18 @@ def record_digests(df: DataFrame) -> DataFrame:
 
 
 def delta_check_anti_hash(current: DataFrame, state: DataFrame | None) -> DataFrame:
-    """Scalable delta: left-anti join on a record digest. State scans
-    prune to the digest column; the shuffle key is uniform. Used when
-    the state snapshot is too large for subtract to be sensible.
+    """Scalable delta: left-anti join on a 96-bit record digest. State
+    scans prune to the digest columns; the shuffle key is uniform. Used
+    when the state snapshot is too large for subtract to be sensible.
 
-    Physical strategy: compute the digest FIRST, then both the dedup
-    (``dropDuplicates`` on the digest — equal digests ⇒ equal rows,
-    the same assumption the anti-join itself makes) and the anti-join
-    key on the SAME narrow column. The current side then shuffles once
-    on 12 bytes of key instead of twice (once on every column for the
-    row-dedup, once more for the join), and the join reuses the
-    aggregate's hash partitioning — `.explain` shows a single Exchange
-    above the current branch."""
-    cur = current.withColumn("__digest", _record_digest(current))
-    deduped = cur.dropDuplicates(["__digest"])
-    if state is None:
-        return deduped.drop("__digest")
-    # Conform state to current's exact schema BEFORE digesting (same as
-    # delta_check): a snapshot re-read from JSONL comes back with
-    # alphabetized nested struct fields and re-inferred types, which
-    # would silently change every digest and resync the full dataset.
-    state = conform_to_schema(state, current)
-    state_digests = state.select(_record_digest(state).alias("__digest")).distinct()
-    return (
-        deduped.join(state_digests, "__digest", "left_anti").drop("__digest")
-    )
+    State is conformed to current's exact schema BEFORE digesting (same
+    as delta_check): a snapshot re-read from JSONL comes back with
+    alphabetized nested struct fields and re-inferred types, which
+    would silently change every digest and resync the full dataset.
+    The digest anti-join itself is ``delta_check_against_digests``."""
+    if state is not None:
+        state = record_digests(conform_to_schema(state, current))
+    return delta_check_against_digests(current, state)
 
 
 def with_record_digests(

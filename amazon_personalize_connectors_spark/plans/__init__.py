@@ -1,11 +1,9 @@
 from amazon_personalize_connectors_spark.plans.pipeline import (
     related_items_pipeline,
-    run_connector_pipelines,
     user_personalization_pipeline,
 )
 
 __all__ = [
     "related_items_pipeline",
-    "run_connector_pipelines",
     "user_personalization_pipeline",
 ]

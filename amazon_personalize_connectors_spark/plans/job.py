@@ -21,6 +21,7 @@ pre-delta decorated frame becomes the new state snapshot.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import partial
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -29,14 +30,19 @@ from amazon_personalize_connectors_spark.config import PipelineConfig
 from amazon_personalize_connectors_spark.operators.delta import (
     append_state_digests,
     read_state_digests,
+    write_sync_state,
 )
 from amazon_personalize_connectors_spark.operators.metrics import observe_counts
-from amazon_personalize_connectors_spark.plans.pipeline import run_connector_pipelines
+from amazon_personalize_connectors_spark.plans.pipeline import (
+    related_items_pipeline,
+    user_personalization_pipeline,
+)
 from amazon_personalize_connectors_spark.sinks.jsonl import (
     write_connector_output,
     write_errors,
 )
 from amazon_personalize_connectors_spark.sources.readers import (
+    input_key,
     read_batch_inference,
     read_item_metadata,
     read_last_sync_state,
@@ -60,7 +66,6 @@ def run_job(
     job_type: str,
     job_root: str,
     config: PipelineConfig,
-    write_state: bool = True,
     state_format: str = "json",
 ) -> JobReport:
     """Execute one batch ETL run end-to-end. Returns the paths written
@@ -74,6 +79,7 @@ def run_job(
       digest store under ``output/<connector>/state_digests``; each run
       APPENDS only the delivered delta's digests (cost ∝ delta size).
     """
+    input_key(job_type)  # unknown job types fail before any read
     if state_format not in ("json", "digest"):
         raise ValueError(f"unknown state_format: {state_format!r}")
     digest_mode = state_format == "digest"
@@ -85,38 +91,37 @@ def run_job(
     batch_raw = read_batch_inference(
         spark, f"{job_root}/batch_inference", job_type
     ).cache()
-    # A2: the corrupt-row count rides along with the first connector
-    # write via observe() — no separate count() job over the scan.
+    # A2: the corrupt- and error-row counts ride along with the first
+    # connector write via observe() — no separate count() job over the
+    # scan. The observation sits above the filters, so it sees every row.
     observed_raw, raw_obs = observe_counts(
         batch_raw,
         name="apc_raw_scan",
         n_corrupt=F.col("_corrupt_record").isNotNull(),
+        n_errors=F.col("_corrupt_record").isNull() & F.col("error").isNotNull(),
     )
     batch, corrupt = split_corrupt(observed_raw, cache=False)
 
-    mapping = None
+    metadata = read_item_metadata(spark, f"{job_root}/item_metadata")
     if job_type == "related_items":
         mapping = read_user_item_mapping(spark, f"{job_root}/user_item_mapping")
-    metadata = read_item_metadata(spark, f"{job_root}/item_metadata")
+        pipeline = partial(related_items_pipeline, batch, mapping)
+    else:
+        pipeline = partial(user_personalization_pipeline, batch)
 
-    states = {}
+    read_state = read_state_digests if digest_mode else read_last_sync_state
+    state_dir = "state_digests" if digest_mode else "state"
+    errors = None
     for connector in config.connectors:
-        if config.delta_enabled(connector):
-            if digest_mode:
-                states[connector.name] = read_state_digests(
-                    spark, f"{job_root}/output/{connector.name}/state_digests"
-                )
-            else:
-                states[connector.name] = read_last_sync_state(
-                    spark, f"{job_root}/output/{connector.name}/state"
-                )
-
-    results = run_connector_pipelines(
-        job_type, batch, config, mapping=mapping, metadata=metadata,
-        states=states, cache_source=False, state_is_digests=digest_mode,
-    )
-
-    for name, res in results.items():
+        name = connector.name
+        delta_on = config.delta_enabled(connector)
+        state_path = f"{job_root}/output/{name}/{state_dir}"
+        state = read_state(spark, state_path) if delta_on else None
+        res = pipeline(
+            metadata, connector, config, state,
+            cache_source=False, state_is_digests=digest_mode,
+        )
+        errors = res.errors  # connector-independent: the same source split
         # A2 fix: the delivered-row count rides along with the sink
         # write via observe() — the join/aggregate lineage runs exactly
         # once per connector instead of once for the write and once
@@ -127,47 +132,31 @@ def run_job(
             observed, f"{job_root}/output", name, config.run_datetime
         )
         report.delivered_rows[name] = int(obs.get["n_rows"])
-        connector = next(c for c in config.connectors if c.name == name)
-        if write_state and digest_mode:
+        if not digest_mode:
+            # K5 — new snapshot is the full pre-delta decorated output
+            write_sync_state(res.pre_delta, state_path)
+            report.state_paths[name] = state_path
+        elif delta_on:
             # K5 at scale — append only the delivered delta's digests.
             # Digest state is only meaningful when the delta check runs:
             # without it delta_unstamped is the FULL output, and
             # appending it every run would grow the store with
             # duplicates instead of deltas.
-            if config.delta_enabled(connector):
-                state_path = f"{job_root}/output/{name}/state_digests"
-                if report.delivered_rows[name] > 0:
-                    append_state_digests(res.delta_unstamped, state_path)
-                report.state_paths[name] = state_path
-        elif write_state:
-            # K5 — new snapshot is the full pre-delta decorated output
-            state_path = f"{job_root}/output/{name}/state"
-            res.pre_delta.write.mode("overwrite").json(state_path)
+            if report.delivered_rows[name] > 0:
+                append_state_digests(res.delta_unstamped, state_path)
             report.state_paths[name] = state_path
 
-    if config.save_batch_inference_errors and results:
-        # the error branch is connector-independent (same source split)
-        any_res = next(iter(results.values()))
-        # cheap limit-1 probe on the cached scan preserves the
-        # reference's nonempty gate; the actual count comes from the
-        # write action's observation, never a separate count() job
-        if any_res.errors.isEmpty():
-            report.n_errors, report.error_path = 0, None
-        else:
-            observed_errors, err_obs = observe_counts(
-                any_res.errors, name="apc_error_rows"
-            )
-            report.error_path = write_errors(
-                observed_errors, f"{job_root}/errors", config.run_datetime,
-                known_nonempty=True,
-            )
-            report.n_errors = int(err_obs.get["n_rows"])
-    if results:
-        # metrics landed during the first connector write
-        report.n_corrupt = int(raw_obs.get["n_corrupt"])
-    else:
+    if errors is None:
         # no connector ran an action, so the observation never fired;
         # the one-off count here is the cold path, not per-connector
         report.n_corrupt = corrupt.count()
+    else:
+        # metrics landed during the first connector write
+        report.n_corrupt = int(raw_obs.get["n_corrupt"])
+        if config.save_batch_inference_errors:
+            report.error_path = write_errors(
+                errors, f"{job_root}/errors", config.run_datetime
+            )
+            report.n_errors = int(raw_obs.get["n_errors"])
     batch_raw.unpersist()
     return report

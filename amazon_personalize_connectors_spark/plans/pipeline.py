@@ -7,6 +7,10 @@ declares the whole query; Catalyst sees scan → split → join → explode →
 decorate → re-nest → delta → stamp as one plan and optimizes across
 operator boundaries (filter pushdown through the joins, broadcast of
 both dimensions, a single shuffle at the re-nest aggregate).
+
+Both job types run one body, ``_connector_pipeline``: split →
+decorate → [attribute] → delta → stamp, attributing only when a
+user-item mapping is given.
 """
 
 from __future__ import annotations
@@ -68,33 +72,13 @@ def related_items_pipeline(
     the same for every attributed user); the oracle-checked flagship
     query pins this equivalence.
     """
-    ok, errors = split_errors(batch_inference, cache=cache_source)
-    per_item = decorate_items(
-        ok,
-        metadata,
-        key_cols=[("input.itemId", "queryItemId")],
-        metadata_fields=connector.item_metadata_fields or None,
-        legacy_window_mode=legacy_window_mode,
-        max_recommendations=connector.max_recommendations,
+    if mapping is None:
+        raise ValueError("related_items requires a user-item mapping")
+    return _connector_pipeline(
+        batch_inference, ("input.itemId", "queryItemId"), mapping, metadata,
+        connector, config, state, legacy_window_mode, cache_source,
+        state_is_digests,
     )
-    decorated = attribute_users(
-        per_item, mapping, recs_item_col="queryItemId"
-    ).select("queryItemId", "userId", "recommendations")
-    delta = _delta_step(decorated, state, connector, config, state_is_digests)
-    stamped = add_job_and_sync_info(
-        delta, config.job_name, config.run_datetime, connector
-    )
-    return PipelineResult(
-        decorated=stamped, pre_delta=decorated, errors=errors, delta_unstamped=delta
-    )
-
-
-def _delta_step(decorated, state, connector, config, state_is_digests):
-    if not config.delta_enabled(connector):
-        return decorated
-    if state_is_digests:
-        return delta_check_against_digests(decorated, state)
-    return delta_check(decorated, state)
 
 
 def user_personalization_pipeline(
@@ -112,52 +96,39 @@ def user_personalization_pipeline(
     ``input.userId → queryUserId``, up:167). Fixes the reference's
     up:180 wrong-window-key crash path by always re-nesting on
     queryUserId."""
+    return _connector_pipeline(
+        batch_inference, ("input.userId", "queryUserId"), None, metadata,
+        connector, config, state, legacy_window_mode, cache_source,
+        state_is_digests,
+    )
+
+
+def _connector_pipeline(
+    batch_inference, key, mapping, metadata, connector, config, state,
+    legacy_window_mode, cache_source, state_is_digests,
+) -> PipelineResult:
+    """split → decorate on ``key`` (source path, output name) →
+    attribute when ``mapping`` is given → delta → stamp."""
     ok, errors = split_errors(batch_inference, cache=cache_source)
     decorated = decorate_items(
         ok,
         metadata,
-        key_cols=[("input.userId", "queryUserId")],
+        key_cols=[key],
         metadata_fields=connector.item_metadata_fields or None,
         legacy_window_mode=legacy_window_mode,
         max_recommendations=connector.max_recommendations,
     )
-    delta = _delta_step(decorated, state, connector, config, state_is_digests)
+    if mapping is not None:
+        decorated = attribute_users(
+            decorated, mapping, recs_item_col=key[1]
+        ).select(key[1], "userId", "recommendations")
+    delta = decorated
+    if config.delta_enabled(connector):
+        check = delta_check_against_digests if state_is_digests else delta_check
+        delta = check(decorated, state)
     stamped = add_job_and_sync_info(
         delta, config.job_name, config.run_datetime, connector
     )
     return PipelineResult(
         decorated=stamped, pre_delta=decorated, errors=errors, delta_unstamped=delta
     )
-
-
-def run_connector_pipelines(
-    job_type: str,
-    batch_inference: DataFrame,
-    config: PipelineConfig,
-    mapping: DataFrame | None = None,
-    metadata: DataFrame | None = None,
-    states: dict[str, DataFrame] | None = None,
-    cache_source: bool = True,
-    state_is_digests: bool = False,
-) -> dict[str, PipelineResult]:
-    """Per-connector loop (ri:237-315): one PipelineResult per connector
-    in the config. ``states`` maps connector name → last-sync frame
-    (full snapshot, or digest frame when ``state_is_digests``)."""
-    results: dict[str, PipelineResult] = {}
-    for connector in config.connectors:
-        state = (states or {}).get(connector.name)
-        if job_type == "related_items":
-            if mapping is None:
-                raise ValueError("related_items requires a user-item mapping")
-            results[connector.name] = related_items_pipeline(
-                batch_inference, mapping, metadata, connector, config, state,
-                cache_source=cache_source, state_is_digests=state_is_digests,
-            )
-        elif job_type == "user_personalization":
-            results[connector.name] = user_personalization_pipeline(
-                batch_inference, metadata, connector, config, state,
-                cache_source=cache_source, state_is_digests=state_is_digests,
-            )
-        else:
-            raise ValueError(f"unknown job type: {job_type!r}")
-    return results

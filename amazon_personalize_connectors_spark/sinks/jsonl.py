@@ -4,19 +4,19 @@ Reference writes to ``output/<connector>/year=YYYY/month=MM/day=DD/
 time=HHMMSS/`` with the partition values encoded in the path string
 (related_items_etl.py:299-315) — one run = one leaf directory,
 Hive-readable. We keep that layout (downstream partition pruning works
-unchanged) and gzip by default like the Lambda half expects
+unchanged) and always gzip, as the Lambda half expects
 (enqueue.py:40-43 is gzip-aware).
 """
 
 from __future__ import annotations
-
-import os
 
 from collections.abc import Sequence
 from datetime import datetime
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from amazon_personalize_connectors_spark.sources.readers import hadoop_path
 
 
 def partitioned_output_path(base: str, connector: str, run_datetime: datetime) -> str:
@@ -27,42 +27,27 @@ def partitioned_output_path(base: str, connector: str, run_datetime: datetime) -
     )
 
 
+def _write_jsonl_gz(df: DataFrame, path: str) -> str:
+    df.write.mode("overwrite").option("compression", "gzip").json(path)
+    return path
+
+
 def write_connector_output(
-    df: DataFrame,
-    base: str,
-    connector: str,
-    run_datetime: datetime,
-    compression: str | None = "gzip",
+    df: DataFrame, base: str, connector: str, run_datetime: datetime
 ) -> str:
     """K1 — per-connector decorated output (ri:299-315)."""
-    path = partitioned_output_path(base, connector, run_datetime)
-    writer = df.write.mode("overwrite")
-    if compression:
-        writer = writer.option("compression", compression)
-    writer.json(path)
-    return path
+    return _write_jsonl_gz(df, partitioned_output_path(base, connector, run_datetime))
 
 
-def write_errors(
-    errors: DataFrame,
-    base: str,
-    run_datetime: datetime,
-    compression: str | None = "gzip",
-    known_nonempty: bool = False,
-) -> str | None:
+def write_errors(errors: DataFrame, base: str, run_datetime: datetime) -> str | None:
     """K2 — failed inference rows, only when nonempty (ri:114-133).
-
-    ``known_nonempty=True`` skips the ``isEmpty`` probe — required when
-    the caller attached an ``observe()`` to ``errors`` (a limit-1 probe
-    would fulfil the observation with partial counts)."""
-    if not known_nonempty and errors.isEmpty():
+    The ``isEmpty`` probe is a limit-1 job: an ``observe()`` upstream of
+    ``errors`` must have fired already, or the probe fulfils it with
+    partial counts."""
+    if errors.isEmpty():
         return None
     path = partitioned_output_path(base, "errors", run_datetime)
-    writer = errors.write.mode("overwrite")
-    if compression:
-        writer = writer.option("compression", compression)
-    writer.json(path)
-    return path
+    return _write_jsonl_gz(errors, path)
 
 
 def compact_write(
@@ -147,16 +132,16 @@ def compact_dataset(
     carry non-overlapping key ranges — min/max pruning stays effective
     after compaction, the zorder_layout lesson) or a plain round-robin
     repartition otherwise. maxRecordsPerFile caps stragglers. Returns
-    the file count written (via a local-filesystem glob — at cluster
-    scale count part files through the Hadoop FS API instead).
+    the part-file count written, listed through the Hadoop FileSystem
+    (any scheme, like the paths themselves).
 
-    ``out_path`` must differ from ``in_path``: the source read is
+    ``out_path`` must differ from ``in_path`` once both are qualified
+    (``/x`` and ``file:/x`` are the same directory): the source read is
     lazy, so an in-place overwrite would truncate the input while the
     rewrite is still scanning it and lose data. Compact to a fresh
     directory and swap pointers (the cdc_sink versioning pattern)."""
-    import glob as _glob
-
-    if os.path.abspath(out_path) == os.path.abspath(in_path):
+    out_fs, out_qualified = hadoop_path(spark, out_path)
+    if out_qualified.equals(hadoop_path(spark, in_path)[1]):
         raise ValueError(
             "compact_dataset: out_path must differ from in_path — an "
             "in-place overwrite truncates the lazily-read source; "
@@ -175,4 +160,5 @@ def compact_dataset(
         .format(fmt)
         .save(out_path)
     )
-    return len(_glob.glob(f"{out_path}/part-*"))
+    parts = spark._jvm.org.apache.hadoop.fs.Path(out_qualified, "part-*")
+    return len(out_fs.globStatus(parts))

@@ -24,7 +24,9 @@ from the receiver (Braze user-track upserts are).
 from __future__ import annotations
 
 import json
+import os
 import time
+import uuid
 from collections.abc import Callable, Iterator
 from typing import Any
 
@@ -64,13 +66,30 @@ class Transport:
         raise NotImplementedError
 
 
-class RecordingTransport(Transport):
-    """Test double: spools every batch to a directory as JSON lines.
+def _spool_write(spool_dir: str, name: str, obj: Any) -> None:
+    """Test-double channel: one JSON file per delivered batch. Spark runs
+    mapPartitions in separate Python worker *processes* even under local
+    masters, so in-memory recording is invisible to the caller."""
+    os.makedirs(spool_dir, exist_ok=True)
+    with open(os.path.join(spool_dir, name), "w") as f:
+        json.dump(obj, f)
 
-    Spark executes mapPartitions in separate Python worker *processes*
-    even under local masters, so in-memory recording is invisible to
-    the caller — the filesystem is the channel.
-    """
+
+def _spool_read(spool_dir: str, prefix: str = "") -> list[Any]:
+    """Every spooled batch whose file name starts with ``prefix``, in
+    file-name order; ``[]`` when nothing was spooled."""
+    if not os.path.isdir(spool_dir):
+        return []
+    out = []
+    for name in sorted(os.listdir(spool_dir)):
+        if name.startswith(prefix):
+            with open(os.path.join(spool_dir, name)) as f:
+                out.append(json.load(f))
+    return out
+
+
+class RecordingTransport(Transport):
+    """Test double: spools every batch to a directory as JSON."""
 
     def __init__(self, spool_dir: str, fail_keys: tuple[str, ...] = ()):
         self.spool_dir = spool_dir
@@ -79,25 +98,11 @@ class RecordingTransport(Transport):
     def send_batch(self, batch: list[dict[str, Any]]) -> None:
         if any(rec.get("external_id") in self.fail_keys for rec in batch):
             raise TransportError(f"synthetic failure for batch of {len(batch)}")
-        import os
-        import uuid
-
-        os.makedirs(self.spool_dir, exist_ok=True)
-        path = os.path.join(self.spool_dir, f"batch-{uuid.uuid4().hex}.json")
-        with open(path, "w") as f:
-            json.dump(batch, f)
+        _spool_write(self.spool_dir, f"batch-{uuid.uuid4().hex}.json", batch)
 
     @staticmethod
     def read_batches(spool_dir: str) -> list[list[dict[str, Any]]]:
-        import os
-
-        if not os.path.isdir(spool_dir):
-            return []
-        out = []
-        for name in sorted(os.listdir(spool_dir)):
-            with open(os.path.join(spool_dir, name)) as f:
-                out.append(json.load(f))
-        return out
+        return _spool_read(spool_dir)
 
 
 class FlakyTransport(Transport):
@@ -112,8 +117,6 @@ class FlakyTransport(Transport):
         self.fail_times = fail_times
 
     def send_batch(self, batch: list[dict[str, Any]]) -> None:
-        import os
-
         os.makedirs(self.spool_dir, exist_ok=True)
         key = str(batch[0].get("external_id", "k")).replace(os.sep, "_")
         counter = os.path.join(self.spool_dir, f"receives-{key}")
@@ -126,20 +129,11 @@ class FlakyTransport(Transport):
             f.write(str(seen))
         if seen <= self.fail_times:
             raise TransportError(f"synthetic flake, receive {seen}")
-        with open(os.path.join(self.spool_dir, f"batch-{key}.json"), "w") as f:
-            json.dump(batch, f)
+        _spool_write(self.spool_dir, f"batch-{key}.json", batch)
 
     @staticmethod
     def delivered_batches(spool_dir: str) -> list[list[dict[str, Any]]]:
-        import os
-
-        if not os.path.isdir(spool_dir):
-            return []
-        return [
-            json.load(open(os.path.join(spool_dir, f)))
-            for f in sorted(os.listdir(spool_dir))
-            if f.startswith("batch-")
-        ]
+        return _spool_read(spool_dir, prefix="batch-")
 
 
 class QueueTransport(Transport):
@@ -185,25 +179,11 @@ class SpoolingQueueTransport(QueueTransport):
     def send_entries(self, entries: list[dict[str, str]]) -> None:
         if any(e["Id"].split("-", 1)[1] in self.fail_user_ids for e in entries):
             raise TransportError(f"synthetic queue failure ({len(entries)} entries)")
-        import os
-        import uuid
-
-        os.makedirs(self.spool_dir, exist_ok=True)
-        path = os.path.join(self.spool_dir, f"entries-{uuid.uuid4().hex}.json")
-        with open(path, "w") as f:
-            json.dump(entries, f)
+        _spool_write(self.spool_dir, f"entries-{uuid.uuid4().hex}.json", entries)
 
     @staticmethod
     def read_entry_batches(spool_dir: str) -> list[list[dict[str, str]]]:
-        import os
-
-        if not os.path.isdir(spool_dir):
-            return []
-        out = []
-        for name in sorted(os.listdir(spool_dir)):
-            with open(os.path.join(spool_dir, name)) as f:
-                out.append(json.load(f))
-        return out
+        return _spool_read(spool_dir)
 
 
 class HttpUserTrackTransport(Transport):

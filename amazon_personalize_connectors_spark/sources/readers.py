@@ -16,51 +16,62 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# S1 — batch inference output, related-items shape (README.md:169-173;
-# the `error` column is implied by the split at ri:111,116).
-BATCH_INFERENCE_RELATED_SCHEMA = T.StructType(
-    [
-        T.StructField("input", T.StructType([T.StructField("itemId", T.StringType())])),
-        T.StructField(
-            "output",
-            T.StructType(
-                [T.StructField("recommendedItems", T.ArrayType(T.StringType()))]
-            ),
-        ),
-        T.StructField("error", T.StringType()),
-        T.StructField("_corrupt_record", T.StringType()),
-    ]
-)
+# Personalize batch-inference job type -> the input field that keys its
+# records: itemId for related items (ri:159), userId for user
+# personalization (up:167).
+JOB_INPUT_KEYS = {"related_items": "itemId", "user_personalization": "userId"}
 
-# S1' — user-personalization shape keys on input.userId (up:167).
-BATCH_INFERENCE_USERPERS_SCHEMA = T.StructType(
-    [
-        T.StructField("input", T.StructType([T.StructField("userId", T.StringType())])),
-        T.StructField(
-            "output",
-            T.StructType(
-                [T.StructField("recommendedItems", T.ArrayType(T.StringType()))]
+
+def input_key(job_type: str) -> str:
+    """The input key field of ``job_type``; unknown job types raise."""
+    if job_type not in JOB_INPUT_KEYS:
+        raise ValueError(
+            f"unknown job type: {job_type!r} (expected one of {sorted(JOB_INPUT_KEYS)})"
+        )
+    return JOB_INPUT_KEYS[job_type]
+
+
+def _batch_inference_schema(key_field: str) -> T.StructType:
+    """S1 — batch inference output keyed on ``input.<key_field>``
+    (README.md:169-173; the `error` column is implied by the split at
+    ri:111,116)."""
+    return T.StructType(
+        [
+            T.StructField(
+                "input", T.StructType([T.StructField(key_field, T.StringType())])
             ),
-        ),
-        T.StructField("error", T.StringType()),
-        T.StructField("_corrupt_record", T.StringType()),
-    ]
-)
+            T.StructField(
+                "output",
+                T.StructType(
+                    [T.StructField("recommendedItems", T.ArrayType(T.StringType()))]
+                ),
+            ),
+            T.StructField("error", T.StringType()),
+            T.StructField("_corrupt_record", T.StringType()),
+        ]
+    )
+
+
+BATCH_INFERENCE_RELATED_SCHEMA = _batch_inference_schema("itemId")
+BATCH_INFERENCE_USERPERS_SCHEMA = _batch_inference_schema("userId")
+
+
+def hadoop_path(spark: SparkSession, path: str):
+    """``(FileSystem, qualified Path)`` for ``path`` on any
+    Hadoop-supported scheme: ``/x`` and ``file:/x`` qualify alike."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    return fs, fs.makeQualified(p)
 
 
 def path_exists(spark: SparkSession, path: str) -> bool:
     """S6 — existence probe, Hadoop-FS flavored (replaces the boto3
     list-objects probe at ri:40-53; works on any Hadoop-supported FS)."""
-    jvm = spark._jvm
-    jsc = spark._jsc
-    conf = jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(conf)
+    fs, p = hadoop_path(spark, path)
     if fs.exists(p):
         return True
     # prefix probe: any object under the path (ri:47-53 list_objects_v2)
-    glob = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "/*")
-    statuses = fs.globStatus(glob)
+    statuses = fs.globStatus(spark._jvm.org.apache.hadoop.fs.Path(p, "*"))
     return statuses is not None and len(statuses) > 0
 
 
@@ -73,11 +84,7 @@ def read_batch_inference(
     + ``_corrupt_record`` replaces DynamicFrame per-record drift: bad
     lines land in one inspectable column instead of failing the scan.
     """
-    schema = (
-        BATCH_INFERENCE_RELATED_SCHEMA
-        if job_type == "related_items"
-        else BATCH_INFERENCE_USERPERS_SCHEMA
-    )
+    schema = _batch_inference_schema(input_key(job_type))
     return (
         spark.read.schema(schema)
         .options(mode="PERMISSIVE", columnNameOfCorruptRecord="_corrupt_record")
@@ -123,34 +130,20 @@ def read_user_item_mapping(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def read_item_metadata(
-    spark: SparkSession, path: str, schema: T.StructType | None = None
-) -> DataFrame | None:
+def read_item_metadata(spark: SparkSession, path: str) -> DataFrame | None:
     """S3 — optional JSONL dimension load, gated on existence (ri:176-189).
 
-    Schema is user-defined and open (README.md:192-194); callers may pass
-    one to skip inference. Returns None when the path has no data, which
-    the pipeline treats as "decorate with bare itemId structs".
+    The schema is user-defined and open (README.md:192-194), so it is
+    inferred. Returns None when the path has no data, which the
+    pipeline treats as "decorate with bare itemId structs".
     """
-    if not path_exists(spark, path):
-        return None
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
+    return spark.read.json(path) if path_exists(spark, path) else None
 
 
-def read_last_sync_state(
-    spark: SparkSession, path: str, schema: T.StructType | None = None
-) -> DataFrame | None:
+def read_last_sync_state(spark: SparkSession, path: str) -> DataFrame | None:
     """S4 — prior decorated-output snapshot for the delta check
     (ri:251-258). None when no prior sync exists."""
-    if not path_exists(spark, path):
-        return None
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
+    return read_item_metadata(spark, path)
 
 
 # per-field variant schemas that do NOT count as drift: the canonical
@@ -182,8 +175,8 @@ def parse_batch_inference_drift(
     NULL for them. Pure column transform — usable on a stream or a
     batch text scan; JVM-side end to end (variant parse + typed get
     are codegen expressions, no Python in the path)."""
-    id_path = "$.input.itemId" if job_type == "related_items" else "$.input.userId"
-    id_field = "itemId" if job_type == "related_items" else "userId"
+    id_field = input_key(job_type)
+    id_path = f"$.input.{id_field}"
     # parse ONCE into a variant column; every extraction below reads
     # the parsed binary, not the raw JSON text again
     parsed = lines.withColumn("_v", F.expr(f"try_parse_json({value_col})"))
