@@ -60,7 +60,10 @@ def entry(spark: SparkSession) -> DataFrame:
 # blocking — this round's optimizations, ranked just below red), the
 # 6 corpus-analytics queries staged during round 12 (never-verified —
 # they drain in next), and the oldest greens (r6, then r7) up to 50
-# slots. No red rows at rotation time.
+# slots. No red rows at rotation time. Re-planned after round 13
+# when state_digest_update's form changed (flat digest store): it
+# takes an active-reverify slot and the newest of the oldest greens,
+# lineitem_corr_matrix, falls out.
 # tests/test_window_rotation.py pins the invariants AS OF
 # THIS WINDOW'S ROUND (evidence < r13), so landing
 # CORRECTNESS_r13.json does not re-redden the suite.
@@ -75,6 +78,7 @@ _R13_WINDOW = [
     "containment_pairs",
     "minhash_lsh",
     "winnowing_dedup",
+    "state_digest_update",
     "dup_ngram_fraction",
     "token_pmi",
     "doc_entropy",
@@ -114,7 +118,6 @@ _R13_WINDOW = [
     "kcore_parts",
     "stream_distinct_users",
     "trimmed_mean_price",
-    "lineitem_corr_matrix",
 ]
 
 # Staging discipline (VERDICT r6 item 3 / r7 item 6): queries added
@@ -183,6 +186,11 @@ _REVERIFY: dict[str, int] = {
     # on the pair join's own fp exchange; counts identical (fps rows
     # distinct per (id, fp)), oracle green sf0.01, ~1.5x.
     "winnowing_dedup": 12,
+    # After round 13 (simplicity): the digest state store is one flat
+    # (h1, h2) parquet set read with recursiveFileLookup — the stored
+    # Relation loses its `bucket` partition column; the delta rows are
+    # unchanged (oracle green sf0.01). Its latest evidence is r8.
+    "state_digest_update": 13,
 }
 
 

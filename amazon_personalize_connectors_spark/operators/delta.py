@@ -10,14 +10,14 @@ Scale notes: ``subtract`` shuffles both full datasets on all columns.
 That's fine at dimension scale but wrong at 100 TB of state, so
 ``delta_check_anti_hash`` offers the scalable physical strategy: anti-
 join on a 96-bit record digest (xxhash64 + murmur3) — state side
-reduces to one 12-byte hash column (pruned scan), the join key is
-high-entropy (no skew), and with both sides bucketed by digest it's a
-co-located join. Semantics are identical modulo hash collisions
+reduces to one 12-byte hash column (pruned scan) and the join key is
+high-entropy (no skew). Semantics are identical modulo hash collisions
 (birthday bound safe past ~10^12 records; swap in sha2(to_json, 256)
 where a cryptographic bound is required).
 
 The reference never writes state back ("TODO", README.md:150);
-``write_sync_state`` closes that loop (K5).
+``write_sync_state`` closes that loop (K5), and the flat digest store
+at the bottom of this module is its append-only form.
 """
 
 from __future__ import annotations
@@ -25,6 +25,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from amazon_personalize_connectors_spark.sources.readers import (
+    hadoop_path,
+    path_exists,
+)
 
 
 def _conform_expr(col: Column, dt: T.DataType) -> Column:
@@ -86,7 +91,7 @@ def _digest_cols(df: DataFrame) -> tuple[Column, Column]:
 
 def record_digests(df: DataFrame) -> DataFrame:
     """Narrow (h1, h2) digest frame of ``df`` — 12 bytes per record.
-    This is what the bucketed state store persists: digests computed
+    This is what the digest state store persists: digests computed
     once, at write time, from the canonical in-session frame — so the
     JSONL-round-trip schema hazards of full-record state never arise."""
     h1, h2 = _digest_cols(df)
@@ -108,9 +113,7 @@ def delta_check_anti_hash(current: DataFrame, state: DataFrame | None) -> DataFr
     return delta_check_against_digests(current, state)
 
 
-def with_record_digests(
-    df: DataFrame, h1_col: str = "__h1", h2_col: str = "__h2"
-) -> DataFrame:
+def with_record_digests(df: DataFrame) -> DataFrame:
     """``df`` plus its two record-digest columns — what a snapshot
     WRITER stamps so later readers never re-hash (and never re-read)
     the payload columns: ``delta_check_stored_digests`` below then
@@ -118,14 +121,11 @@ def with_record_digests(
     are computed from the canonical in-session frame, the same
     discipline as ``record_digests``."""
     h1, h2 = _digest_cols(df)
-    return df.withColumn(h1_col, h1).withColumn(h2_col, h2)
+    return df.withColumn("__h1", h1).withColumn("__h2", h2)
 
 
 def delta_check_stored_digests(
-    current: DataFrame,
-    state: DataFrame | None,
-    h1_col: str = "__h1",
-    h2_col: str = "__h2",
+    current: DataFrame, state: DataFrame | None
 ) -> DataFrame:
     """``delta_check_anti_hash`` over a snapshot that already CARRIES
     its digests (``with_record_digests`` at write time): both the
@@ -137,13 +137,13 @@ def delta_check_stored_digests(
     identical to delta_check_anti_hash on the same rows: equal
     digests ⇒ equal rows is already that function's dedup/join
     assumption, and parquet round-trips bigint digests exactly."""
-    deduped = current.dropDuplicates([h1_col, h2_col])
+    deduped = current.dropDuplicates(["__h1", "__h2"])
     if state is None:
-        return deduped.drop(h1_col, h2_col)
-    state_digests = state.select(h1_col, h2_col).distinct()
+        return deduped.drop("__h1", "__h2")
+    state_digests = state.select("__h1", "__h2").distinct()
     return (
-        deduped.join(state_digests, [h1_col, h2_col], "left_anti")
-        .drop(h1_col, h2_col)
+        deduped.join(state_digests, ["__h1", "__h2"], "left_anti")
+        .drop("__h1", "__h2")
     )
 
 
@@ -155,26 +155,23 @@ def write_sync_state(decorated: DataFrame, state_path: str) -> None:
     decorated.write.mode("overwrite").json(state_path)
 
 
-# --- Digest-bucketed state store (K5 at scale) -----------------------
+# --- Digest state store (K5 at scale) --------------------------------
 #
 # The snapshot form rewrites ALL state every run. The digest store
-# keeps only (h1, h2) record digests, hash-bucketed into parquet
-# partition directories:
+# keeps only the (h1, h2) record digests, as one flat parquet set:
 #
-#   state_digests/bucket=0/part-*.parquet
-#   state_digests/bucket=1/...
+#   state_digests/part-*.parquet
 #
-# * UPDATE  = append the delivered delta's digests (one small file per
-#   touched bucket) — cost proportional to the delta, never the
+# * UPDATE  = append the delivered delta's digests — at most one file
+#   per write task, cost proportional to the delta, never the
 #   accumulated state.
-# * READ    = plain parquet scan of two int columns; feeds
-#   delta_check_against_digests' left-anti join.
+# * READ    = parquet scan of the two int columns, recursive so that a
+#   store still holding ``bucket=N/`` directories from the earlier
+#   partitioned layout reads in full; feeds
+#   delta_check_against_digests' left-anti join on (h1, h2).
 # * Stale digests (a record changed, its old digest lingers) are
 #   harmless — no current row hashes to them — and are swept by
 #   compact_state_digests, which also merges per-run small files.
-#   Compaction is bucket-parallel and needs memory ∝ one bucket.
-
-N_STATE_BUCKETS = 64
 
 
 def delta_check_against_digests(
@@ -185,9 +182,7 @@ def delta_check_against_digests(
     (h1, h2). The current side shuffles once on the narrow key for
     both the dedup and the anti-join; the digest side needs no schema
     conformance because digests were computed before any round-trip."""
-    h1, h2 = _digest_cols(current)
-    cur = current.withColumn("__h1", h1).withColumn("__h2", h2)
-    deduped = cur.dropDuplicates(["__h1", "__h2"])
+    deduped = with_record_digests(current).dropDuplicates(["__h1", "__h2"])
     if digests is None:
         return deduped.drop("__h1", "__h2")
     d = digests.select(F.col("h1").alias("__h1"), F.col("h2").alias("__h2"))
@@ -196,36 +191,32 @@ def delta_check_against_digests(
 
 def read_state_digests(spark, path: str) -> DataFrame | None:
     """Load the digest set, or None when no state exists (first sync)."""
-    from amazon_personalize_connectors_spark.sources.readers import path_exists
-
     if not path_exists(spark, path):
         return None
-    return spark.read.parquet(path).select("h1", "h2")
-
-
-def append_state_digests(
-    delta: DataFrame, path: str, n_buckets: int = N_STATE_BUCKETS
-) -> None:
-    """Record the just-delivered delta rows as synced: append their
-    digests to the bucketed store. Work ∝ delta size."""
-    dg = record_digests(delta).withColumn(
-        "bucket", F.pmod(F.col("h1"), F.lit(n_buckets))
+    return (
+        spark.read.option("recursiveFileLookup", "true")
+        .parquet(path)
+        .select("h1", "h2")
     )
-    dg.write.mode("append").partitionBy("bucket").parquet(path)
+
+
+def append_state_digests(delta: DataFrame, path: str) -> None:
+    """Record the just-delivered delta rows as synced: append their
+    digests to the store. Work ∝ delta size."""
+    record_digests(delta).write.mode("append").parquet(path)
 
 
 def compact_state_digests(spark, path: str) -> None:
-    """Merge each bucket's accumulated run-files and drop duplicate
-    digests. Writes to a sibling temp dir then swaps via FileSystem
-    rename (atomic on HDFS/local; copy-on-rename stores like S3 should
+    """Merge the accumulated run-files and drop duplicate digests.
+    Writes to a sibling temp dir then swaps via FileSystem rename
+    (atomic on HDFS/local; copy-on-rename stores like S3 should
     compact to a versioned path instead)."""
-    df = spark.read.parquet(path).dropDuplicates(["h1", "h2"])
+    digests = read_state_digests(spark, path)
+    if digests is None:
+        return
     tmp = path.rstrip("/") + "__compacting"
-    df.repartition("bucket").write.mode("overwrite").partitionBy("bucket").parquet(tmp)
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    src = jvm.org.apache.hadoop.fs.Path(tmp)
-    dst = jvm.org.apache.hadoop.fs.Path(path)
-    fs = dst.getFileSystem(conf)
+    digests.dropDuplicates(["h1", "h2"]).write.mode("overwrite").parquet(tmp)
+    fs, dst = hadoop_path(spark, path)
+    _, src = hadoop_path(spark, tmp)
     fs.delete(dst, True)
     fs.rename(src, dst)

@@ -75,7 +75,7 @@ def run_job(
 
     * ``"json"`` — reference semantics: the full pre-delta snapshot is
       rewritten as JSONL every run (cost ∝ snapshot size).
-    * ``"digest"`` — the 100 TB path: state is the bucketed (h1, h2)
+    * ``"digest"`` — the 100 TB path: state is the flat (h1, h2)
       digest store under ``output/<connector>/state_digests``; each run
       APPENDS only the delivered delta's digests (cost ∝ delta size).
     """

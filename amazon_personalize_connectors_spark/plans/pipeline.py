@@ -54,7 +54,7 @@ def related_items_pipeline(
     stamp (P1).
 
     ``state_is_digests=True`` means ``state`` is a narrow (h1, h2)
-    digest frame from the bucketed state store; the delta becomes a
+    digest frame from the digest state store; the delta becomes a
     digest anti-join (the 100 TB path).
 
     ``cache_source=False`` when the caller already materialized the

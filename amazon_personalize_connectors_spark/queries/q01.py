@@ -430,7 +430,7 @@ def q_simhash64(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_state_digest_update(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K5-at-scale update cycle: state = bucketed digests of all but
+    """K5-at-scale update cycle: state = stored digests of all but
     every-200th order (materialized first), then the measured work is
     the digest anti-join plus appending the 0.5% delta's digests —
     cost ∝ delta size, not snapshot size (compare delta_except, which

@@ -55,11 +55,15 @@ from amazon_personalize_connectors_spark.functions.similarity import (
     lsh_signed_nodes,
 )
 from amazon_personalize_connectors_spark.streaming.epoch_store import (
+    bucket_paths as _bucket_paths,
     commit_version,
     current_version as _current_version,
     drain_into_store,
+    manifest_path as _manifest_path,
     plan_fold,
     prune_versions as _prune_versions,
+    read_buckets as _read_buckets,
+    read_manifest,
     read_meta,
     run_concurrently,
     write_atomic,
@@ -75,17 +79,11 @@ def _sig_schema(n_tables: int) -> str:
 _VEC_SCHEMA = "id long, qv array<bigint>"
 
 
-def _manifest_path(store_path: str, version: int) -> str:
-    return os.path.join(store_path, f"v{version}", "_MANIFEST.json")
-
-
 def _read_manifest(store_path: str, version: int | None) -> dict:
-    if version is None:
-        return {"n_bits": None, "n_tables": None, "m": None,
-                "hash_family": None,
-                "sigs": {}, "vecs": {}, "edges": {}}
-    with open(_manifest_path(store_path, version)) as f:
-        return json.load(f)
+    return read_manifest(store_path, version, {
+        "n_bits": None, "n_tables": None, "m": None, "hash_family": None,
+        "sigs": {}, "vecs": {}, "edges": {},
+    })
 
 
 def _check_store_family(store_path: str, man: dict, fresh: bool) -> None:
@@ -107,27 +105,6 @@ def _check_store_family(store_path: str, man: dict, fresh: bool) -> None:
             f"folding or probing would mix incompatible bucket "
             f"spaces. Rebuild the store from the vector stream."
         )
-
-
-def _bucket_paths(
-    store_path: str, manifest: dict, kind: str, buckets=None
-) -> list[str]:
-    sel = manifest[kind]
-    if buckets is not None:
-        want = {str(b) for b in buckets}
-        sel = {b: v for b, v in sel.items() if b in want}
-    return [
-        os.path.join(store_path, f"v{v}", kind, f"bucket={b}")
-        for b, v in sel.items()
-    ]
-
-
-def _read_buckets(
-    spark: SparkSession, paths: list[str], schema: str
-) -> DataFrame:
-    if not paths:
-        return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(*paths)
 
 
 def apply_vectors_batch(

@@ -60,9 +60,11 @@ Every store wrapper shares the same core here: ``drain_into_store``
 (the stream side, through the package's one drain,
 ``incremental.run_available_now``), ``fold_mergeable`` and
 ``read_committed`` (the whole fold and read of a single-directory
-store whose state merges by a keyed re-aggregate), and
-``run_concurrently`` (the overlapped writes a fold makes before it
-commits).
+store whose state merges by a keyed re-aggregate), ``read_required``
+(the must-exist union over a version chain, ivm and near-dup),
+``read_manifest``/``bucket_paths``/``read_buckets`` (the manifest
+stores, ann_monitor and model_refresh), and ``run_concurrently`` (the
+overlapped writes a fold makes before it commits).
 
 Known narrow window (documented, not closed): a retry after a
 crash-between-flip-and-checkpoint-commit overwrites the POINTED-AT
@@ -369,6 +371,65 @@ def read_committed(
     return spark.read.schema(schema).parquet(
         os.path.join(store_path, f"v{ver}")
     )
+
+
+def read_required(
+    spark: SparkSession, store_path: str, versions: list[int], what: str,
+    schema: str,
+) -> DataFrame:
+    """Union of the ``what`` subdirs of ``versions``, which must ALL
+    exist: a fold or read over a version chain depends on complete
+    prior state, so a missing dir (pruned store, foreign store, partial
+    copy) is an error, never a silent empty frame that undercounts
+    every later result."""
+    paths = [os.path.join(store_path, f"v{i}", what) for i in versions]
+    missing = [p for p in paths if not os.path.exists(p)]
+    if missing:
+        raise ValueError(
+            f"store {store_path!r} is missing required {what} dirs: "
+            f"{missing[:3]}{' ...' if len(missing) > 3 else ''} — the "
+            f"version dirs a read depends on are load-bearing state and "
+            f"must never be pruned while reachable."
+        )
+    return read_buckets(spark, paths, schema)
+
+
+def manifest_path(store_path: str, version: int) -> str:
+    return os.path.join(store_path, f"v{version}", "_MANIFEST.json")
+
+
+def read_manifest(store_path: str, version: int | None, empty: dict) -> dict:
+    """The bucket manifest of a manifest store's ``version``, or
+    ``empty`` before the first fold."""
+    if version is None:
+        return empty
+    with open(manifest_path(store_path, version)) as f:
+        return json.load(f)
+
+
+def bucket_paths(
+    store_path: str, manifest: dict, kind: str, buckets=None
+) -> list[str]:
+    """Leaf parquet paths for ``kind``, optionally restricted to
+    ``buckets`` — each bucket read from the version directory the
+    manifest pins it to."""
+    sel = manifest[kind]
+    if buckets is not None:
+        want = {str(b) for b in buckets}
+        sel = {b: v for b, v in sel.items() if b in want}
+    return [
+        os.path.join(store_path, f"v{v}", kind, f"bucket={b}")
+        for b, v in sel.items()
+    ]
+
+
+def read_buckets(
+    spark: SparkSession, paths: list[str], schema: str
+) -> DataFrame:
+    """Union of the parquet ``paths``; empty when there are none."""
+    if not paths:
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(*paths)
 
 
 def fold_mergeable(

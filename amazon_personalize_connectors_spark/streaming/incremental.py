@@ -107,7 +107,7 @@ def incremental_content_ingest(
     deliver: Callable[[DataFrame, int], None],
 ) -> StreamingQuery:
     """Streaming once-per-CONTENT ingestion: each micro-batch deltas
-    against the digest-bucketed state store (left-anti join on the
+    against the flat digest state store (left-anti join on the
     96-bit record digest), hands only never-seen records to
     ``deliver``, then appends their digests — the streaming face of
     ``delta_check_against_digests``/``append_state_digests``, so

@@ -44,35 +44,13 @@ from amazon_personalize_connectors_spark.streaming.epoch_store import (
     current_version as _current_version,
     drain_into_store,
     plan_fold,
+    read_required,
     run_concurrently,
 )
 
 _SCHEMA_A = "k long, grp string"
 _SCHEMA_B = "k long, val long"
 _SCHEMA_R = "grp string, sum_v long, n_rows long"
-
-
-def _read_required(
-    spark: SparkSession, store_path: str, versions: list[int], what: str,
-    schema: str,
-) -> DataFrame:
-    """Union of the ``what`` subdirs of ``versions``, which must ALL
-    exist: the fold's correctness depends on complete prior state, so
-    a missing dir is an error (pruned store, foreign store, partial copy), never a
-    silent empty frame (code-review r9 — the old exists-filter made a
-    pruned delta dir silently undercount every later rollup)."""
-    if not versions:
-        return spark.createDataFrame([], schema)
-    paths = [os.path.join(store_path, f"v{i}", what) for i in versions]
-    missing = [p for p in paths if not os.path.exists(p)]
-    if missing:
-        raise ValueError(
-            f"ivm store is missing required {what} dirs: {missing[:3]}"
-            f"{' ...' if len(missing) > 3 else ''} — per-epoch deltas "
-            f"are load-bearing state and must never be pruned (see "
-            f"module docstring)."
-        )
-    return spark.read.schema(schema).parquet(*paths)
 
 
 def apply_ivm_batch(
@@ -101,9 +79,9 @@ def apply_ivm_batch(
     # the deltas of v0..v{prior}, the rollup lives in v{prior}
     chain = [] if prior is None else list(range(prior + 1))
     new_rollup = incremental_join_rollup(
-        _read_required(spark, store_path, chain[-1:], "rollup", _SCHEMA_R),
-        _read_required(spark, store_path, chain, "a_delta", _SCHEMA_A), da,
-        _read_required(spark, store_path, chain, "b_delta", _SCHEMA_B), db,
+        read_required(spark, store_path, chain[-1:], "rollup", _SCHEMA_R),
+        read_required(spark, store_path, chain, "a_delta", _SCHEMA_A), da,
+        read_required(spark, store_path, chain, "b_delta", _SCHEMA_B), db,
         a_key="k", b_key="k", group_col="grp", value_col="val",
     ).select(
         "grp",

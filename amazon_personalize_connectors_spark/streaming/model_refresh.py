@@ -52,11 +52,15 @@ from amazon_personalize_connectors_spark.operators.recsys import (
     covisitation_increments,
 )
 from amazon_personalize_connectors_spark.streaming.epoch_store import (
+    bucket_paths as _bucket_paths,
     commit_version,
     current_version as _current_version,
     drain_into_store,
+    manifest_path as _manifest_path,
     plan_fold,
     prune_versions as _prune_versions,
+    read_buckets as _read_buckets,
+    read_manifest,
     read_meta,
     run_concurrently,
     write_atomic,
@@ -66,39 +70,10 @@ _PAIR_SCHEMA = "item long, rec_item long, n_common long"
 _ITEM_SCHEMA = "u long, i long"
 
 
-def _manifest_path(store_path: str, version: int) -> str:
-    return os.path.join(store_path, f"v{version}", "_MANIFEST.json")
-
-
 def _read_manifest(store_path: str, version: int | None) -> dict:
-    if version is None:
-        return {"n_buckets": None, "items": {}, "pairs": {}}
-    with open(_manifest_path(store_path, version)) as f:
-        return json.load(f)
-
-
-def _bucket_paths(
-    store_path: str, manifest: dict, kind: str, buckets=None
-) -> list[str]:
-    """Leaf parquet paths for ``kind`` ('items'|'pairs'), optionally
-    restricted to ``buckets`` — each bucket read from the version
-    directory the manifest pins it to."""
-    sel = manifest[kind]
-    if buckets is not None:
-        want = {str(b) for b in buckets}
-        sel = {b: v for b, v in sel.items() if b in want}
-    return [
-        os.path.join(store_path, f"v{v}", kind, f"bucket={b}")
-        for b, v in sel.items()
-    ]
-
-
-def _read_buckets(
-    spark: SparkSession, paths: list[str], schema: str
-) -> DataFrame:
-    if not paths:
-        return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(*paths)
+    return read_manifest(
+        store_path, version, {"n_buckets": None, "items": {}, "pairs": {}}
+    )
 
 
 def read_item_state(

@@ -50,36 +50,12 @@ from amazon_personalize_connectors_spark.streaming.epoch_store import (
     plan_fold,
     prune_versions as _prune_versions,
     read_meta,
+    read_required,
     run_concurrently,
 )
 
 _BANDS_SCHEMA = "id long, band int, bucket string"
 _PAIRS_SCHEMA = "id_a long, id_b long, n_shared_bands long"
-
-
-def _read_required(
-    spark: SparkSession, schema: str, paths: list[str], what: str
-) -> DataFrame:
-    """Union of version-dir inputs that must ALL exist (ADVICE r9:
-    this module previously exists-filtered, so a mistaken gc/prune
-    that removed a live bands/pairs dir silently DROPPED near-dup
-    state — undercounted candidates — instead of failing loudly).
-    Paths come from ``_live_versions``, i.e., they are load-bearing
-    state; every committed version writes both subdirs (empty parquet
-    still creates the dir), so a missing one is a pruned/foreign/
-    partial store, never a legitimate gap. Same discipline as
-    streaming/ivm.py ``_read_required``."""
-    if not paths:
-        return spark.createDataFrame([], schema)
-    missing = [p for p in paths if not os.path.exists(p)]
-    if missing:
-        raise ValueError(
-            f"near-dup store is missing required {what} dirs: "
-            f"{missing[:3]}{' ...' if len(missing) > 3 else ''} — "
-            f"live-chain version dirs are load-bearing state and must "
-            f"never be pruned while reachable."
-        )
-    return spark.read.schema(schema).parquet(*paths)
 
 
 def _live_versions(store_path: str, upto: int | None) -> list[int]:
@@ -133,14 +109,9 @@ def apply_neardup_batch(
     new_bands = minhash_band_table(
         batch, text_col, id_col, n, num_hashes, band_size
     ).localCheckpoint(eager=True)  # read 3x: state join, self join, delta write
-    state_bands = _read_required(
-        spark,
+    state_bands = read_required(
+        spark, store_path, _live_versions(store_path, prior), "bands",
         _BANDS_SCHEMA,
-        [
-            os.path.join(store_path, f"v{i}", "bands")
-            for i in _live_versions(store_path, prior)
-        ],
-        "bands",
     )
     # batch-vs-state: the new doc is always the later member; order
     # the pair by id for a stable output key
@@ -201,14 +172,9 @@ def candidates_from_store(
     ver = _current_version(store_path)
     if ver is None:
         return spark.createDataFrame([], _PAIRS_SCHEMA)
-    pairs = _read_required(
-        spark,
+    pairs = read_required(
+        spark, store_path, _live_versions(store_path, ver), "pairs",
         _PAIRS_SCHEMA,
-        [
-            os.path.join(store_path, f"v{i}", "pairs")
-            for i in _live_versions(store_path, ver)
-        ],
-        "pairs",
     )
     return pairs.groupBy("id_a", "id_b").agg(
         F.sum("n_shared_bands").cast("bigint").alias("n_shared_bands")
@@ -242,18 +208,8 @@ def compact_store(spark: SparkSession, store_path: str) -> None:
     live = _live_versions(store_path, cur)
     version = cur + 1
     out = os.path.join(store_path, f"v{version}")
-    bands = _read_required(
-        spark,
-        _BANDS_SCHEMA,
-        [os.path.join(store_path, f"v{i}", "bands") for i in live],
-        "bands",
-    )
-    pairs = _read_required(
-        spark,
-        _PAIRS_SCHEMA,
-        [os.path.join(store_path, f"v{i}", "pairs") for i in live],
-        "pairs",
-    )
+    bands = read_required(spark, store_path, live, "bands", _BANDS_SCHEMA)
+    pairs = read_required(spark, store_path, live, "pairs", _PAIRS_SCHEMA)
     bands.write.mode("overwrite").parquet(os.path.join(out, "bands"))
     pairs.groupBy("id_a", "id_b").agg(
         F.sum("n_shared_bands").cast("bigint").alias("n_shared_bands")

@@ -1,18 +1,30 @@
 """Connector-core contracts: run_job's Spark job count per state format,
-job-type validation in the readers and the job, and compact_dataset
-over plain paths and ``file:`` URIs."""
+job-type validation in the readers and the job, compact_dataset over
+plain paths and ``file:`` URIs, and the flat digest state store's file
+count and reading of the earlier ``bucket=`` layout."""
 
 import glob
+import os
 from datetime import datetime, timezone
 
 import pytest
+from pyspark.sql import functions as F
 
 from amazon_personalize_connectors_spark.config import PipelineConfig
+from amazon_personalize_connectors_spark.operators.delta import (
+    append_state_digests,
+    compact_state_digests,
+    read_state_digests,
+    record_digests,
+)
 from amazon_personalize_connectors_spark.plans.job import run_job
 from amazon_personalize_connectors_spark.sinks.jsonl import compact_dataset
 from amazon_personalize_connectors_spark.sources.readers import (
     parse_batch_inference_drift,
     read_batch_inference,
+)
+from amazon_personalize_connectors_spark.streaming.incremental import (
+    incremental_content_ingest,
 )
 from test_job import CONFIG_JSON, RECS, _write_inputs
 
@@ -88,3 +100,71 @@ def test_compact_dataset_paths_and_uris(spark, tmp_path, scheme):
     n = compact_dataset(spark, src, scheme + out, target_rows_per_file=50)
     assert n == len(glob.glob(f"{out}/part-*")) > 0
     assert spark.read.parquet(out).count() == 100
+
+
+def _parquet_files(path):
+    return [
+        os.path.join(d, n)
+        for d, _, names in os.walk(path)
+        for n in names
+        if n.endswith(".parquet")
+    ]
+
+
+def test_digest_store_writes_few_flat_files(spark, tmp_path):
+    """Each trigger appends at most one file per write task (no
+    per-bucket fan-out); test_delivery's two waves: 50 docs, then 30
+    of which 20 repeat."""
+    landing = str(tmp_path / "landing")
+    state = str(tmp_path / "state")
+    triggers = []
+
+    def run(ckpt):
+        stream = spark.readStream.schema("doc_id long, text string").parquet(landing)
+        q = incremental_content_ingest(
+            stream, state, str(tmp_path / ckpt), lambda df, i: triggers.append(i)
+        )
+        q.awaitTermination(120)
+
+    for lo, hi, ckpt in [(0, 50, "ck1"), (30, 60, "ck2")]:
+        spark.createDataFrame(
+            [(i, f"doc body {i}") for i in range(lo, hi)], "doc_id long, text string"
+        ).coalesce(1).write.mode("append").parquet(landing)
+        run(ckpt)
+
+    files = _parquet_files(state)
+    limit = int(spark.conf.get("spark.sql.shuffle.partitions")) * len(triggers)
+    assert 0 < len(files) <= limit
+    assert not glob.glob(f"{state}/bucket=*")
+    assert read_state_digests(spark, state).count() == 60
+
+
+def _digest_set(df):
+    return {(r.h1, r.h2) for r in df.collect()}
+
+
+def test_digest_store_reads_and_compacts_bucket_layout(spark, tmp_path):
+    """A store written in the earlier ``partitionBy("bucket")`` layout
+    still reads in full after a flat append, and compaction keeps every
+    digest and leaves a flat store."""
+    path = str(tmp_path / "state_digests")
+    docs = spark.range(0, 110).select(
+        "id", F.concat(F.lit("doc "), F.col("id")).alias("text")
+    )
+    old, new = docs.where("id < 100"), docs.where("id >= 90")
+    record_digests(old).withColumn(
+        "bucket", F.pmod(F.col("h1"), F.lit(64))
+    ).write.partitionBy("bucket").parquet(path)
+    append_state_digests(new, path)
+
+    expected = _digest_set(record_digests(docs))
+    stored = read_state_digests(spark, path)
+    assert stored.count() == 120  # 100 old + 20 new, 10 of them repeats
+    assert _digest_set(stored) == expected
+
+    compact_state_digests(spark, path)
+    assert not glob.glob(f"{path}/bucket=*")
+    assert all(os.path.dirname(f) == path for f in _parquet_files(path))
+    flat = spark.read.parquet(path)
+    assert set(flat.columns) == {"h1", "h2"}
+    assert flat.count() == 110 and _digest_set(flat) == expected

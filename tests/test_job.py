@@ -127,7 +127,7 @@ def test_run_job_digest_state_loop(spark, tmp_path, config):
     dpath = r1.state_paths["braze"]
     assert dpath.endswith("state_digests")
     digests = spark.read.parquet(dpath)
-    assert digests.count() == 3 and "bucket" in digests.columns
+    assert digests.count() == 3 and set(digests.columns) == {"h1", "h2"}
 
     def rerun(day):
         cfg = PipelineConfig.from_dict(

@@ -6,11 +6,14 @@ whose own DuckDB agrees with itself can never see. Three
 driver-vs-local parity incidents (r5 revenue_anomalies, r6
 mannwhitney_value + seasonal_decompose) were all this class."""
 
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(
+    0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
+)
 
 from check_oracle import lint_final_types, versions_line  # noqa: E402
 

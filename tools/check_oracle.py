@@ -23,10 +23,11 @@ genuinely exceeds int64.
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 import pandas as pd
@@ -37,8 +38,6 @@ TABLES = (
 
 
 def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    import os
-
     con = duckdb.connect()
     # spill instead of OOM on large-SF oracles: an in-memory DuckDB
     # has NO temp dir by default, so a 25M-row EXCEPT ALL hash table
