@@ -52,72 +52,74 @@ def entry(spark: SparkSession) -> DataFrame:
 
 # Driver verification window: the driver oracle-checks the FIRST 50
 # entries of queries() in dict order; queries() reorders the full
-# registry so this list comes first. Round-13 rotation (ledger:
+# registry so this list comes first. Round-14 rotation (ledger:
 # VERIFIED.md; generated AND applied by `tools/rotate_window.py
-# --apply`, which rewrites this block): the 3 sentinels, the seven
-# active _REVERIFY entries (delta_anti_hash stored-digest snapshot,
-# the gram_table shingle/minhash family, winnowing's window-count
-# blocking — this round's optimizations, ranked just below red), the
-# 6 corpus-analytics queries staged during round 12 (never-verified —
-# they drain in next), and the oldest greens (r6, then r7) up to 50
-# slots. No red rows at rotation time. Re-planned after round 13
-# when state_digest_update's form changed (flat digest store): it
-# takes an active-reverify slot and the newest of the oldest greens,
-# lineitem_corr_matrix, falls out.
+# --apply`, which rewrites this block): the 3 sentinels, then the 13
+# queries whose registered form is newer than their latest driver row
+# (PLAN_FP.json `since` above that row's round, ranked just below
+# red): state_digest_update (flat digest store, since r14) and,
+# since r13, the 12 paths whose code changed during round 13 but
+# whose store- or checkpoint-backed plan fingerprints cannot drift
+# (stream_hnsw_edges, hnsw_stream_index_probe, hnsw_compact,
+# stream_model_refresh, covisitation_incremental, neardup_components,
+# dedup_canonical, er_clusters, leakage_safe_split, ivm_join_rollup,
+# graph_walks, part_reach_bfs); then the oldest greens (all r7, then
+# r8) up to 50 slots. No red rows and no never-verified queries at
+# rotation time.
 # tests/test_window_rotation.py pins the invariants AS OF
-# THIS WINDOW'S ROUND (evidence < r13), so landing
-# CORRECTNESS_r13.json does not re-redden the suite.
-_R13_WINDOW = [
+# THIS WINDOW'S ROUND (evidence < r14), so landing
+# CORRECTNESS_r14.json does not re-redden the suite.
+_R14_WINDOW = [
     "flagship_related_flat",
     "attribution_join",
     "delta_except",
-    "delta_anti_hash",
-    "ngram_jaccard_pairs",
-    "ngram_jaccard_materialized",
-    "neardup_pagerank",
-    "containment_pairs",
-    "minhash_lsh",
-    "winnowing_dedup",
     "state_digest_update",
-    "dup_ngram_fraction",
-    "token_pmi",
-    "doc_entropy",
-    "zipf_alpha",
-    "source_overlap",
-    "bigram_perplexity",
-    "score_ece",
-    "revenue_changepoint",
-    "stream_minhash_lsh",
-    "sorted_neighborhood",
-    "linear_attribution",
-    "stream_ivm_rollup",
-    "bitemporal_report",
-    "psi_drift",
-    "pareto_skyline",
-    "renest_legacy_window",
-    "error_split_ok",
-    "quota_allocation",
-    "cms_heavy_hitters",
-    "dbscan_embeddings",
-    "mmr_rerank",
-    "error_split_errors",
-    "explode_outer",
-    "decorate_flat",
-    "renest_ordered",
-    "mannwhitney_value",
-    "seasonal_decompose",
-    "ams_f2",
-    "open_orders_sweep",
-    "compaction_plan",
-    "priority_revenue_ewma",
-    "anova_price_flag",
-    "caliper_match_att",
-    "stream_cms_topk",
-    "audio_frame_energy",
-    "image_ahash",
-    "kcore_parts",
-    "stream_distinct_users",
-    "trimmed_mean_price",
+    "ivm_join_rollup",
+    "graph_walks",
+    "part_reach_bfs",
+    "neardup_components",
+    "dedup_canonical",
+    "leakage_safe_split",
+    "stream_hnsw_edges",
+    "hnsw_compact",
+    "hnsw_stream_index_probe",
+    "er_clusters",
+    "covisitation_incremental",
+    "stream_model_refresh",
+    "weighted_median_price",
+    "basket_triples",
+    "revenue_share_hierarchy",
+    "did_purchase_value",
+    "isotonic_calibration",
+    "js_drift",
+    "conformal_threshold",
+    "bpe_train",
+    "als_user_step",
+    "stream_js_drift",
+    "oof_target_encoding",
+    "cuped_purchase",
+    "rolling_ols_slope",
+    "growth_accounting",
+    "woe_iv_priority",
+    "bootstrap_ci",
+    "eb_shrunk_ctr",
+    "bpe_vocab",
+    "stream_conformal",
+    "shapley_attribution",
+    "stock_balance_floor",
+    "stream_capped_balance",
+    "price_interpolate_daily",
+    "t_closeness",
+    "mi_priority_status",
+    "user_pers_flat",
+    "payload_pivot",
+    "topk_slice",
+    "image_resize_pixels",
+    "stamp_literals",
+    "text_tokens",
+    "text_quality",
+    "lang_profile",
+    "doc_fingerprint",
 ]
 
 # Staging discipline (VERDICT r6 item 3 / r7 item 6): queries added
@@ -130,70 +132,6 @@ _STAGED: list[str] = [
     # (r12's six corpus-analytics additions drained into the r13
     # window at rotation time — never-verified priority.)
 ]
-
-# Re-verification pool (VERDICT r10 item 1): queries whose REGISTERED
-# FORM changed after their last driver-green row — the old evidence
-# attests a query that no longer exists. Maps query -> the round whose
-# gates the form change landed AFTER, so drainage is DERIVED, not a
-# manual edit: tools/rotate_window.py treats an entry as active only
-# while the query's latest driver evidence is <= that round, and
-# ranks active entries just below red rows (ahead of never-verified)
-# so they lead the next window. Once a newer driver row lands the
-# entry is inert (and can be deleted at leisure); a forgotten
-# deletion can no longer pin window slots (self-review r11).
-# Round 11: the simhash family switched to the corpus-scale table
-# form (functions/dedup.py `simhash16_table`, commits
-# c2db82a/602a514) after the round-10 gates; its driver evidence
-# is r8.
-_REVERIFY: dict[str, int] = {
-    # (r11's simhash trio drained: r11 driver rows are green.)
-    # (r12's three entries — revenue_matrix_profile, theilsen_revenue,
-    # covisitation_incremental — drained: all three rotated into the
-    # r12 window and CORRECTNESS_r12.json holds their green rows, so
-    # the entries went inert by the drainage rule and are deleted
-    # here, r13 inherited-state fix: the entry-implies-exempt test
-    # correctly red-flagged the stale inert entries once the driver's
-    # r12 evidence landed.)
-    # Round 13 (optimization): the snapshot now stores its record
-    # digests at write time (operators/delta.py
-    # with_record_digests/delta_check_stored_digests) so the state
-    # branch's scan prunes to (user_id, h1, h2) — result rows proved
-    # identical (oracle green sf0.001/sf0.01 + the stored-digest
-    # equivalence test), but the registered plan changed after its
-    # last driver row (r11).
-    "delta_anti_hash": 12,
-    # Round 13 (optimization): the Jaccard/containment shingle set is
-    # built by gram_table + (id, hash) DISTINCT (whole-stage codegen)
-    # instead of the interpreted word_shingles HOF — measured 4x on
-    # the pair query at sf0.1, rows proved identical (exceptAll both
-    # ways empty + oracle green sf0.001/sf0.01 for all six consumers).
-    # These four registered plans drift (neardup_components's stays
-    # checkpoint-backed); their last driver rows predate the change.
-    "ngram_jaccard_pairs": 12,
-    "ngram_jaccard_materialized": 12,
-    "neardup_pagerank": 12,
-    "containment_pairs": 12,
-    # Round 13 (optimization): minhash_band_table draws grams from
-    # gram_table (duplicates kept — a min aggregate is duplicate-
-    # insensitive, so signatures are bit-identical) instead of the
-    # interpreted array_distinct HOF; oracle green sf0.01 for the
-    # whole candidate family, only this registered plan drifts
-    # (stream_minhash_lsh's is store-read-backed).
-    "minhash_lsh": 12,
-    # Round 13 (optimization): winnowing_candidates' rare-fingerprint
-    # blocking moved from a groupBy+self-join branch (a third full
-    # evaluation of the per-document gram hashing) to a window count
-    # on the pair join's own fp exchange; counts identical (fps rows
-    # distinct per (id, fp)), oracle green sf0.01, ~1.5x.
-    "winnowing_dedup": 12,
-    # After round 13 (simplicity): the digest state store is one flat
-    # (h1, h2) parquet set read with recursiveFileLookup — the stored
-    # Relation loses its `bucket` partition column; the delta rows are
-    # unchanged (oracle green sf0.01). Its latest evidence is r8.
-    "state_digest_update": 13,
-}
-
-
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -506,7 +444,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "source_overlap": q_source_overlap,
         "bigram_perplexity": q_bigram_perplexity,
     }
-    out = {name: all_q[name] for name in _R13_WINDOW}
+    out = {name: all_q[name] for name in _R14_WINDOW}
     out.update((k, v) for k, v in all_q.items() if k not in out)
     return out
 

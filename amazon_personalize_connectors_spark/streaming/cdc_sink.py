@@ -15,7 +15,7 @@ real transactions (Delta/Iceberg MERGE); the batch algebra — and its
 cost, ∝ |snapshot| + |batch| per trigger — is identical. For
 snapshots too large to rewrite per trigger, partition the store by a
 key hash and rewrite only partitions containing batch keys (the
-digest-store pattern in operators/delta.py).
+touched-bucket manifest store in streaming/model_refresh.py).
 
 Replay discipline (code-review r9 — this sink previously recorded no
 epoch state at all): ``stream_apply_changes`` passes the foreachBatch

@@ -113,7 +113,7 @@ def test_run_job_end_to_end_with_delta_loop(spark, tmp_path, config):
 
 
 def test_run_job_digest_state_loop(spark, tmp_path, config):
-    """K5 at scale: bucketed digest state — run-twice idempotence,
+    """K5 at scale: flat (h1, h2) digest state — run-twice idempotence,
     append growth proportional to the delta (not the snapshot), and
     compaction preserving the synced set."""
     from amazon_personalize_connectors_spark.operators.delta import (

@@ -48,7 +48,10 @@ def test_auto_n_bits_formula():
     assert auto_n_bits(100, target_bucket=1024) == 1
     # grows ~log2(N/target): 1M rows, 1k target -> 10 bits
     assert auto_n_bits(1_000_000, target_bucket=1024) == 10
-    assert auto_n_bits(100_000_000, target_bucket=1024) == 17 or True
+    # 100M rows: log2(~97.7k) rounds up to 17, but the default cap
+    # holds the width at 16; a wider cap lets the formula through
+    assert auto_n_bits(100_000_000, target_bucket=1024) == 16
+    assert auto_n_bits(100_000_000, target_bucket=1024, max_bits=32) == 17
     # capped
     assert auto_n_bits(10**12, target_bucket=1, max_bits=16) == 16
     # monotone non-decreasing in N

@@ -1,15 +1,17 @@
 """The executable form-change gate (VERDICT r11 item 2).
 
-Round 11 proved the manual `_REVERIFY` policy missable: commit
-b856482 changed `matrix_profile_ssd`'s plan (new int64 range guard)
-after `revenue_matrix_profile`'s r7 driver row, and nothing forced a
+Round 11 proved a hand-kept re-verify list missable: commit b856482
+changed `matrix_profile_ssd`'s plan (new int64 range guard) after
+`revenue_matrix_profile`'s r7 driver row, and nothing forced a
 ledger touch — the stale driver evidence silently attested a query
 that no longer existed. tools/plan_fingerprints.py makes the
-detection executable; these tests pin:
+detection executable, and PLAN_FP.json's per-query ``since`` round
+makes the re-verification bookkeeping derived; these tests pin:
 
 * coverage/hygiene of the committed PLAN_FP.json (cheap, always on);
-* the gate LOGIC: an unexcused fingerprint drift fails, a
-  reverify-tracked one is excused (pure, always on);
+* the gate LOGIC: every fingerprint drift fails, and `--write`
+  stamps ``since`` only on changed or new fingerprints (pure,
+  always on);
 * the b856482 DEMONSTRATION: an operator-level plan change (a guard
   grafted onto the plan, exactly the r11 class) moves the
   fingerprint even though the query function's source is untouched —
@@ -21,6 +23,7 @@ detection executable; these tests pin:
 
 import json
 import os
+import re
 import sys
 
 import pytest
@@ -39,7 +42,8 @@ def committed():
         "PLAN_FP.json missing — run `python tools/plan_fingerprints.py "
         "--write` and commit it"
     )
-    return json.load(open(pf.FP_PATH))
+    with open(pf.FP_PATH) as f:
+        return json.load(f)
 
 
 def test_fingerprint_coverage(committed):
@@ -55,8 +59,23 @@ def test_fingerprint_coverage(committed):
 def test_no_error_fingerprints(committed):
     """A committed ERR: value means a builder crashed during --write;
     that must never be snapshot as the accepted form."""
-    bad = {k: v for k, v in committed.items() if v.startswith("ERR:")}
+    bad = {k: v for k, v in committed.items() if v["fp"].startswith("ERR:")}
     assert not bad, f"error fingerprints committed: {bad}"
+
+
+def test_committed_entries_are_fp_and_since(committed):
+    """Each PLAN_FP.json value is ``{"fp": <16 hex>, "since": <round>}``
+    with ``since`` no later than the upcoming round (`--write` stamps
+    the current round, never a future one)."""
+    nxt = pf.current_round(ROOT)
+    bad = {
+        k: v
+        for k, v in committed.items()
+        if set(v) != {"fp", "since"}
+        or not re.fullmatch(r"[0-9a-f]{16}", v["fp"])
+        or not (isinstance(v["since"], int) and 0 <= v["since"] <= nxt)
+    }
+    assert not bad, f"malformed PLAN_FP.json entries: {bad}"
 
 
 def test_normalizer_strips_session_noise():
@@ -77,25 +96,28 @@ def test_normalizer_strips_session_noise():
 
 def test_gate_logic_flags_unexcused_drift():
     got = {"a": "1111", "b": "2222", "c": "3333"}
-    committed = {"a": "1111", "b": "0000", "c": "0000"}
-    bad, excused = pf.compare(got, committed, exempt={"c"})
-    assert [line.split(":")[0] for line in bad] == ["b"]
-    assert [line.split(":")[0] for line in excused] == ["c"]
+    committed = {
+        "a": {"fp": "1111", "since": 0},
+        "b": {"fp": "0000", "since": 0},
+        "c": {"fp": "0000", "since": 12},
+    }
+    # every drift fails, whatever its `since` — no exemption path
+    bad = pf.compare(got, committed)
+    assert [line.split(":")[0] for line in bad] == ["b", "c"]
     # a new registration missing from the committed file is a
-    # mismatch too (exempt only while never-driver-verified)
-    bad2, _ = pf.compare({"new": "4444"}, {}, exempt=set())
+    # mismatch too
+    bad2 = pf.compare({"new": "4444"}, {})
     assert bad2 and bad2[0].startswith("new:")
-
-
-def test_reverify_entry_excuses_revenue_matrix_profile():
-    """The live repo state after the r12 fix: revenue_matrix_profile
-    carries an ACTIVE _REVERIFY entry (form changed after its r7
-    row, driver evidence still <= 11), so it must be in the exempt
-    set — the gate demands the entry, not a frozen plan."""
-    exempt = pf.exempt_set()
-    rev = getattr(entry, "_REVERIFY", {})
-    if "revenue_matrix_profile" in rev:
-        assert "revenue_matrix_profile" in exempt
+    # --write stamps the current round on changed and new
+    # fingerprints only; the unchanged one keeps its `since`
+    stamped = pf.stamp({**got, "new": "4444"}, committed, 14)
+    assert stamped == {
+        "a": {"fp": "1111", "since": 0},
+        "b": {"fp": "2222", "since": 14},
+        "c": {"fp": "3333", "since": 14},
+        "new": {"fp": "4444", "since": 14},
+    }
+    assert pf.compare(got, stamped) == []
 
 
 def test_operator_level_plan_change_moves_fingerprint(spark):
@@ -150,6 +172,6 @@ def test_full_registry_fingerprints_match(committed):
         timeout=1800,
     )
     assert proc.returncode == 0, (
-        "form change(s) without a _REVERIFY/_STAGED entry:\n"
+        "form change(s) not recorded in PLAN_FP.json:\n"
         + proc.stdout[-3000:]
     )

@@ -15,7 +15,11 @@ ledger. These tests make the rotation discipline executable:
   than that;
 * every never-driver-verified query is either in the window or
   staged — the round-7 "6 queries silently missed the window" gap
-  class cannot recur.
+  class cannot recur;
+* every query whose form is newer than its latest driver row
+  (PLAN_FP.json ``since``) is in the window, and the plan for the
+  upcoming round holds every such query — so a window that
+  ``--apply`` writes passes these tests without hand edits.
 
 No SparkSession needed: queries() builds a dict of callables.
 """
@@ -85,9 +89,7 @@ def test_window_matches_plan(ledger):
     rnd, window = _active_window()
     staged = set(entry._STAGED)
     plannable = [n for n in names if n not in staged]
-    expected = rw.plan(
-        plannable, latest, 50, reverify=getattr(entry, "_REVERIFY", [])
-    )
+    expected = rw.plan(plannable, latest, 50, rw.since_rounds(REPO))
     assert window == expected, (
         "active window diverges from tools/rotate_window.py plan; "
         "re-run `python tools/rotate_window.py --apply`"
@@ -130,17 +132,39 @@ def test_staged_names_resolve(ledger):
 
 
 def test_reverify_names_resolve_and_are_windowed(ledger):
-    """_REVERIFY (VERDICT r10 item 1) lists queries whose registered
-    form changed after their last driver row: every entry must resolve
-    in the registry AND sit in the active window — a reverify entry
-    left outside the window would carry stale-form evidence forward."""
+    """Every PLAN_FP.json ``since`` entry resolves in the registry, and
+    every query whose registered form is newer than its latest driver
+    row (as of the window's round) sits in the active window — a
+    form-changed query left outside would carry stale-form evidence
+    forward."""
     rw, names, latest = ledger
     rnd, window = _active_window()
-    reverify = list(getattr(entry, "_REVERIFY", []))
-    bad = [n for n in reverify if n not in names]
-    assert not bad, f"_REVERIFY names not in registry: {bad}"
-    unwindowed = [n for n in reverify if n not in window]
-    assert not unwindowed, f"_REVERIFY entries missing from window: {unwindowed}"
+    since = rw.since_rounds(REPO)
+    bad = [n for n in since if n not in names]
+    assert not bad, f"PLAN_FP.json names not in registry: {bad}"
+    unwindowed = sorted(rw.active_reverify(latest, since) - set(window))
+    assert not unwindowed, (
+        f"form-changed queries missing from window: {unwindowed}; "
+        "re-run `python tools/rotate_window.py --apply`"
+    )
+
+
+def test_next_round_plan_holds_every_active_reverify():
+    """The window `tools/rotate_window.py --apply` would write for the
+    upcoming round, planned from the live ledger, holds every query
+    still due for re-verification in that round — so applying it
+    needs no hand edit of a re-verify registry (drained entries leave
+    the pool by themselves once a newer driver row lands)."""
+    rw = _rw()
+    rnd = rw.current_round(REPO)
+    names, latest = rw.classify(REPO, upto=rnd)
+    since = rw.since_rounds(REPO)
+    plannable = [n for n in names if n not in set(entry._STAGED)]
+    chosen = rw.plan(plannable, latest, 50, since)
+    due = rw.active_reverify(latest, since)
+    assert due <= set(chosen), (
+        f"round-{rnd} plan drops re-verify queries: {sorted(due - set(chosen))}"
+    )
 
 
 def test_apply_window_rewrites_block(tmp_path):
@@ -188,11 +212,12 @@ def test_registry_debt_cap(ledger):
 
 
 def test_reverify_drains_on_newer_evidence():
-    """_REVERIFY entries (query -> form-change round) drain DERIVED,
-    not by manual edit (self-review r11): once a query's latest
-    driver evidence exceeds the recorded form-change round, plan()
-    stops ranking it ahead of stale greens — a forgotten cleanup
-    cannot pin window slots forever."""
+    """Re-verification is DERIVED from PLAN_FP.json's ``since`` (the
+    round a query's current form dates from): a query is active while
+    its latest driver evidence round is below ``since`` and drains by
+    itself once a row of round ``since`` or later lands — no registry
+    entry to delete, and a never-verified query ranks as
+    never-verified, not as re-verify."""
     rw = _rw()
     sent = rw.SENTINELS[0]
     names = [sent, "a", "b", "c"]
@@ -202,12 +227,11 @@ def test_reverify_drains_on_newer_evidence():
         "b": (11, "green"),
         "c": (4, "green"),
     }
-    reverify = {"a": 10, "b": 10}  # a: evidence r8 <= 10 -> active;
-    # b: evidence r11 > 10 -> drained
-    assert rw.active_reverify(latest, reverify) == {"a"}
-    chosen = rw.plan(names, latest, window=3, reverify=reverify)
+    since = {sent: 0, "a": 11, "b": 11, "c": 0, "new": 12}
+    # a: evidence r8 < 11 -> active; b: evidence r11 >= 11 -> drained;
+    # new: no driver row -> never-verified pool
+    assert rw.active_reverify(latest, since) == {"a"}
+    chosen = rw.plan(names, latest, window=3, since=since)
     # a (active reverify) outranks the much staler c; drained b falls
     # back to plain oldest-first and misses the 3-slot window
     assert chosen == [sent, "a", "c"]
-    # legacy list form: never drains
-    assert rw.active_reverify(latest, ["b"]) == {"b"}

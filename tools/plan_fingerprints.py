@@ -1,13 +1,14 @@
 #!/usr/bin/env python
 """Per-query plan fingerprints — the executable form-change gate.
 
-VERDICT r11 item 2: the `_REVERIFY` policy (a query whose REGISTERED
-FORM changes after its last driver-green row must re-enter the
-verification window) was manual, and round 11 proved it missable in
-the same round that invented it: commit b856482 changed
-`matrix_profile_ssd`'s plan (a new int64 range guard) after
-`revenue_matrix_profile`'s r7 driver row, and nothing forced a
-ledger touch. This tool makes the detection executable:
+A query whose REGISTERED FORM changes after its last driver-green row
+must re-enter the driver verification window: its old evidence
+attests a query that no longer exists. Round 11 showed a hand-kept
+list of such queries is missable (commit b856482 changed
+`matrix_profile_ssd`'s plan, a new int64 range guard, after
+`revenue_matrix_profile`'s r7 driver row, and nothing forced a ledger
+touch). This tool makes both the detection and the bookkeeping
+mechanical:
 
 * fingerprint(query) = sha256 of
     - the NORMALIZED analyzed logical plan at sf0.001 (expression
@@ -20,27 +21,32 @@ ledger touch. This tool makes the detection executable:
   source-hashing the query function would miss, while staying free
   of physical-planning noise (stats, AQE, codegen ids).
 
-* `--write` computes all fingerprints and writes PLAN_FP.json
-  (committed; regenerated whenever a form change is INTENTIONAL —
-  in the same commit that records the `_REVERIFY` entry).
+* PLAN_FP.json (committed) maps each query to
+  ``{"fp": <fingerprint>, "since": <round>}``: ``since`` is the round
+  from which that form is current. `tools/rotate_window.py` ranks a
+  query for re-verification while its latest driver evidence round is
+  below its ``since``.
 
-* `--check [names...]` recomputes and compares. A mismatch is an
-  ERROR unless the query is exempt because its evidence debt is
-  already tracked: listed in `_REVERIFY` with an ACTIVE entry (the
-  drain rule in tools/rotate_window.py), listed in `_STAGED`, or
-  never driver-verified at all. Exit 1 on any unexcused mismatch —
-  this is what would have caught b856482.
+* `--write [names...]` recomputes fingerprints and stamps
+  ``since = rotate_window.current_round()`` on those that changed or
+  are new; every other entry keeps its ``since``. Without names the
+  file is rewritten for the whole registry (retired queries drop out).
+
+* `--check [names...]` recomputes and compares. Every mismatch fails
+  (exit 1) until the change is recorded with
+  `--write <names>` followed by `tools/rotate_window.py --apply`.
 
 tests/test_plan_fingerprints.py pins the cheap invariants (coverage,
 file hygiene) in the default suite and runs the full recompute gate
 when SPARK_GRAFT_FP_FULL=1 (it is part of the round-close checklist
-next to the oracle sweeps; a full recompute builds 295 analyzed
+next to the oracle sweeps; a full recompute builds 300 analyzed
 plans and takes minutes, not seconds).
 
 Streaming/stateful builders execute real micro-batches when called,
 so fingerprinting ALSO exercises them; their plans are the final
 returned DataFrame's, which is deterministic for the fixed sf0.001
-fixture.
+fixture. Store- and checkpoint-backed queries therefore never drift
+when only their fold code changes.
 """
 
 from __future__ import annotations
@@ -55,6 +61,8 @@ import sys
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 sys.path.insert(0, os.path.join(ROOT, "tools"))
+
+from rotate_window import current_round, read_plan_fp  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_PLAN_SF", "/root/testdata/sf0.001")
 FP_PATH = os.path.join(ROOT, "PLAN_FP.json")
@@ -118,37 +126,28 @@ def compute(names=None) -> dict[str, str]:
     return out
 
 
-def exempt_set() -> set[str]:
-    """Queries whose fingerprint may legitimately differ from the
-    committed file: evidence debt already tracked elsewhere."""
-    from rotate_window import active_reverify, classify
-
-    import __spark_entry__ as e
-
-    names, latest = classify(ROOT)
-    active = active_reverify(latest, getattr(e, "_REVERIFY", {}))
-    staged = set(getattr(e, "_STAGED", []))
-    never = {n for n in names if n not in latest}
-    return active | staged | never
+def stamp(got: dict[str, str], committed: dict[str, dict], rnd: int) -> dict[str, dict]:
+    """PLAN_FP.json entries for the recomputed ``got``: an unchanged
+    fingerprint keeps its committed entry (and ``since``); a changed
+    or new one is current from round ``rnd``."""
+    return {
+        name: committed[name]
+        if committed.get(name, {}).get("fp") == fp
+        else {"fp": fp, "since": rnd}
+        for name, fp in got.items()
+    }
 
 
-def compare(
-    got: dict[str, str], committed: dict[str, str], exempt: set[str]
-) -> tuple[list[str], list[str]]:
-    """Pure gate logic: (unexcused mismatches, reverify-tracked ones).
-    A query absent from the committed file counts as a mismatch too —
-    a new registration must ship its fingerprint in the same commit
-    (it is exempt only while never-driver-verified, which
-    exempt_set() already grants)."""
-    bad, excused = [], []
-    for name, fp in got.items():
-        want = committed.get(name)
-        if fp == want:
-            continue
-        (excused if name in exempt else bad).append(
-            f"{name}: committed={want} recomputed={fp}"
-        )
-    return bad, excused
+def compare(got: dict[str, str], committed: dict[str, dict]) -> list[str]:
+    """Pure gate logic: every query whose recomputed fingerprint
+    differs from the committed one. A query absent from the committed
+    file counts too — a new registration ships its fingerprint in the
+    same commit."""
+    return [
+        f"{name}: committed={committed.get(name, {}).get('fp')} recomputed={fp}"
+        for name, fp in got.items()
+        if committed.get(name, {}).get("fp") != fp
+    ]
 
 
 def main() -> None:
@@ -161,34 +160,29 @@ def main() -> None:
         ap.error("exactly one of --write / --check")
     names = set(args.names) or None
     got = compute(names)
+    committed = read_plan_fp(ROOT)
     if args.write:
-        committed = {}
-        if names and os.path.exists(FP_PATH):
-            committed = json.load(open(FP_PATH))
-        committed.update(got)
+        entries = stamp(got, committed, current_round(ROOT))
+        if names:
+            entries = {**committed, **entries}
         with open(FP_PATH, "w") as f:
-            json.dump(dict(sorted(committed.items())), f, indent=1)
-        print(f"wrote {len(committed)} fingerprints -> {FP_PATH}")
+            json.dump(dict(sorted(entries.items())), f, indent=1)
+        print(f"wrote {len(entries)} fingerprints -> {FP_PATH}")
         return
-    committed = json.load(open(FP_PATH))
-    bad, excused = compare(got, committed, exempt_set())
-    for line in excused:
-        print(f"[reverify-tracked] {line}")
+    bad = compare(got, committed)
     if bad:
-        print(
-            f"\n{len(bad)} FORM CHANGE(S) WITHOUT A _REVERIFY/_STAGED "
-            "ENTRY (VERDICT r11 item 2 gate):"
-        )
+        print(f"\n{len(bad)} FORM CHANGE(S) against PLAN_FP.json:")
         for line in bad:
             print(f"  {line}")
+        changed = " ".join(line.split(":")[0] for line in bad)
         print(
-            "\nEither revert the plan change, or record it: add the "
-            "query to __spark_entry__._REVERIFY (form-change round = "
-            "current round - 1) and re-run `tools/plan_fingerprints.py "
-            "--write` in the SAME commit."
+            "\nEither revert the plan change, or record it in the SAME "
+            "commit (stamps `since` and re-plans the driver window):\n"
+            f"  python tools/plan_fingerprints.py --write {changed}\n"
+            "  python tools/rotate_window.py --apply"
         )
         sys.exit(1)
-    print(f"OK: {len(got)} fingerprints match ({len(excused)} reverify-tracked)")
+    print(f"OK: {len(got)} fingerprints match")
 
 
 if __name__ == "__main__":

@@ -8,14 +8,29 @@ latest driver evidence, and prints a recommended window for the next
 round, prioritized:
 
 1. queries whose latest driver row is RED (regressions — must re-enter)
-2. queries never driver-verified (new operators)
-3. queries whose green row is oldest (stalest evidence first)
+2. queries whose registered form is newer than their latest driver row
+   (re-verification: the row attests a form that no longer exists)
+3. queries never driver-verified (new operators)
+4. queries whose green row is oldest (stalest evidence first)
 
 plus a handful of §2 sentinels that should stay in every window.
-Apply the plan by reordering the queries() dict (keep entries outside
-the window in any order) and update VERIFIED.md.
 
-Usage: python tools/rotate_window.py [--window 50]
+Re-verification is derived, not kept by hand: PLAN_FP.json records
+per query ``{"fp": ..., "since": N}``, where ``since`` is the round
+from which that plan fingerprint is current (stamped by
+``tools/plan_fingerprints.py --write`` on changed or new fingerprints
+only). A query is active for re-verification while its latest driver
+evidence round is below its ``since``; the first driver row of round
+``since`` or later drains it.
+
+``--apply`` rewrites the ``_R{N}_WINDOW`` list in __spark_entry__.py
+(which reorders queries()); the prose comment above it and VERIFIED.md
+are updated by hand. A plan-changing commit therefore runs
+
+    python tools/plan_fingerprints.py --write <names>
+    python tools/rotate_window.py --apply
+
+Usage: python tools/rotate_window.py [--window 50] [--apply]
 """
 
 from __future__ import annotations
@@ -61,7 +76,8 @@ def classify(repo_root: str, upto: int | None = None):
         rnum = int(re.search(r"r(\d+)", os.path.basename(path)).group(1))
         if upto is not None and rnum >= upto:
             continue
-        data = json.load(open(path))
+        with open(path) as f:
+            data = json.load(f)
         for name, row in data.items():
             if name not in names or row is None:
                 continue
@@ -81,33 +97,34 @@ def classify(repo_root: str, upto: int | None = None):
     return names, latest
 
 
-def active_reverify(latest, reverify) -> set:
-    """The still-active subset of the _REVERIFY pool: dict entries
-    drain once the query's latest evidence round exceeds the recorded
-    form-change round; legacy list entries never drain."""
-    if isinstance(reverify, dict):
-        return {
-            n
-            for n, changed in reverify.items()
-            if latest.get(n, (0, ""))[0] <= changed
-        }
-    return set(reverify)
+def read_plan_fp(repo_root: str) -> dict[str, dict]:
+    """PLAN_FP.json: query -> {"fp": its plan fingerprint, "since":
+    the round from which that form is current}; {} when absent."""
+    path = os.path.join(repo_root, "PLAN_FP.json")
+    if not os.path.exists(path):
+        return {}
+    with open(path) as f:
+        return json.load(f)
 
 
-def plan(names, latest, window: int, reverify=()):
+def since_rounds(repo_root: str) -> dict[str, int]:
+    return {n: v["since"] for n, v in read_plan_fp(repo_root).items()}
+
+
+def active_reverify(latest, since) -> set:
+    """Driver-verified queries whose latest evidence round is below
+    the round their current form dates from (a query with no driver
+    row ranks as never-verified instead)."""
+    return {n for n, s in since.items() if n in latest and latest[n][0] < s}
+
+
+def plan(names, latest, window: int, since):
     red = [n for n in names if latest.get(n, (0, ""))[1] == "red"]
     red_set = set(red)
-    # re-verification pool (VERDICT r10 item 1): queries whose
-    # REGISTERED FORM changed after their last driver-green row
-    # (__spark_entry__._REVERIFY maps query -> the round the change
-    # landed after). Their old evidence attests a query that no
-    # longer exists, so they rank just below red — ahead of
-    # never-verified. An entry DRAINS automatically once the query's
-    # latest evidence round exceeds its form-change round — a
-    # forgotten manual cleanup cannot pin window slots (self-review
-    # r11; the legacy list form never drains and stays supported for
-    # the apply-regression test fixtures).
-    active = active_reverify(latest, reverify)
+    # re-verification pool: the old evidence of a form-changed query
+    # attests a query that no longer exists, so it ranks just below
+    # red — ahead of never-verified — until a newer driver row lands
+    active = active_reverify(latest, since)
     rev = [n for n in names if n in active and n not in red_set]
     never = [n for n in names if n not in latest]
     # rows-only evidence (historical `err=no_oracle` rows that have
@@ -153,7 +170,8 @@ def apply_window(repo_root: str, chosen: list[str], rnd: int) -> str:
     the builder's job to update) and retarget the queries() reorder
     line. Returns the new variable name."""
     path = os.path.join(repo_root, "__spark_entry__.py")
-    src = open(path).read()
+    with open(path) as f:
+        src = f.read()
     m = re.search(r"_R(\d+)_WINDOW = \[[^\]]*\]", src, re.S)
     if not m:
         raise SystemExit("no _R{N}_WINDOW block found")
@@ -162,7 +180,8 @@ def apply_window(repo_root: str, chosen: list[str], rnd: int) -> str:
     src = src[: m.start()] + f"{new_name} = [\n{body}\n]" + src[m.end():]
     src = re.sub(r"_R\d+_WINDOW\)", f"{new_name})", src)
     src = re.sub(r"for name in _R\d+_WINDOW", f"for name in {new_name}", src)
-    open(path, "w").write(src)
+    with open(path, "w") as f:
+        f.write(src)
     return new_name
 
 
@@ -187,14 +206,9 @@ def main():
             f"> {MAX_STALENESS_ROUNDS} (policy: VERIFIED.md). Retire "
             f"queries or grow the driver window before adding more."
         )
-    import __spark_entry__ as e
-
-    reverify = getattr(e, "_REVERIFY", {})
-    chosen = plan(names, latest, args.window, reverify=reverify)
-    active = active_reverify(latest, reverify)
-    drained = [n for n in reverify if n not in active]
-    if drained:
-        print(f"# reverify drained (newer evidence; safe to delete): {drained}")
+    since = since_rounds(repo_root)
+    chosen = plan(names, latest, args.window, since)
+    active = active_reverify(latest, since)
     print(f"# proposed window ({len(chosen)} of {len(names)} queries)")
     for n in chosen:
         rnum, state = latest.get(n, (None, "never"))
