@@ -56,6 +56,7 @@ from amazon_personalize_connectors_spark.functions.similarity import (
 )
 from amazon_personalize_connectors_spark.streaming.epoch_store import (
     bucket_paths as _bucket_paths,
+    commit_carried,
     commit_version,
     current_version as _current_version,
     drain_into_store,
@@ -64,7 +65,6 @@ from amazon_personalize_connectors_spark.streaming.epoch_store import (
     prune_versions as _prune_versions,
     read_buckets as _read_buckets,
     read_manifest,
-    read_meta,
     run_concurrently,
     write_atomic,
 )
@@ -465,14 +465,7 @@ def compact_store(spark: SparkSession, store_path: str) -> None:
     }
     os.makedirs(out, exist_ok=True)
     write_atomic(_manifest_path(store_path, version), json.dumps(new_man))
-    commit_version(
-        store_path,
-        version,
-        None,
-        prev,
-        read_meta(store_path, prev)["last_epoch"],
-        token=read_meta(store_path, prev).get("token"),
-    )
+    commit_carried(store_path, version, prev)
     # GRACE-WINDOW pruning (ADVICE r8): a concurrent reader that
     # resolved version ``prev`` just before the pointer flip is still
     # reading the bucket paths PREV'S MANIFEST references (which, for

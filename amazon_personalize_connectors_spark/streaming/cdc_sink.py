@@ -17,25 +17,23 @@ snapshots too large to rewrite per trigger, partition the store by a
 key hash and rewrite only partitions containing batch keys (the
 touched-bucket manifest store in streaming/model_refresh.py).
 
-Replay discipline (code-review r9 — this sink previously recorded no
-epoch state at all): ``stream_apply_changes`` passes the foreachBatch
-epoch and its checkpoint location; a ``_CDC_META.json`` sidecar pins
-(last_epoch, prev, token). A replayed epoch — including after the
-pointer flip — re-merges onto its recorded PRIOR snapshot and
-overwrites its own version (idempotent: apply_changes is a pure
-function of prior + batch); a stale epoch, or ANY epoch from a
-different checkpoint (whose re-delivered batches carry different
-data), is refused instead of silently resurrecting old CDC ops onto
-newer state. The token is ``epoch_store.checkpoint_identity`` — a
-nonce file inside the checkpoint dir, so a deleted-and-recreated
-checkpoint reads as foreign (ADVICE r9) — not the dir path; an
-upgrade/re-home goes through the explicit ``adopt_cdc_store``.
-Direct ``apply_batch`` calls with no epoch stay guard-less on
-un-owned stores; on a stream-owned store they require
-``allow_stream_owned=True`` and re-point ``_CDC_META.prev`` at the
-version they write so a later retry of the last epoch merges onto
-the true prior snapshot instead of discarding the backfill wholesale
-(ADVICE r9; overlapping-key caveat in the apply_batch docstring).
+Replay discipline: the store is an ``epoch_store`` client like every
+other pointer-flip store here. ``stream_apply_changes`` passes the
+foreachBatch epoch and the checkpoint identity, and ``plan_fold``
+classifies it against the committed version's ``_META.json``: a
+replayed epoch, including after the pointer flip, re-merges onto its
+recorded prior snapshot and overwrites its own version (idempotent:
+apply_changes is a pure function of prior + batch); a stale epoch, or
+ANY epoch from a different checkpoint (whose re-delivered batches
+carry different data), is refused instead of silently resurrecting
+old CDC ops onto newer state. Re-homing a store to a new checkpoint
+goes through ``epoch_store.adopt_store``. Direct ``apply_batch``
+calls with no epoch (backfills, tests) write the next version with
+the prior meta carried forward, and are refused on a stream-owned
+store: a retry of the stream's last epoch would re-merge onto its
+recorded prior and drop the backfill. A store whose committed version
+has no ``_META.json`` predates this format and is refused; the error
+names the way out.
 
 In-batch ordering: a DataFrame micro-batch carries NO row order, so
 when several ops hit one key in one batch the collapse needs an
@@ -49,32 +47,21 @@ systematically favors upserts over deletes ('u' > 'd'); supply
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from amazon_personalize_connectors_spark.streaming.epoch_store import (
-    _version_file,
-    checkpoint_identity,
+    commit_carried,
+    commit_version,
     current_version,
     drain_into_store,
+    has_meta,
+    plan_fold,
     prune_versions,
-    write_atomic,
+    read_meta,
 )
-
-
-def _cdc_meta_path(store_path: str) -> str:
-    return os.path.join(store_path, "_CDC_META.json")
-
-
-def _read_cdc_meta(store_path: str) -> dict:
-    p = _cdc_meta_path(store_path)
-    if not os.path.exists(p):
-        return {"last_epoch": None, "prev": None, "token": None}
-    with open(p) as f:
-        return json.load(f)
 
 
 def _snapshot_at(
@@ -98,7 +85,6 @@ def apply_batch(
     epoch_id: int | None = None,
     checkpoint_token: str | None = None,
     seq_col: str | None = None,
-    allow_stream_owned: bool = False,
 ) -> None:
     """Apply one micro-batch to the store (the foreachBatch body).
 
@@ -106,87 +92,43 @@ def apply_batch(
     'delete' evict their key. In-batch duplicates collapse by the
     LAST event when ``seq_col`` orders them, else by the documented
     deterministic (op, values) max — see module docstring. With
-    ``epoch_id`` (the streaming path) the replay/fresh-checkpoint
-    guards engage; without it the call is guard-less (backfills,
-    tests).
-
-    Guard-less writes onto a STREAM-OWNED store (meta present) must
-    opt in with ``allow_stream_owned=True`` and carry a caveat
-    (code-review r10): the write re-points ``_CDC_META.prev`` at its
-    own version so a later Spark retry of the last epoch merges onto
-    the true prior snapshot — which preserves the backfill EXCEPT on
-    keys the retried epoch itself touches, where the epoch's value is
-    re-applied and wins (a key it upserted reverts to its value; a
-    key it deleted is re-deleted even if the backfill re-added it).
-    Backfill disjoint keys, or pause/drain the stream first, when
-    that matters."""
+    ``epoch_id`` (the streaming path) the fold is planned by
+    ``epoch_store.plan_fold``; without it the call writes the next
+    version guard-less (backfills, tests), and is refused on a
+    stream-owned store."""
     from amazon_personalize_connectors_spark.operators.cdc import apply_changes
 
-    spark = batch.sparkSession
-    meta = _read_cdc_meta(store_path)
-    if (
-        epoch_id is None
-        and meta.get("last_epoch") is not None
-        and not allow_stream_owned
-    ):
+    cur = current_version(store_path)
+    if cur is not None and not has_meta(store_path, cur):
+        raise ValueError(
+            f"v{cur}, the committed version of the cdc store at "
+            f"{store_path!r}, has no _META.json: the store predates "
+            f"per-version epoch metadata. If a stream wrote it, writing "
+            f"here would drop its token and epoch guard: let its last "
+            f"drain finish on the release that wrote it, then rebuild "
+            f"from read_snapshot() into a new store path. If only "
+            f"guard-less apply_batch calls wrote it, stamp it in place "
+            f"with epoch_store.commit_carried({store_path!r}, {cur}, None)."
+        )
+    if epoch_id is not None:
+        version, prior, _ = plan_fold(store_path, epoch_id, checkpoint_token)
+    elif read_meta(store_path, cur)["last_epoch"] is not None:
         raise ValueError(
             f"guard-less apply_batch onto the stream-owned cdc store "
-            f"at {store_path!r}: pass allow_stream_owned=True to "
-            f"backfill it (see the docstring caveat — a retry of the "
-            f"last epoch re-applies its batch, which wins on "
-            f"overlapping keys), or drain/stop the owning stream "
-            f"first."
+            f"at {store_path!r}: a retry of the stream's last epoch "
+            f"re-merges onto its recorded prior snapshot and would "
+            f"drop this write. Feed the rows through the owning "
+            f"stream, or rebuild into a new store path."
         )
-    cur_version = current_version(store_path)
-    prior_version: int | None = cur_version
-    if epoch_id is not None and cur_version is not None:
-        last = meta.get("last_epoch")
-        stored_token = meta.get("token")
-        if (
-            checkpoint_token is not None
-            and stored_token is not None
-            and checkpoint_token != stored_token
-        ):
-            raise ValueError(
-                f"stream checkpoint {checkpoint_token!r} does not own "
-                f"the cdc store at {store_path!r} (committed by "
-                f"{stored_token!r}): a fresh or foreign checkpoint "
-                f"re-delivers CDC batches that would silently replay "
-                f"stale ops onto newer state. Use a new store path; "
-                f"or, if this checkpoint legitimately owns the store "
-                f"(pre-nonce meta, or an intentional re-home), run "
-                f"cdc_sink.adopt_cdc_store(store, checkpoint_dir) "
-                f"first."
-            )
-        if last is not None:
-            e = int(epoch_id)
-            if e < last:
-                raise ValueError(
-                    f"epoch {e} is behind the cdc store's last applied "
-                    f"epoch {last} (store {store_path!r}): a fresh "
-                    f"streaming checkpoint cannot be pointed at an "
-                    f"existing store — its replayed batches would "
-                    f"resurrect deleted keys and revert updates. Use a "
-                    f"new store path when restarting from scratch."
-                )
-            if e == last:
-                # retry after the pointer flip: re-merge onto the
-                # RECORDED prior snapshot and overwrite our own version
-                # (idempotent — same prior, same batch, same merge)
-                prior_version = meta.get("prev")
+    else:
+        version, prior = (0 if cur is None else cur + 1), cur
 
-    value_cols = [
-        c
-        for c in batch.columns
-        if c not in key_cols and c != op_col and c != seq_col
-    ]
+    value_cols = [c for c in batch.columns
+                  if c not in (*key_cols, op_col, seq_col)]
     # collapse in-batch duplicates: seq-ordered last event when the
     # source provides one, else the deterministic (op, values) max
-    lead = (
-        [F.col(seq_col)]
-        if seq_col
-        else []
-    ) + ([F.col(op_col)] if op_col else [F.lit("upsert").alias("_op")])
+    lead = ([F.col(seq_col)] if seq_col else []) + (
+        [F.col(op_col)] if op_col else [F.lit("upsert").alias("_op")])
     collapsed = (
         batch.groupBy(*key_cols)
         .agg(
@@ -200,61 +142,24 @@ def apply_batch(
             *[F.col(f"_m.{c}").alias(c) for c in value_cols],
         )
     )
-    current = _snapshot_at(spark, store_path, prior_version)
+    current = _snapshot_at(batch.sparkSession, store_path, prior)
     if current is None:
         # null-safe: a NULL op is an upsert, never a silent delete
         # (same rule as operators/cdc.py apply_changes)
         merged = collapsed.where(~F.col("op").eqNullSafe("delete")).select(
             *key_cols, *value_cols
         )
-        version = 0 if cur_version is None else cur_version
     else:
-        version = (
-            cur_version
-            if prior_version != cur_version  # retry: overwrite own dir
-            else cur_version + 1
-        )
         merged = apply_changes(current, collapsed, key_cols, op_col="op")
     out = os.path.join(store_path, f"v{version}")
     merged.write.mode("overwrite").parquet(out)
     # meta before pointer; pointer flip LAST via atomic rename —
     # readers only ever see a complete version
-    new_meta: dict | None = None
-    if epoch_id is not None:
-        new_meta = {
-            "last_epoch": int(epoch_id),
-            "prev": prior_version,
-            "token": checkpoint_token,
-        }
-    elif meta.get("last_epoch") is not None:
-        # opted-in backfill onto a STREAM-OWNED store (ADVICE r9):
-        # advancing _VERSION while leaving _CDC_META untouched would
-        # make a later retry of epoch == last_epoch re-merge onto the
-        # now-stale recorded prev, silently discarding this backfill
-        # wholesale. Re-point prev at the version this write produced:
-        # the retry then re-applies its batch onto the true prior
-        # snapshot — preserving the backfill on all keys the epoch
-        # didn't touch; on OVERLAPPING keys the re-applied epoch wins
-        # (the documented allow_stream_owned caveat).
-        new_meta = {
-            "last_epoch": meta["last_epoch"],
-            "prev": version,
-            "token": meta.get("token"),
-        }
-    if new_meta is not None:
-        write_atomic(_cdc_meta_path(store_path), json.dumps(new_meta))
-    write_atomic(_version_file(store_path), str(version))
-
-
-def adopt_cdc_store(store_path: str, checkpoint_dir: str) -> None:
-    """Deliberately transfer cdc-store ownership to ``checkpoint_dir``
-    (the _CDC_META twin of ``epoch_store.adopt_store`` — see its
-    docstring for why migration is explicit, never automatic)."""
-    meta = _read_cdc_meta(store_path)
-    if meta.get("last_epoch") is None:
-        return  # not stream-owned yet — first epoch stamps ownership
-    meta["token"] = checkpoint_identity(checkpoint_dir)
-    write_atomic(_cdc_meta_path(store_path), json.dumps(meta))
+    if epoch_id is None:
+        commit_carried(store_path, version, prior)
+    else:
+        e = int(epoch_id)
+        commit_version(store_path, version, e, prior, e, checkpoint_token)
 
 
 def prune_snapshots(store_path: str, keep_last: int = 2) -> None:
@@ -263,25 +168,24 @@ def prune_snapshots(store_path: str, keep_last: int = 2) -> None:
     snapshot copy, so a long-lived stream otherwise grows disk by
     |snapshot| per trigger forever). keep_last >= 2 is both reader
     grace AND a retry-correctness requirement (ADVICE r9): the
-    ``_CDC_META`` 'prev' snapshot is what a Spark retry of the last
-    epoch re-merges onto — deleting it wedges the stream on a missing
-    parquet path. Belt-and-braces, the meta's ``prev`` (and the
-    current pointer) are ALWAYS added to the live set even if
+    committed version's 'prev' snapshot is what a Spark retry of the
+    last epoch re-merges onto — deleting it wedges the stream on a
+    missing parquet path. Belt-and-braces, the meta's ``prev`` (and
+    the current pointer) are ALWAYS added to the live set even if
     ``keep_last`` arithmetic would drop them."""
     if keep_last < 2:
         raise ValueError(
-            "keep_last must be >= 2: the _CDC_META 'prev' snapshot is "
-            "required by the retry-after-flip path, not just reader "
-            "grace"
+            "keep_last must be >= 2: the committed version's 'prev' "
+            "snapshot is required by the retry-after-flip path, not "
+            "just reader grace"
         )
     cur = current_version(store_path)
     if cur is None:
         return
     live = {cur - i for i in range(keep_last)}
-    live.add(cur)
-    prev = _read_cdc_meta(store_path).get("prev")
+    prev = read_meta(store_path, cur)["prev"]
     if prev is not None:
-        live.add(int(prev))
+        live.add(prev)
     prune_versions(store_path, live)
 
 

@@ -23,7 +23,12 @@ meta:
 * ``e == last_epoch``  → **retry after flip**: overwrite the
   committed version's own directory, re-reading prior state from its
   recorded ``prev`` (immutable — committed by an earlier epoch), so
-  the fold is idempotent no matter how many times it replays.
+  the fold is idempotent no matter how many times it replays. The
+  pointer goes back to ``prev`` first (un-commit, then re-commit): a
+  rewrite that fails part-way — ``mode("overwrite")`` deletes the
+  directory, ``_META.json`` included, before it writes — leaves
+  ``prev`` authoritative, and the next retry of ``e`` advances from
+  it to ``prev + 1``, the same version.
 * ``e > last_epoch``   → normal advance: prior state is the committed
   version, the fold writes ``committed + 1``. Gaps are legal (an
   empty micro-batch may consume an epoch without folding).
@@ -37,9 +42,10 @@ meta:
   scratch.
 
 Version numbers are a plain chain (``committed + 1``) rather than the
-epoch itself so that non-epoch writers — ``model_refresh.
-compact_store`` — can insert versions (``epoch: null``) without ever
-colliding with a future epoch's directory.
+epoch itself so that non-epoch writers — the ``compact_store``s and
+``cdc_sink``'s guard-less writes, all through ``commit_carried`` —
+can insert versions (``epoch: null``) without ever colliding with a
+future epoch's directory.
 
 The epoch heuristic alone has one hole (code-review r9): a store whose
 last applied epoch is 0 (a single-batch AvailableNow drain — common)
@@ -67,11 +73,12 @@ stores, ann_monitor and model_refresh), and ``run_concurrently`` (the
 overlapped writes a fold makes before it commits).
 
 Known narrow window (documented, not closed): a retry after a
-crash-between-flip-and-checkpoint-commit overwrites the POINTED-AT
-version directory in place; a reader resolving the pointer during
-that rewrite can see a partial version. Serving readers should prefer
-compacted versions (whose grace window guarantees completeness) when
-this matters.
+crash-between-flip-and-checkpoint-commit rewrites the committed
+version directory in place. Readers that resolve the pointer during
+the rewrite see ``prev``; a reader that resolved it just BEFORE the
+retry began can still find that directory half-written. Serving
+readers should prefer compacted versions (whose grace window
+guarantees completeness) when this matters.
 """
 
 from __future__ import annotations
@@ -218,8 +225,23 @@ def current_version(store_path: str) -> int | None:
         return int(f.read().strip())
 
 
+def _point_at(store_path: str, version: int | None) -> None:
+    """Make ``version`` the committed one; None un-commits the store."""
+    if version is None:
+        os.remove(_version_file(store_path))
+    else:
+        write_atomic(_version_file(store_path), str(version))
+
+
 def _meta_path(store_path: str, version: int) -> str:
     return os.path.join(store_path, f"v{version}", "_META.json")
+
+
+def has_meta(store_path: str, version: int) -> bool:
+    """Whether ``v{version}`` carries a ``_META.json`` sidecar: every
+    commit writes one, so a committed version without it predates
+    epoch metadata."""
+    return os.path.exists(_meta_path(store_path, version))
 
 
 def read_meta(store_path: str, version: int | None) -> dict:
@@ -244,7 +266,9 @@ def plan_fold(
     Raises ValueError when the epoch is behind the last applied one,
     or when ``token`` (the stream's checkpoint identity) differs from
     the committed one (fresh-checkpoint-against-old-store corruption
-    guards — see module docstring)."""
+    guards — see module docstring). A retry after flip also points
+    the store back at the version's ``prev`` until the caller's
+    ``commit_version`` re-commits it."""
     e = int(epoch_id)
     cur = current_version(store_path)
     meta = read_meta(store_path, cur)
@@ -263,7 +287,9 @@ def plan_fold(
             f"meta, or an intentional re-home), run "
             f"epoch_store.adopt_store(store, checkpoint_dir) first."
         )
-    if last is None:  # legacy store — cannot distinguish retry; advance
+    if last is None and not has_meta(store_path, cur):
+        # legacy store — cannot distinguish retry; advance (a sidecar
+        # with last_epoch None only means non-epoch writes so far)
         warnings.warn(
             f"legacy epoch-less store at {store_path!r}: a micro-batch "
             f"replayed after its pointer flip cannot be detected and "
@@ -272,6 +298,7 @@ def plan_fold(
             RuntimeWarning,
             stacklevel=2,
         )
+    if last is None or e > last:
         return cur + 1, cur, meta
     if e == last:
         if meta["epoch"] != e:
@@ -288,9 +315,8 @@ def plan_fold(
                 f"committed drains. Restore a pre-compaction copy or "
                 f"start a new store."
             )
+        _point_at(store_path, meta["prev"])
         return cur, meta["prev"], meta
-    if e > last:
-        return cur + 1, cur, meta
     raise ValueError(
         f"epoch {e} is behind the store's last applied epoch {last} "
         f"(store {store_path!r}): a fresh streaming checkpoint cannot "
@@ -318,7 +344,19 @@ def commit_version(
         json.dumps({"epoch": epoch_id, "prev": prior_version,
                     "last_epoch": last_epoch, "token": token}),
     )
-    write_atomic(_version_file(store_path), str(version))
+    _point_at(store_path, version)
+
+
+def commit_carried(
+    store_path: str, version: int, prior_version: int | None
+) -> None:
+    """Commit a non-epoch write (compaction, guard-less backfill):
+    ``epoch`` None, with ``last_epoch`` and ``token`` carried forward
+    from ``prior_version`` so the stream's next fold still validates
+    replay, stale epochs and ownership against them."""
+    meta = read_meta(store_path, prior_version)
+    commit_version(store_path, version, None, prior_version,
+                   meta["last_epoch"], token=meta.get("token"))
 
 
 def prune_versions(store_path: str, live: set) -> None:

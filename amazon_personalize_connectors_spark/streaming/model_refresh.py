@@ -53,6 +53,7 @@ from amazon_personalize_connectors_spark.operators.recsys import (
 )
 from amazon_personalize_connectors_spark.streaming.epoch_store import (
     bucket_paths as _bucket_paths,
+    commit_carried,
     commit_version,
     current_version as _current_version,
     drain_into_store,
@@ -61,7 +62,6 @@ from amazon_personalize_connectors_spark.streaming.epoch_store import (
     prune_versions as _prune_versions,
     read_buckets as _read_buckets,
     read_manifest,
-    read_meta,
     run_concurrently,
     write_atomic,
 )
@@ -100,7 +100,16 @@ def apply_interactions_batch(
     epoch — including replay AFTER the pointer flip — re-reads the
     prior version's manifest and state and overwrites its own version
     directory, so increments are never double-merged; a stale epoch
-    (fresh checkpoint against an old store) is refused."""
+    (fresh checkpoint against an old store) is refused.
+
+    Precondition: ``batch`` must be replayable, i.e. recomputing it
+    yields the same rows. The batch and its increments are pinned
+    with ``persist()``, not a checkpoint, so an evicted cache block
+    is recomputed from the source: a foreachBatch micro-batch of a
+    file or Kafka source re-reads its checkpointed offsets, but a
+    DataFrame over a one-shot or nondeterministic source could yield
+    other rows, and the fold's item state and pair increments would
+    then disagree."""
     spark = batch.sparkSession
     # the batch is read several times (bucket probe, increments,
     # item-state union) and the per-user delta aggregation inside
@@ -213,7 +222,8 @@ def refresh_from_stream(
 ) -> None:
     """Drain an interaction stream (Trigger.AvailableNow), folding
     every micro-batch into the co-visitation model at ``store_path``.
-    ``stream`` columns: (u, i)."""
+    ``stream`` columns: (u, i), from a replayable source (files,
+    Kafka) — see the precondition on ``apply_interactions_batch``."""
     drain_into_store(
         stream, store_path, checkpoint_dir,
         lambda b, e, token: apply_interactions_batch(
@@ -306,11 +316,7 @@ def compact_store(spark: SparkSession, store_path: str) -> None:
     # compaction is a non-epoch writer: version chains past the epoch
     # counter (epoch None) while carrying last_epoch forward so the
     # stream's next fold still validates against it
-    commit_version(
-        store_path, version, None, prev,
-        read_meta(store_path, prev)["last_epoch"],
-        token=read_meta(store_path, prev).get("token"),
-    )
+    commit_carried(store_path, version, prev)
     # grace-window pruning (ADVICE r8): keep prev's whole reachable
     # set for in-flight readers; prune everything older
     grace_live = {prev, version} | {

@@ -43,10 +43,11 @@ from amazon_personalize_connectors_spark.functions.dedup import (
     minhash_band_table,
 )
 from amazon_personalize_connectors_spark.streaming.epoch_store import (
-    _meta_path,
+    commit_carried,
     commit_version,
     current_version as _current_version,
     drain_into_store,
+    has_meta,
     plan_fold,
     prune_versions as _prune_versions,
     read_meta,
@@ -79,7 +80,7 @@ def _live_versions(store_path: str, upto: int | None) -> list[int]:
     while v is not None and v >= 0:
         live.append(v)
         is_compaction = (
-            os.path.exists(_meta_path(store_path, v))
+            has_meta(store_path, v)
             and read_meta(store_path, v)["epoch"] is None
         )
         if is_compaction:
@@ -204,7 +205,6 @@ def compact_store(spark: SparkSession, store_path: str) -> None:
     cur = _current_version(store_path)
     if cur is None:
         return
-    last_epoch = read_meta(store_path, cur)["last_epoch"]
     live = _live_versions(store_path, cur)
     version = cur + 1
     out = os.path.join(store_path, f"v{version}")
@@ -214,8 +214,7 @@ def compact_store(spark: SparkSession, store_path: str) -> None:
     pairs.groupBy("id_a", "id_b").agg(
         F.sum("n_shared_bands").cast("bigint").alias("n_shared_bands")
     ).write.mode("overwrite").parquet(os.path.join(out, "pairs"))
-    commit_version(store_path, version, None, cur, last_epoch,
-                   token=read_meta(store_path, cur).get("token"))
+    commit_carried(store_path, version, cur)
     # grace-window pruning (ADVICE r8): the pre-flip reader's
     # reachable set survives; everything below the previous
     # compaction goes

@@ -356,7 +356,7 @@ def test_fresh_checkpoint_refused_on_cdc_store(spark, tmp_path):
     before = {(r.k, r.v) for r in read_snapshot(spark, store).collect()}
 
     stream2 = spark.readStream.schema(schema).parquet(landing)
-    with _pytest.raises(Exception, match="does not own the cdc store"):
+    with _pytest.raises(Exception, match="does not own the store"):
         stream_apply_changes(
             stream2, store, ["k"], str(tmp_path / "ckB"), op_col="op"
         )
@@ -420,15 +420,15 @@ def test_recreated_checkpoint_at_same_path_refused(spark, tmp_path):
         [(9, "upsert", "z")], schema
     ).write.mode("overwrite").parquet(landing)
     stream2 = spark.readStream.schema(schema).parquet(landing)
-    with _pytest.raises(Exception, match="does not own the cdc store"):
+    with _pytest.raises(Exception, match="does not own the store"):
         stream_apply_changes(stream2, store, ["k"], ckpt, op_col="op")
     # state untouched — NOT replaced by the one new batch
     assert {(r.k, r.v) for r in read_snapshot(spark, store).collect()} == before
 
 
 def test_prune_snapshots_rejects_keep_last_1(spark, tmp_path):
-    """ADVICE r9: keep_last=1 would delete the _CDC_META 'prev'
-    snapshot that a retry of the last epoch must re-read — a
+    """ADVICE r9: keep_last=1 would delete the committed version's
+    'prev' snapshot that a retry of the last epoch must re-read — a
     retry-correctness requirement, not just reader grace."""
     import pytest as _pytest
 
@@ -475,11 +475,11 @@ def test_retry_after_prune_still_finds_prev(spark, tmp_path):
 
 
 def test_backfill_on_stream_owned_store_survives_retry(spark, tmp_path):
-    """ADVICE r9: a guard-less apply_batch (epoch_id=None, backfill)
-    on a stream-owned store must re-point _CDC_META.prev at its own
-    version; a later Spark retry of the last epoch then merges onto
-    the true prior snapshot instead of silently discarding the
-    backfill's writes."""
+    """A guard-less apply_batch (epoch_id=None, backfill) onto a
+    stream-owned store is refused: a later Spark retry of the last
+    epoch re-merges onto its recorded prior snapshot and would drop
+    the backfill. The refused write leaves the store as it was, so
+    that retry still reproduces the stream's state."""
     import os as _os
 
     from amazon_personalize_connectors_spark.streaming.cdc_sink import (
@@ -494,33 +494,29 @@ def test_backfill_on_stream_owned_store_survives_retry(spark, tmp_path):
     last_rows = [(2, "upsert", "b")]
     apply_batch(spark.createDataFrame(last_rows, schema),
                 store, ["k"], "op", epoch_id=1, checkpoint_token="tok")
-    # backfill: opt-in guard-less write adds key 7 (disjoint from the
-    # epoch's keys — the sanctioned shape; overlap caveat documented)
     import pytest as _pytest
 
-    with _pytest.raises(ValueError, match="allow_stream_owned"):
+    with _pytest.raises(ValueError, match="stream-owned"):
         apply_batch(spark.createDataFrame([(7, "upsert", "bf")], schema),
                     store, ["k"], "op")
-    apply_batch(spark.createDataFrame([(7, "upsert", "bf")], schema),
-                store, ["k"], "op", allow_stream_owned=True)
     # Spark retries the last epoch (1) — same token, same batch
     apply_batch(spark.createDataFrame(last_rows, schema),
                 store, ["k"], "op", epoch_id=1, checkpoint_token="tok")
     snap = {(r.k, r.v) for r in read_snapshot(spark, store).collect()}
-    assert snap == {(1, "a"), (2, "b"), (7, "bf")}
+    assert snap == {(1, "a"), (2, "b")}
 
 
 def test_adopt_cdc_store_migrates_legacy_token(spark, tmp_path):
-    """_CDC_META twin of epoch_store.adopt_store: a store committed
-    under the pre-nonce scheme (token == checkpoint path) refuses its
-    own upgraded stream until the operator adopts it explicitly."""
+    """A cdc store committed under the pre-nonce scheme (token ==
+    checkpoint path) refuses its own upgraded stream until the
+    operator adopts it explicitly with epoch_store.adopt_store."""
     import os as _os
 
     from amazon_personalize_connectors_spark.streaming.cdc_sink import (
-        adopt_cdc_store,
         apply_batch,
     )
     from amazon_personalize_connectors_spark.streaming.epoch_store import (
+        adopt_store,
         checkpoint_identity,
     )
 
@@ -533,11 +529,131 @@ def test_adopt_cdc_store_migrates_legacy_token(spark, tmp_path):
     apply_batch(spark.createDataFrame([(1, "upsert", "a")], schema),
                 store, ["k"], "op", epoch_id=0, checkpoint_token=ck)
     nonce = checkpoint_identity(ck)
-    with pytest.raises(ValueError, match="does not own the cdc store"):
+    with pytest.raises(ValueError, match="does not own the store"):
         apply_batch(spark.createDataFrame([(2, "upsert", "b")], schema),
                     store, ["k"], "op", epoch_id=1, checkpoint_token=nonce)
-    adopt_cdc_store(store, ck)
+    adopt_store(store, ck)
     apply_batch(spark.createDataFrame([(2, "upsert", "b")], schema),
                 store, ["k"], "op", epoch_id=1, checkpoint_token=nonce)
+    snap = {(r.k, r.v) for r in read_snapshot(spark, store).collect()}
+    assert snap == {(1, "a"), (2, "b")}
+
+
+def test_old_format_cdc_store_refused(spark, tmp_path):
+    """A store still holding the store-global _CDC_META.json sidecar
+    (the format before per-version _META.json) carries its ownership
+    token and epoch guard where nothing reads them any more: apply_batch
+    refuses it, streaming or guard-less, and leaves it untouched; its
+    snapshot still reads, so it can be rebuilt into a new path."""
+    import json
+    import os as _os
+
+    import pytest as _pytest
+
+    from amazon_personalize_connectors_spark.streaming.cdc_sink import (
+        apply_batch,
+    )
+
+    store = str(tmp_path / "store_old")
+    schema = "k long, op string, v string"
+    spark.createDataFrame([(1, "a")], "k long, v string").write.parquet(
+        _os.path.join(store, "v0")
+    )
+    with open(_os.path.join(store, "_VERSION"), "w") as f:
+        f.write("0")
+    with open(_os.path.join(store, "_CDC_META.json"), "w") as f:
+        json.dump({"last_epoch": 0, "prev": None, "token": "tok"}, f)
+    batch = spark.createDataFrame([(2, "upsert", "b")], schema)
+    for kw in ({"epoch_id": 1, "checkpoint_token": "tok"}, {}):
+        with _pytest.raises(ValueError, match="predates per-version"):
+            apply_batch(batch, store, ["k"], "op", **kw)
+    assert sorted(_os.listdir(store)) == ["_CDC_META.json", "_VERSION", "v0"]
+    old = read_snapshot(spark, store)
+    assert {(r.k, r.v) for r in old.collect()} == {(1, "a")}
+
+    # the rebuild the error names: the old snapshot into a new path,
+    # which the stream then owns
+    new = str(tmp_path / "store_new")
+    apply_batch(old.withColumn("op", F.lit("upsert")), new, ["k"], "op")
+    apply_batch(batch, new, ["k"], "op", epoch_id=1, checkpoint_token="tok")
+    snap = {(r.k, r.v) for r in read_snapshot(spark, new).collect()}
+    assert snap == {(1, "a"), (2, "b")}
+
+
+def test_guardless_legacy_cdc_store_stamped_in_place(spark, tmp_path):
+    """A store written only by guard-less apply_batch calls before
+    per-version metadata has no ``_META.json`` and no store-wide meta:
+    it is refused like the old stream format, and the in-place stamp
+    the error names (``epoch_store.commit_carried(store, cur, None)``)
+    makes it writable again with its snapshot intact."""
+    import os as _os
+
+    import pytest as _pytest
+
+    from amazon_personalize_connectors_spark.streaming.cdc_sink import (
+        apply_batch,
+    )
+    from amazon_personalize_connectors_spark.streaming.epoch_store import (
+        commit_carried,
+    )
+
+    store = str(tmp_path / "store")
+    schema = "k long, op string, v string"
+    spark.createDataFrame([(1, "a")], "k long, v string").write.parquet(
+        _os.path.join(store, "v3")
+    )
+    with open(_os.path.join(store, "_VERSION"), "w") as f:
+        f.write("3")
+    batch = spark.createDataFrame([(2, "upsert", "b")], schema)
+    with _pytest.raises(ValueError, match="commit_carried") as err:
+        apply_batch(batch, store, ["k"], "op")
+    assert "commit_carried('" + store + "', 3, None)" in str(err.value)
+    commit_carried(store, 3, None)
+    apply_batch(batch, store, ["k"], "op")
+    apply_batch(spark.createDataFrame([(3, "upsert", "c")], schema),
+                store, ["k"], "op", epoch_id=0, checkpoint_token="tok")
+    snap = {(r.k, r.v) for r in read_snapshot(spark, store).collect()}
+    assert snap == {(1, "a"), (2, "b"), (3, "c")}
+
+
+def test_failed_retry_rewrite_after_flip_recovers(spark, tmp_path):
+    """A retry of the last epoch after its pointer flip rewrites the
+    committed version in place, and ``mode("overwrite")`` can delete
+    that directory before a write task fails. When the rewrite job
+    fails, the store must be back on the recorded prior snapshot (not
+    on the half-deleted version), and the next retry must reproduce
+    the state."""
+    import os as _os
+    import shutil
+
+    import pytest as _pytest
+
+    from amazon_personalize_connectors_spark.streaming.cdc_sink import (
+        apply_batch,
+    )
+    from amazon_personalize_connectors_spark.streaming.epoch_store import (
+        current_version,
+    )
+
+    store = str(tmp_path / "store")
+    schema = "k long, op string, v string"
+    apply_batch(spark.createDataFrame([(1, "upsert", "a")], schema),
+                store, ["k"], "op", epoch_id=0, checkpoint_token="tok")
+    last = spark.createDataFrame([(2, "upsert", "b")], schema)
+    apply_batch(last, store, ["k"], "op", epoch_id=1, checkpoint_token="tok")
+    assert current_version(store) == 1
+    # the retry's write job fails (a lost task) ...
+    failing = last.withColumn("v", F.raise_error(F.lit("task lost")))
+    with _pytest.raises(Exception, match="task lost"):
+        apply_batch(failing, store, ["k"], "op", epoch_id=1,
+                    checkpoint_token="tok")
+    # ... and, at worst, after the overwrite had already cleared v1
+    shutil.rmtree(_os.path.join(store, "v1"))
+    assert current_version(store) == 0
+    assert {(r.k, r.v) for r in read_snapshot(spark, store).collect()} == {
+        (1, "a")
+    }
+    apply_batch(last, store, ["k"], "op", epoch_id=1, checkpoint_token="tok")
+    assert current_version(store) == 1
     snap = {(r.k, r.v) for r in read_snapshot(spark, store).collect()}
     assert snap == {(1, "a"), (2, "b")}

@@ -4,6 +4,7 @@ stale-epoch refusal, gap tolerance, compaction interplay."""
 import pytest
 
 from amazon_personalize_connectors_spark.streaming.epoch_store import (
+    commit_carried,
     commit_version,
     current_version,
     plan_fold,
@@ -39,6 +40,28 @@ def test_retry_after_flip_reuses_same_version_and_prior(tmp_path):
     assert (v, prior) == (1, 0)
 
 
+def test_retry_uncommits_to_prev_until_recommitted(tmp_path):
+    """A retry after flip points the store back at ``prev`` before the
+    caller rewrites the committed version: if that rewrite never
+    commits, ``prev`` stays authoritative and the next retry plans
+    the same version from the same prior."""
+    s = _store(tmp_path)
+    commit_version(s, 0, 0, None, 0, "tok")
+    commit_version(s, 1, 1, 0, 1, "tok")
+    assert plan_fold(s, 1, "tok")[:2] == (1, 0)
+    assert current_version(s) == 0  # rewrite of v1 failed: no commit
+    assert plan_fold(s, 1, "tok")[:2] == (1, 0)
+    commit_version(s, 1, 1, 0, 1, "tok")
+    assert current_version(s) == 1
+    # a retry of the store's first version un-commits it entirely
+    (tmp_path / "first").mkdir()
+    f = _store(tmp_path / "first")
+    commit_version(f, 0, 0, None, 0)
+    assert plan_fold(f, 0)[:2] == (0, None)
+    assert current_version(f) is None
+    assert plan_fold(f, 0)[:2] == (0, None)
+
+
 def test_stale_epoch_refused(tmp_path):
     s = _store(tmp_path)
     commit_version(s, 0, 0, None, 0)
@@ -71,6 +94,32 @@ def test_legacy_store_without_meta_advances_with_warning(tmp_path):
     with pytest.warns(RuntimeWarning, match="legacy epoch-less store"):
         v, prior, meta = plan_fold(s, 7)
     assert (v, prior) == (1, 0) and meta["last_epoch"] is None
+
+
+def test_commit_carried_keeps_the_stream_guard(tmp_path):
+    """A non-epoch commit carries ``last_epoch`` and ``token`` forward,
+    so the stream's retry, stale-epoch and ownership checks still see
+    them; on a store no stream has written yet the next epoch advances
+    without the legacy warning (the chain has metadata, just no
+    epoch)."""
+    import warnings
+
+    s = _store(tmp_path)
+    commit_carried(s, 0, None)
+    assert read_meta(s, 0) == {"epoch": None, "prev": None,
+                               "last_epoch": None, "token": None}
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        assert plan_fold(s, 0, "tok")[:2] == (1, 0)
+    commit_version(s, 1, 0, 0, 0, "tok")
+    commit_carried(s, 2, 1)
+    assert read_meta(s, 2) == {"epoch": None, "prev": 1,
+                               "last_epoch": 0, "token": "tok"}
+    with pytest.raises(ValueError, match="does not own the store"):
+        plan_fold(s, 1, "other")
+    with pytest.raises(ValueError, match="compaction"):
+        plan_fold(s, 0, "tok")
+    assert plan_fold(s, 1, "tok")[:2] == (3, 2)
 
 
 def test_cms_monitor_replay_idempotent(spark, tmp_path):

@@ -1,8 +1,9 @@
 """The one streaming core: a single AvailableNow drain
-(``streaming/incremental.py:run_available_now``) and a single write
-pool (``streaming/epoch_store.py:run_concurrently``) — their failure
-paths, and a source scan that keeps hand-copied drains and pools from
-coming back."""
+(``streaming/incremental.py:run_available_now``), a single write
+pool (``streaming/epoch_store.py:run_concurrently``) and a single
+pointer-flip store format (``streaming/epoch_store.py``) — their
+failure paths, and a source scan that keeps hand-copied drains, pools
+and store metadata from coming back."""
 
 import ast
 import os
@@ -102,3 +103,20 @@ def test_one_drain_and_one_write_pool_in_the_package():
                   if "ThreadPoolExecutor" in line]
     assert all(fn.lineno <= i <= fn.end_lineno for i in pool_lines)
     assert src.count("ThreadPoolExecutor(") == 1
+
+
+def test_one_pointer_flip_store_format_in_the_package():
+    """Only ``epoch_store`` reads or writes a store's ``_VERSION``
+    pointer and per-version ``_META.json``; every other store commits
+    through it, and no store-global meta sidecar remains."""
+    store = os.path.join("streaming", "epoch_store.py")
+    hits = {"_version_file(": set(), '"_VERSION"': set(),
+            "_meta_path(": set(), "_CDC_META": set()}
+    for rel, src in _package_sources():
+        for needle, where in hits.items():
+            if needle in src:
+                where.add(rel)
+    assert hits["_version_file("] == {store}
+    assert hits['"_VERSION"'] == {store}
+    assert hits["_meta_path("] == {store}
+    assert hits["_CDC_META"] == set()

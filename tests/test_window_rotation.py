@@ -180,7 +180,9 @@ def test_apply_window_rewrites_block(tmp_path):
         '    "a",\n'
         '    "b",\n'
         "]\n"
-        "_STAGED: list = []\n"
+        "_STAGED: list = [\n"
+        '    "s",\n'
+        "]\n"
         "def queries():\n"
         "    all_q = {}\n"
         "    out = {name: all_q[name] for name in _R8_WINDOW}\n"
@@ -194,6 +196,8 @@ def test_apply_window_rewrites_block(tmp_path):
     assert '_R9_WINDOW = [\n    "x",\n    "y",\n    "z",\n]' in src
     assert "for name in _R9_WINDOW" in src
     assert "_R8_WINDOW" not in src
+    # staged queries drain into the new window: the list is emptied
+    assert "_STAGED: list = []\n" in src and '"s"' not in src
 
 
 def test_registry_debt_cap(ledger):

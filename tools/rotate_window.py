@@ -167,8 +167,9 @@ def max_staleness(n_queries: int, window: int) -> int:
 def apply_window(repo_root: str, chosen: list[str], rnd: int) -> str:
     """Rewrite the ``_R{N}_WINDOW`` block in __spark_entry__.py in
     place (list literal only — the explanatory comment above it is
-    the builder's job to update) and retarget the queries() reorder
-    line. Returns the new variable name."""
+    updated by hand), retarget the queries() reorder line, and empty
+    ``_STAGED``: the plan ranks staged queries like any other, so they
+    drain into this window. Returns the new variable name."""
     path = os.path.join(repo_root, "__spark_entry__.py")
     with open(path) as f:
         src = f.read()
@@ -180,6 +181,7 @@ def apply_window(repo_root: str, chosen: list[str], rnd: int) -> str:
     src = src[: m.start()] + f"{new_name} = [\n{body}\n]" + src[m.end():]
     src = re.sub(r"_R\d+_WINDOW\)", f"{new_name})", src)
     src = re.sub(r"for name in _R\d+_WINDOW", f"for name in {new_name}", src)
+    src = re.sub(r"(_STAGED\b[^=\n]*= )\[[^\]]*\]", r"\1[]", src)
     with open(path, "w") as f:
         f.write(src)
     return new_name
