@@ -14,11 +14,14 @@ and *returns failed records as a DataFrame* the caller lands in a DLQ
 path — the moral equivalent of the reference's dead-letter queue
 (template.yaml:334-337), but queryable.
 
-Scale notes: per-partition transport construction (one connection per
-task, not per record); bounded chunk sizes; failures flow back as data
-(no driver collect). Delivery is at-least-once — a retried task re-sends
-its partition, like any foreachPartition sink; idempotency must come
-from the receiver (Braze user-track upserts are).
+Scale notes: one transport per partition (for HTTP, one session and its
+keep-alive connection per task, not per chunk); records travel as the
+JSON text Catalyst's ``toJSON`` made, never parsed on the HTTP path;
+bounded chunk sizes; failures flow back as data (no driver collect), and
+``deliver_and_collect_failures`` sends and lands the DLQ in one Spark
+job. Delivery is at-least-once — a retried task re-sends its partition,
+like any foreachPartition sink; idempotency must come from the receiver
+(Braze user-track upserts are).
 """
 
 from __future__ import annotations
@@ -31,10 +34,11 @@ from collections.abc import Callable, Iterator
 from typing import Any
 
 from pyspark.sql import DataFrame, Row
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from amazon_personalize_connectors_spark.operators.metrics import observe_counts
 from amazon_personalize_connectors_spark.operators.payload import chunk_iterable
+from amazon_personalize_connectors_spark.sources.readers import hadoop_path
 
 BRAZE_MAX_ATTRIBUTES_PER_POST = 75  # bdeq:18
 SQS_MAX_BATCH = 10  # enqueue.py:19
@@ -59,11 +63,20 @@ class TransportError(Exception):
 
 
 class Transport:
-    """One delivery channel. Implementations must be constructible on
-    executors (keep __init__ args picklable)."""
+    """One delivery channel, built once per partition on the executor
+    (keep __init__ args picklable). ``deliver`` hands it each chunk as
+    the records' JSON texts through ``send_encoded`` and calls ``close``
+    when the partition ends. Implementations override ``send_batch``
+    (parsed records) or, to skip the parse, ``send_encoded``."""
 
     def send_batch(self, batch: list[dict[str, Any]]) -> None:  # pragma: no cover
         raise NotImplementedError
+
+    def send_encoded(self, batch: list[str]) -> None:
+        self.send_batch([json.loads(j) for j in batch])
+
+    def close(self) -> None:
+        pass
 
 
 def _spool_write(spool_dir: str, name: str, obj: Any) -> None:
@@ -191,8 +204,13 @@ class HttpUserTrackTransport(Transport):
 
     Unlike the reference (bdeq:45 fire-and-forget), non-2xx responses
     raise and the batch retries with exponential backoff before being
-    surfaced as DLQ rows. ``requests`` is imported lazily so the
-    library carries no hard dependency.
+    surfaced as DLQ rows. One ``requests.Session`` per transport (so
+    per task) keeps its connection alive across chunks; the proxy for
+    the endpoint is resolved from the environment once, after which the
+    session stops consulting the environment on every POST. Records are
+    POSTed as the JSON texts they arrive in. ``requests`` is imported
+    lazily, on the first send, so the library carries no hard
+    dependency.
     """
 
     def __init__(
@@ -208,29 +226,49 @@ class HttpUserTrackTransport(Transport):
         self.timeout_s = timeout_s
         self.max_retries = max_retries
         self.backoff_s = backoff_s
+        self._session = None
+
+    def _open(self):
+        if self._session is None:
+            try:
+                import requests
+            except ImportError as exc:  # pragma: no cover
+                # deterministic in this process — redriving the chunk
+                # max_receives times (with redelivery sleeps) cannot make
+                # the dependency appear; DLQ immediately (ADVICE r10)
+                raise TransportError(
+                    "requests not available in this environment", retryable=False
+                ) from exc
+            session = requests.Session()
+            session.proxies = requests.utils.get_environ_proxies(self.endpoint)
+            # without trust_env requests also stops reading its CA
+            # bundle variables per request: read them here, once
+            session.verify = (
+                os.environ.get("REQUESTS_CA_BUNDLE")
+                or os.environ.get("CURL_CA_BUNDLE")
+                or True
+            )
+            session.trust_env = False
+            session.headers.update(
+                {
+                    "Content-Type": "application/json",
+                    "Authorization": f"Bearer {self.api_key}",
+                    "X-Braze-Bulk": "true",  # bdeq:35-41
+                }
+            )
+            self._session = session
+        return self._session
 
     def send_batch(self, batch: list[dict[str, Any]]) -> None:
-        try:
-            import requests
-        except ImportError as exc:  # pragma: no cover
-            # deterministic in this process — redriving the chunk
-            # max_receives times (with redelivery sleeps) cannot make
-            # the dependency appear; DLQ immediately (ADVICE r10)
-            raise TransportError(
-                "requests not available in this environment", retryable=False
-            ) from exc
-        payload = {"attributes": batch}
-        headers = {
-            "Content-Type": "application/json",
-            "Authorization": f"Bearer {self.api_key}",
-            "X-Braze-Bulk": "true",  # bdeq:35-41
-        }
+        self.send_encoded([json.dumps(rec) for rec in batch])
+
+    def send_encoded(self, batch: list[str]) -> None:
+        session = self._open()
+        body = ('{"attributes":[' + ",".join(batch) + "]}").encode()
         last: Exception | None = None
         for attempt in range(self.max_retries + 1):
             try:
-                resp = requests.post(
-                    self.endpoint, json=payload, headers=headers, timeout=self.timeout_s
-                )
+                resp = session.post(self.endpoint, data=body, timeout=self.timeout_s)
                 if resp.status_code // 100 == 2:
                     return
                 if resp.status_code // 100 == 4 and resp.status_code not in (
@@ -252,6 +290,11 @@ class HttpUserTrackTransport(Transport):
             if attempt < self.max_retries:
                 time.sleep(self.backoff_s * (2**attempt))
         raise TransportError(str(last))
+
+    def close(self) -> None:
+        if self._session is not None:
+            self._session.close()
+            self._session = None
 
 
 _DLQ_SCHEMA = T.StructType(
@@ -290,51 +333,53 @@ def deliver(
 
     The caller triggers delivery by acting on the returned frame
     (e.g. writing it to a DLQ path); an empty result means full
-    success. One transport per partition; rows are JSON-encoded in
-    Catalyst (``to_json``) so the Python loop only chunks and sends.
+    success. One transport per partition, closed when the partition
+    ends; rows are JSON-encoded in Catalyst (``toJSON``, which reaches
+    Python as plain UTF-8 text, not pickled rows) and handed to
+    ``Transport.send_encoded`` as that text, so the Python loop only
+    chunks and sends.
     """
     if max_receives < 1:
         raise ValueError("max_receives must be >= 1")
-    encoded = payloads.select(
-        F.to_json(F.struct(*[F.col(c) for c in payloads.columns])).alias("j")
-    )
 
-    def send_partition(rows: Iterator[Row]) -> Iterator[Row]:
+    def send_partition(texts: Iterator[str]) -> Iterator[Row]:
         transport = transport_factory()
-        for chunk in chunk_iterable((r.j for r in rows), batch_size):
-            records = [json.loads(j) for j in chunk]
-            err = None
-            receives = 0
-            for receive in range(1, max_receives + 1):
-                receives = receive
-                try:
-                    transport.send_batch(records)
-                    err = None
-                    break
-                except Exception as exc:  # noqa: BLE001 — redrive, then DLQ
-                    err = f"{type(exc).__name__}: {exc}"
-                    if not getattr(exc, "retryable", True):
-                        # deterministic failure (validation 4xx): the
-                        # same bytes can never succeed — straight to
-                        # DLQ, no redelivery burn (code-review r10)
+        try:
+            for chunk in chunk_iterable(texts, batch_size):
+                err = None
+                receives = 0
+                for receive in range(1, max_receives + 1):
+                    receives = receive
+                    try:
+                        transport.send_encoded(chunk)
+                        err = None
                         break
-                    if receive < max_receives and redelivery_delay_s > 0:
-                        # the SQS visibility window (template.yaml:334,
-                        # VisibilityTimeout=610): a failed receive's
-                        # message is invisible for the full window
-                        # before it can be re-received. ``sleep_fn`` is
-                        # injectable so tests pin the re-receive
-                        # ordering against a simulated clock instead of
-                        # sleeping out real windows (VERDICT r10 §7).
-                        sleep_fn(redelivery_delay_s)
-            if err is not None:
-                for j in chunk:
-                    yield Row(
-                        record_json=j, error=err, receive_count=receives
-                    )
+                    except Exception as exc:  # noqa: BLE001 — redrive, then DLQ
+                        err = f"{type(exc).__name__}: {exc}"
+                        if not getattr(exc, "retryable", True):
+                            # deterministic failure (validation 4xx): the
+                            # same bytes can never succeed — straight to
+                            # DLQ, no redelivery burn (code-review r10)
+                            break
+                        if receive < max_receives and redelivery_delay_s > 0:
+                            # the SQS visibility window (template.yaml:334,
+                            # VisibilityTimeout=610): a failed receive's
+                            # message is invisible for the full window
+                            # before it can be re-received. ``sleep_fn`` is
+                            # injectable so tests pin the re-receive
+                            # ordering against a simulated clock instead of
+                            # sleeping out real windows (VERDICT r10 §7).
+                            sleep_fn(redelivery_delay_s)
+                if err is not None:
+                    for j in chunk:
+                        yield Row(
+                            record_json=j, error=err, receive_count=receives
+                        )
+        finally:
+            transport.close()
 
     return payloads.sparkSession.createDataFrame(
-        encoded.rdd.mapPartitions(send_partition), _DLQ_SCHEMA
+        payloads.toJSON().mapPartitions(send_partition), _DLQ_SCHEMA
     )
 
 
@@ -347,14 +392,28 @@ def deliver_and_collect_failures(
     """Run delivery now; optionally persist failures to ``dlq_path``
     (JSONL). Returns the number of failed records this run.
 
-    The failure frame is cached before acting on it twice — every
-    uncached action would otherwise replay the mapPartitions send.
+    One action sends every chunk: a ``count()`` without ``dlq_path``,
+    else the DLQ append itself, with the failure count observed on the
+    way (no cache, no second pass over the sends). A delivery without
+    failures leaves ``dlq_path`` as it was: Spark's write of an empty
+    frame leaves an empty part file and ``_SUCCESS``, so they are
+    removed again — the whole directory if this call created it, else
+    only the files this write added.
     """
-    failures = deliver(payloads, transport_factory, batch_size).cache()
-    try:
-        n = failures.count()
-        if dlq_path is not None and n > 0:
-            failures.write.mode("append").json(dlq_path)
-        return n
-    finally:
-        failures.unpersist()
+    failures = deliver(payloads, transport_factory, batch_size)
+    if dlq_path is None:
+        return failures.count()
+    failures, observation = observe_counts(failures, name="apc_dlq")
+    fs, path = hadoop_path(payloads.sparkSession, dlq_path)
+    existed = fs.exists(path)
+    before = {st.getPath().getName() for st in fs.listStatus(path)} if existed else set()
+    failures.write.mode("append").json(dlq_path)
+    n = observation.get["n_rows"]
+    if n == 0:
+        if not existed:
+            fs.delete(path, True)
+        else:
+            for st in fs.listStatus(path):
+                if st.getPath().getName() not in before:
+                    fs.delete(st.getPath(), True)
+    return n

@@ -474,7 +474,7 @@ def test_retry_after_prune_still_finds_prev(spark, tmp_path):
     assert {(r.k, r.v) for r in read_snapshot(spark, store).collect()} == want
 
 
-def test_backfill_on_stream_owned_store_survives_retry(spark, tmp_path):
+def test_backfill_refused_on_stream_owned_store_retry_applies(spark, tmp_path):
     """A guard-less apply_batch (epoch_id=None, backfill) onto a
     stream-owned store is refused: a later Spark retry of the last
     epoch re-merges onto its recorded prior snapshot and would drop

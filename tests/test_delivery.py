@@ -604,3 +604,230 @@ def test_redrive_respects_visibility_window_simulated_clock(spark, tmp_path):
     assert times[-1] == 4 * SQS_VISIBILITY_TIMEOUT_S
     assert len(failures) == 2
     assert all(r["receive_count"] == 5 for r in failures)
+
+
+# --- one pass: session reuse, env proxy, DLQ in one job -------------------
+
+
+def _keepalive_server():
+    """HTTP/1.1 loopback that keeps connections open: counts the
+    connections it accepts and records each POST's path (absolute when
+    it serves as a proxy), headers and raw body."""
+    import threading
+    from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+
+    seen = {"connections": 0, "posts": []}
+    lock = threading.Lock()
+
+    class Handler(BaseHTTPRequestHandler):
+        protocol_version = "HTTP/1.1"
+
+        def setup(self):
+            super().setup()
+            with lock:
+                seen["connections"] += 1
+
+        def do_POST(self):
+            post = {
+                "path": self.path,
+                "headers": {k.lower(): v for k, v in self.headers.items()},
+                "body": self.rfile.read(int(self.headers["Content-Length"])),
+            }
+            with lock:
+                seen["posts"].append(post)
+            self.send_response(200)
+            self.send_header("Content-Length", "2")
+            self.end_headers()
+            self.wfile.write(b"{}")
+
+        def log_message(self, *a):
+            pass
+
+    srv = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    return seen, srv, f"http://127.0.0.1:{srv.server_address[1]}"
+
+
+def test_http_transport_reuses_one_connection_per_partition(spark):
+    """Every chunk of a partition goes over the transport's one
+    keep-alive connection: 4 chunks, 1 accepted connection."""
+    from amazon_personalize_connectors_spark.sinks.transport import (
+        HttpUserTrackTransport,
+    )
+
+    seen, srv, base = _keepalive_server()
+    try:
+        payloads = spark.createDataFrame(
+            [(str(i),) for i in range(10)], "external_id string"
+        ).coalesce(1)
+        n = deliver(
+            payloads,
+            lambda: HttpUserTrackTransport(
+                f"{base}/users/track", api_key="k", backoff_s=0.01
+            ),
+            batch_size=3,
+        ).count()
+    finally:
+        srv.shutdown()
+    assert n == 0
+    assert sorted(
+        a["external_id"]
+        for p in seen["posts"]
+        for a in json.loads(p["body"])["attributes"]
+    ) == sorted(str(i) for i in range(10))
+    assert seen["connections"] == 1
+
+
+def test_http_transport_delivers_every_chunk_over_http10(spark):
+    """A receiver that closes each connection after its reply (HTTP/1.0)
+    still gets every chunk: the session reconnects per POST."""
+    from amazon_personalize_connectors_spark.sinks.transport import (
+        HttpUserTrackTransport,
+    )
+
+    script = _Script([])
+    srv, url = _loopback_server(script)
+    try:
+        payloads = spark.createDataFrame(
+            [(str(i),) for i in range(10)], "external_id string"
+        ).coalesce(1)
+        n = deliver(
+            payloads,
+            lambda: HttpUserTrackTransport(url, api_key="k", backoff_s=0.01),
+            batch_size=3,
+        ).count()
+    finally:
+        srv.shutdown()
+    assert n == 0
+    assert [len(r["body"]["attributes"]) for r in script.requests] == [3, 3, 3, 1]
+    assert sorted(
+        a["external_id"] for r in script.requests for a in r["body"]["attributes"]
+    ) == sorted(str(i) for i in range(10))
+
+
+def test_http_transport_posts_through_env_proxy_resolved_once(monkeypatch):
+    """``HTTP_PROXY`` still routes the POSTs (the session stops reading
+    the environment per request, so it must resolve the proxy up
+    front): the proxy receives absolute-URI POSTs carrying the JSON
+    texts and headers unchanged, and the environment is consulted once
+    per transport, not once per chunk. Runs in the test process: Python
+    workers started earlier do not see the variable."""
+    import socket
+
+    import requests
+
+    from amazon_personalize_connectors_spark.sinks.transport import (
+        HttpUserTrackTransport,
+    )
+
+    seen, srv, proxy = _keepalive_server()
+    for var in ("http_proxy", "all_proxy", "ALL_PROXY", "no_proxy", "NO_PROXY"):
+        monkeypatch.delenv(var, raising=False)
+    monkeypatch.setenv("HTTP_PROXY", proxy)
+    resolutions = []
+    environ_proxies = requests.utils.get_environ_proxies
+
+    def counting(url, no_proxy=None):
+        resolutions.append(url)
+        return environ_proxies(url, no_proxy=no_proxy)
+
+    monkeypatch.setattr(requests.utils, "get_environ_proxies", counting)
+    monkeypatch.setattr(requests.sessions, "get_environ_proxies", counting)
+    # a POST that bypassed the proxy would look the endpoint up: refuse
+    # every name but loopback so that fails here, inside the process
+    getaddrinfo = socket.getaddrinfo
+
+    def loopback_only(host, *args, **kwargs):
+        if host not in ("127.0.0.1", "localhost"):
+            raise socket.gaierror(f"name lookup refused in test: {host}")
+        return getaddrinfo(host, *args, **kwargs)
+
+    monkeypatch.setattr(socket, "getaddrinfo", loopback_only)
+
+    endpoint = "http://braze.invalid/users/track"
+    chunks = [
+        ['{"external_id":"u1","recs":["a","b"]}'],
+        ['{"external_id":"u2"}', '{"external_id":"u3","n":1}'],
+        ['{"external_id":"u4"}'],
+    ]
+    t = HttpUserTrackTransport(endpoint, api_key="sekret", max_retries=0)
+    try:
+        for chunk in chunks:
+            t.send_encoded(chunk)
+    finally:
+        t.close()
+        srv.shutdown()
+    assert [p["path"] for p in seen["posts"]] == [endpoint] * 3
+    assert [p["body"] for p in seen["posts"]] == [
+        ('{"attributes":[' + ",".join(c) + "]}").encode() for c in chunks
+    ]
+    for p in seen["posts"]:
+        assert p["headers"]["authorization"] == "Bearer sekret"
+        assert p["headers"]["x-braze-bulk"] == "true"
+        assert p["headers"]["content-type"] == "application/json"
+    assert resolutions == [endpoint]
+    assert seen["connections"] == 1
+
+
+def test_dlq_delivery_sends_in_one_spark_job(spark, tmp_path):
+    """With a ``dlq_path`` the sends and the DLQ write are one Spark job
+    (no cache, no separate count), and each chunk is sent exactly once."""
+    from test_connector_core import _spark_jobs
+
+    frame = spark.createDataFrame(
+        [(str(i),) for i in range(12)], "external_id string"
+    ).coalesce(1)
+    spool = str(tmp_path / "spool")
+    failed = []
+    jobs = _spark_jobs(
+        spark,
+        f"dlq-one-job-{tmp_path.name}",
+        lambda: failed.append(
+            deliver_and_collect_failures(
+                frame,
+                lambda: RecordingTransport(spool, fail_keys=("3",)),
+                batch_size=5,
+                dlq_path=str(tmp_path / "dlq"),
+            )
+        ),
+    )
+    assert failed == [5]  # the chunk holding "3": ids 0-4
+    assert jobs == 1
+    batches = RecordingTransport.read_batches(spool)
+    assert sorted(len(b) for b in batches) == [2, 5]
+    sent = [r["external_id"] for b in batches for r in b]
+    assert sorted(sent) == sorted(str(i) for i in range(5, 12))
+    dlq = [
+        json.loads(line)
+        for f in sorted(os.listdir(tmp_path / "dlq"))
+        if f.endswith(".json")
+        for line in open(tmp_path / "dlq" / f)
+    ]
+    assert sorted(json.loads(r["record_json"])["external_id"] for r in dlq) == [
+        str(i) for i in range(5)
+    ]
+
+
+def test_dlq_untouched_by_delivery_without_failures(spark, tmp_path):
+    """A delivery with no failures leaves ``dlq_path`` as it was: absent
+    stays absent, and an existing DLQ gains no file."""
+    frame = spark.createDataFrame(
+        [(str(i),) for i in range(12)], "external_id string"
+    ).coalesce(1)
+    dlq = tmp_path / "dlq"
+
+    def run(spool, fail_keys=()):
+        return deliver_and_collect_failures(
+            frame,
+            lambda: RecordingTransport(str(tmp_path / spool), fail_keys=fail_keys),
+            batch_size=5,
+            dlq_path=str(dlq),
+        )
+
+    assert run("s1") == 0
+    assert not dlq.exists()
+    assert run("s2", fail_keys=("7",)) == 5
+    before = sorted(os.listdir(dlq))
+    assert any(f.endswith(".json") for f in before)
+    assert run("s3") == 0
+    assert sorted(os.listdir(dlq)) == before
