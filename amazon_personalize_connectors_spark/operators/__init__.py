@@ -3,10 +3,7 @@ from amazon_personalize_connectors_spark.operators.decorate import (
     decorate_items,
     explode_recommendations,
 )
-from amazon_personalize_connectors_spark.operators.delta import (
-    delta_check,
-    delta_check_anti_hash,
-)
+from amazon_personalize_connectors_spark.operators.delta import delta_check
 from amazon_personalize_connectors_spark.operators.payload import (
     build_user_track_payloads,
     chunk_iterable,
@@ -20,7 +17,6 @@ __all__ = [
     "decorate_items",
     "explode_recommendations",
     "delta_check",
-    "delta_check_anti_hash",
     "build_user_track_payloads",
     "chunk_iterable",
     "split_errors",

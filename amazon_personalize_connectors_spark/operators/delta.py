@@ -7,17 +7,21 @@ dedups the output. We resolve columns **by name** (no positional
 fragility) and preserve the dedup side-effect.
 
 Scale notes: ``subtract`` shuffles both full datasets on all columns.
-That's fine at dimension scale but wrong at 100 TB of state, so
-``delta_check_anti_hash`` offers the scalable physical strategy: anti-
-join on a 96-bit record digest (xxhash64 + murmur3) — state side
-reduces to one 12-byte hash column (pruned scan) and the join key is
-high-entropy (no skew). Semantics are identical modulo hash collisions
-(birthday bound safe past ~10^12 records; swap in sha2(to_json, 256)
-where a cryptographic bound is required).
+``delta_check_stored_digests`` is the narrow physical strategy for a
+snapshot that stores a 96-bit record digest (xxhash64 + murmur3) per
+row: the state side prunes to the 12-byte digest and the anti-join key
+is high-entropy (no skew). Semantics are identical modulo hash
+collisions (birthday bound safe past ~10^12 records; swap in
+sha2(to_json, 256) where a cryptographic bound is required).
 
 The reference never writes state back ("TODO", README.md:150);
-``write_sync_state`` closes that loop (K5), and the flat digest store
-at the bottom of this module is its append-only form.
+``write_sync_state`` closes that loop (K5) and is ``run_job``'s sync
+state. The flat digest store at the bottom of this module is a
+different contract: it delivers each content ONCE. Digests are only
+ever appended, so a record that returns to content it had before is
+not delivered again — right for once-per-content ingestion
+(``incremental_content_ingest``), wrong for a last-sync snapshot,
+where a reverted record differs from the snapshot and must resync.
 """
 
 from __future__ import annotations
@@ -98,21 +102,6 @@ def record_digests(df: DataFrame) -> DataFrame:
     return df.select(h1.alias("h1"), h2.alias("h2"))
 
 
-def delta_check_anti_hash(current: DataFrame, state: DataFrame | None) -> DataFrame:
-    """Scalable delta: left-anti join on a 96-bit record digest. State
-    scans prune to the digest columns; the shuffle key is uniform. Used
-    when the state snapshot is too large for subtract to be sensible.
-
-    State is conformed to current's exact schema BEFORE digesting (same
-    as delta_check): a snapshot re-read from JSONL comes back with
-    alphabetized nested struct fields and re-inferred types, which
-    would silently change every digest and resync the full dataset.
-    The digest anti-join itself is ``delta_check_against_digests``."""
-    if state is not None:
-        state = record_digests(conform_to_schema(state, current))
-    return delta_check_against_digests(current, state)
-
-
 def with_record_digests(df: DataFrame) -> DataFrame:
     """``df`` plus its two record-digest columns — what a snapshot
     WRITER stamps so later readers never re-hash (and never re-read)
@@ -127,16 +116,15 @@ def with_record_digests(df: DataFrame) -> DataFrame:
 def delta_check_stored_digests(
     current: DataFrame, state: DataFrame | None
 ) -> DataFrame:
-    """``delta_check_anti_hash`` over a snapshot that already CARRIES
-    its digests (``with_record_digests`` at write time): both the
-    row-dedup and the anti-join key off the stored (h1, h2), so the
-    current side never re-hashes the payload and the state side's
-    parquet scan prunes to the digest columns (plus whatever filter
-    defines the state subset) instead of every payload column —
-    guide §6 ReadSchema narrowing (r13, VERDICT item 3). Semantics
-    identical to delta_check_anti_hash on the same rows: equal
-    digests ⇒ equal rows is already that function's dedup/join
-    assumption, and parquet round-trips bigint digests exactly."""
+    """``delta_check`` over a snapshot that already CARRIES its digests
+    (``with_record_digests`` at write time): both the row-dedup and the
+    anti-join key off the stored (h1, h2), so the current side never
+    re-hashes the payload and the state side's parquet scan prunes to
+    the digest columns (plus whatever filter defines the state subset)
+    instead of every payload column — guide §6 ReadSchema narrowing
+    (r13, VERDICT item 3). Same rows as ``delta_check`` given that
+    equal digests ⇒ equal rows (the dedup/join assumption), and
+    parquet round-trips bigint digests exactly."""
     deduped = current.dropDuplicates(["__h1", "__h2"])
     if state is None:
         return deduped.drop("__h1", "__h2")
@@ -149,16 +137,17 @@ def delta_check_stored_digests(
 
 def write_sync_state(decorated: DataFrame, state_path: str) -> None:
     """K5 — persist the new last-sync snapshot (closes README.md:150's
-    TODO). Overwrite: state is a full snapshot, not a log. This is the
-    reference-semantics form; at 100 TB of state use the digest store
-    below (append cost ∝ delta size, not snapshot size)."""
+    TODO). Overwrite: state is a full snapshot, not a log, so a record
+    that reverts to earlier content is delivered again. The digest
+    store below is not a substitute: it never forgets a digest."""
     decorated.write.mode("overwrite").json(state_path)
 
 
-# --- Digest state store (K5 at scale) --------------------------------
+# --- Digest state store (once-per-content delivery) ------------------
 #
 # The snapshot form rewrites ALL state every run. The digest store
-# keeps only the (h1, h2) record digests, as one flat parquet set:
+# keeps only the (h1, h2) digests of every record ever delivered, as
+# one flat parquet set:
 #
 #   state_digests/part-*.parquet
 #
@@ -169,19 +158,20 @@ def write_sync_state(decorated: DataFrame, state_path: str) -> None:
 #   store still holding ``bucket=N/`` directories from the earlier
 #   partitioned layout reads in full; feeds
 #   delta_check_against_digests' left-anti join on (h1, h2).
-# * Stale digests (a record changed, its old digest lingers) are
-#   harmless — no current row hashes to them — and are swept by
-#   compact_state_digests, which also merges per-run small files.
+# * Digests are never removed: a record that changes and later returns
+#   to its old content hashes to a stored digest and is NOT delivered
+#   again (the once-per-content contract). compact_state_digests merges
+#   per-run small files and drops duplicate digests.
 
 
 def delta_check_against_digests(
     current: DataFrame, digests: DataFrame | None
 ) -> DataFrame:
-    """Scalable delta against a stored digest set: semantics of
-    ``delta_check_anti_hash`` with the state side already reduced to
-    (h1, h2). The current side shuffles once on the narrow key for
-    both the dedup and the anti-join; the digest side needs no schema
-    conformance because digests were computed before any round-trip."""
+    """Rows of ``current`` (deduplicated) whose record digest is not in
+    the stored (h1, h2) set. The current side shuffles once on the
+    narrow key for both the dedup and the anti-join; the digest side
+    needs no schema conformance because digests were computed before
+    any round-trip."""
     deduped = with_record_digests(current).dropDuplicates(["__h1", "__h2"])
     if digests is None:
         return deduped.drop("__h1", "__h2")

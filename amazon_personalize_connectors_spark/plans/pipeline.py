@@ -22,10 +22,7 @@ from pyspark.sql import DataFrame
 from amazon_personalize_connectors_spark.config import ConnectorConfig, PipelineConfig
 from amazon_personalize_connectors_spark.operators.attribution import attribute_users
 from amazon_personalize_connectors_spark.operators.decorate import decorate_items
-from amazon_personalize_connectors_spark.operators.delta import (
-    delta_check,
-    delta_check_against_digests,
-)
+from amazon_personalize_connectors_spark.operators.delta import delta_check
 from amazon_personalize_connectors_spark.operators.split import split_errors
 from amazon_personalize_connectors_spark.operators.stamp import add_job_and_sync_info
 
@@ -35,7 +32,6 @@ class PipelineResult:
     decorated: DataFrame  # post-delta, stamped — what the connector receives
     pre_delta: DataFrame  # decorated before delta — the next sync state (K5)
     errors: DataFrame  # failed inference rows (K2)
-    delta_unstamped: DataFrame = None  # post-delta, pre-stamp — digest-state input
 
 
 def related_items_pipeline(
@@ -46,21 +42,17 @@ def related_items_pipeline(
     config: PipelineConfig,
     state: DataFrame | None = None,
     legacy_window_mode: bool = False,
-    cache_source: bool = True,
-    state_is_digests: bool = False,
 ) -> PipelineResult:
     """Entry point 1 (related_items_etl.py main): error split (F1/F2) →
     decorate (G1/J2/E1/E2/A1) → attribution join (J1) → delta (D1) →
     stamp (P1).
 
-    ``state_is_digests=True`` means ``state`` is a narrow (h1, h2)
-    digest frame from the digest state store; the delta becomes a
-    digest anti-join (the 100 TB path).
-
-    ``cache_source=False`` when the caller already materialized the
-    scan: Spark keys cached plans by plan text, so re-caching the same
-    path in a long-lived session silently serves stale bytes after the
-    files change (run_job caches and unpersists the raw scan itself).
+    ``state`` is the last-sync snapshot (``read_last_sync_state``); the
+    delta is the EXCEPT DISTINCT against it. The pipeline caches
+    nothing: Spark keys cached plans by plan text, so a cache pinned
+    here and never released would serve stale bytes to a later run over
+    the same paths in a long-lived session. A caller that reuses the
+    scan caches it and releases it itself (``run_job`` does).
 
     Operator order differs from the reference deliberately: the
     reference attributes first (ri:159-165) and decorates the fanned-out
@@ -76,8 +68,7 @@ def related_items_pipeline(
         raise ValueError("related_items requires a user-item mapping")
     return _connector_pipeline(
         batch_inference, ("input.itemId", "queryItemId"), mapping, metadata,
-        connector, config, state, legacy_window_mode, cache_source,
-        state_is_digests,
+        connector, config, state, legacy_window_mode,
     )
 
 
@@ -88,28 +79,25 @@ def user_personalization_pipeline(
     config: PipelineConfig,
     state: DataFrame | None = None,
     legacy_window_mode: bool = False,
-    cache_source: bool = True,
-    state_is_digests: bool = False,
 ) -> PipelineResult:
     """Entry point 2 (user_personalization_etl.py main): same skeleton
     minus the attribution join — recs are already per-user (keyed on
     ``input.userId → queryUserId``, up:167). Fixes the reference's
     up:180 wrong-window-key crash path by always re-nesting on
-    queryUserId."""
+    queryUserId. State and caching as in ``related_items_pipeline``."""
     return _connector_pipeline(
         batch_inference, ("input.userId", "queryUserId"), None, metadata,
-        connector, config, state, legacy_window_mode, cache_source,
-        state_is_digests,
+        connector, config, state, legacy_window_mode,
     )
 
 
 def _connector_pipeline(
     batch_inference, key, mapping, metadata, connector, config, state,
-    legacy_window_mode, cache_source, state_is_digests,
+    legacy_window_mode,
 ) -> PipelineResult:
     """split → decorate on ``key`` (source path, output name) →
     attribute when ``mapping`` is given → delta → stamp."""
-    ok, errors = split_errors(batch_inference, cache=cache_source)
+    ok, errors = split_errors(batch_inference, cache=False)
     decorated = decorate_items(
         ok,
         metadata,
@@ -124,11 +112,8 @@ def _connector_pipeline(
         ).select(key[1], "userId", "recommendations")
     delta = decorated
     if config.delta_enabled(connector):
-        check = delta_check_against_digests if state_is_digests else delta_check
-        delta = check(decorated, state)
+        delta = delta_check(decorated, state)
     stamped = add_job_and_sync_info(
         delta, config.job_name, config.run_datetime, connector
     )
-    return PipelineResult(
-        decorated=stamped, pre_delta=decorated, errors=errors, delta_unstamped=delta
-    )
+    return PipelineResult(decorated=stamped, pre_delta=decorated, errors=errors)

@@ -315,7 +315,11 @@ def deliver(
     sleep_fn: Callable[[float], None] = time.sleep,
 ) -> DataFrame:
     """Send payload rows through the transport in fixed-size chunks
-    (P4); return a lazy DataFrame of failed records + error messages.
+    (P4); return a DataFrame of failed records + error messages. The
+    sends are lazy, but building the send RDD (``payloads.toJSON()``)
+    is not: under AQE it runs the shuffle stages of ``payloads`` (e.g.
+    a ``repartition``) when ``deliver`` is called, before any action
+    on the returned frame.
 
     Redrive semantics (template.yaml:334-337): each chunk is a queue
     message — a failed send is re-received up to ``max_receives``

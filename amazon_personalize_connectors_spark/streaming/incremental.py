@@ -114,6 +114,13 @@ def incremental_content_ingest(
     state growth and per-batch cost are ∝ new content, never corpus
     size.
 
+    Each content is delivered once: the store only ever appends
+    digests, so a record that later returns to content it had before
+    hashes to a stored digest and is not delivered again. That is the
+    contract here, and the reason this store is not ``run_job``'s sync
+    state, where a reverted record must resync against the last-sync
+    snapshot.
+
     Replay safety: if a batch is reprocessed after a crash between
     deliver() and the digest append, records are re-delivered
     (at-least-once delivery, like the reference's queue path) but the

@@ -1,9 +1,12 @@
-"""Connector-core contracts: run_job's Spark job count per state format,
-job-type validation in the readers and the job, compact_dataset over
-plain paths and ``file:`` URIs, and the flat digest state store's file
-count and reading of the earlier ``bucket=`` layout."""
+"""Connector-core contracts: run_job's Spark job count, its release of
+the cached scan when a run fails, the keyword options of run_job and
+the pipelines, job-type validation in the readers and the job,
+compact_dataset over plain paths and ``file:`` URIs, and the flat
+digest state store's file count and reading of the earlier ``bucket=``
+layout."""
 
 import glob
+import inspect
 import os
 from datetime import datetime, timezone
 
@@ -17,7 +20,12 @@ from amazon_personalize_connectors_spark.operators.delta import (
     read_state_digests,
     record_digests,
 )
+from amazon_personalize_connectors_spark.plans import job
 from amazon_personalize_connectors_spark.plans.job import run_job
+from amazon_personalize_connectors_spark.plans.pipeline import (
+    related_items_pipeline,
+    user_personalization_pipeline,
+)
 from amazon_personalize_connectors_spark.sinks.jsonl import compact_dataset
 from amazon_personalize_connectors_spark.sources.readers import (
     parse_batch_inference_drift,
@@ -26,7 +34,7 @@ from amazon_personalize_connectors_spark.sources.readers import (
 from amazon_personalize_connectors_spark.streaming.incremental import (
     incremental_content_ingest,
 )
-from test_job import CONFIG_JSON, RECS, _write_inputs
+from test_job import CONFIG_JSON, RECS, _read_jsonl_tree, _write_inputs
 
 
 def _config(day):
@@ -52,25 +60,65 @@ def _spark_jobs(spark, group, fn):
 
 
 # (first run, second run over the first run's state) on the test_job
-# inputs: two connectors, delta check on, errors saved
-@pytest.mark.parametrize(
-    "state_format, expected", [("json", [20, 24]), ("digest", [24, 18])]
-)
+# inputs: two connectors, delta check on, errors saved; the state is a
+# JSON snapshot
+@pytest.mark.parametrize("state_format, expected", [("json", [20, 24])])
 def test_run_job_spark_job_count(spark, tmp_path, state_format, expected):
     root = str(tmp_path / "job")
     _write_inputs(root, RECS)
     counts = [
         _spark_jobs(
             spark,
-            f"run-job-{state_format}-{run}-{tmp_path.name}",
-            lambda: run_job(
-                spark, "related_items", root, _config(13 + run),
-                state_format=state_format,
-            ),
+            f"run-job-{run}-{tmp_path.name}",
+            lambda: run_job(spark, "related_items", root, _config(13 + run)),
         )
         for run in range(2)
     ]
     assert counts == expected
+    assert glob.glob(f"{root}/output/braze/state/part-*.{state_format}")
+
+
+def test_failed_run_job_releases_cached_scan(spark, tmp_path, monkeypatch):
+    """A run that raises after its scan was cached must release it:
+    cached plans are keyed by plan text, so a leaked cache would hand
+    the next run over the same (rewritten) inputs the old rows."""
+    root = str(tmp_path / "job")
+    _write_inputs(root, RECS)
+    real_write = job.write_connector_output
+
+    def write_then_fail(*args):
+        real_write(*args)  # materializes the cached scan
+        raise RuntimeError("sink down")
+
+    monkeypatch.setattr(job, "write_connector_output", write_then_fail)
+    with pytest.raises(RuntimeError, match="sink down"):
+        run_job(spark, "related_items", root, _config(13))
+    monkeypatch.undo()
+
+    changed = [dict(RECS[0], output={"recommendedItems": ["201"]}), *RECS[1:]]
+    _write_inputs(root, changed)
+    report = run_job(spark, "related_items", root, _config(14))
+    by_user = {
+        r["userId"]: [rec["itemId"] for rec in r["recommendations"]]
+        for r in _read_jsonl_tree(report.output_paths["braze"])
+    }
+    assert by_user["u1"] == ["201"]
+
+
+def _keyword_options(fn):
+    return [
+        name
+        for name, p in inspect.signature(fn).parameters.items()
+        if p.default is not inspect.Parameter.empty
+    ]
+
+
+def test_connector_entry_points_keyword_options():
+    """Sync state is always the JSON snapshot and the pipelines never
+    cache: no state-format or cache option on run_job or the pipelines."""
+    assert _keyword_options(run_job) == []
+    for pipeline in (related_items_pipeline, user_personalization_pipeline):
+        assert _keyword_options(pipeline) == ["state", "legacy_window_mode"]
 
 
 def test_unknown_job_type_is_rejected(spark, tmp_path):

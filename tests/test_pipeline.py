@@ -8,10 +8,7 @@ from pyspark.sql import functions as F
 
 from amazon_personalize_connectors_spark.config import ConnectorConfig, PipelineConfig
 from amazon_personalize_connectors_spark.operators.decorate import decorate_items
-from amazon_personalize_connectors_spark.operators.delta import (
-    delta_check,
-    delta_check_anti_hash,
-)
+from amazon_personalize_connectors_spark.operators.delta import delta_check
 from amazon_personalize_connectors_spark.operators.split import split_errors
 from amazon_personalize_connectors_spark.plans.pipeline import (
     related_items_pipeline,
@@ -208,8 +205,6 @@ def test_delta_idempotence(fixtures, config):
     state = res.pre_delta
     again = delta_check(res.pre_delta, state)
     assert again.isEmpty()
-    # anti-hash variant agrees
-    assert delta_check_anti_hash(res.pre_delta, state).isEmpty()
 
 
 def test_delta_detects_change(spark, fixtures, config):
@@ -236,11 +231,11 @@ def test_delta_column_order_invariance(fixtures, config):
     assert delta_check(res.pre_delta, state_shuffled).isEmpty()
 
 
-def test_delta_anti_hash_survives_jsonl_roundtrip(spark, tmp_path, fixtures, config):
-    """The advertised use case for the anti-hash delta is state read
-    back from storage. A JSONL round-trip alphabetizes nested struct
-    fields and re-infers types; without schema conformance every digest
-    changes and the delta silently resyncs everything."""
+def test_delta_survives_jsonl_roundtrip(spark, tmp_path, fixtures, config):
+    """run_job's state is read back from a JSONL snapshot. A JSONL
+    round-trip alphabetizes nested struct fields and re-infers types;
+    without by-name schema conformance the delta would silently resync
+    everything."""
     res = related_items_pipeline(
         fixtures["recs"], fixtures["mapping"], fixtures["meta"],
         config.connectors[0], config,
@@ -257,7 +252,6 @@ def test_delta_anti_hash_survives_jsonl_roundtrip(spark, tmp_path, fixtures, con
         for f in res.pre_delta.schema["recommendations"].dataType.elementType.fields
     ]
     assert rt_fields != cur_fields
-    assert delta_check_anti_hash(res.pre_delta, state).isEmpty()
     assert delta_check(res.pre_delta, state).isEmpty()
 
 
@@ -320,8 +314,8 @@ def test_renest_window_legacy_operator_law(spark):
 
 def test_stored_digest_delta_equals_anti_hash(spark, tmp_path):
     """r13: delta_check_stored_digests over a with_record_digests
-    snapshot must produce EXACTLY delta_check_anti_hash's rows — the
-    digest moved from read-time to write-time, nothing else. Also
+    snapshot must produce EXACTLY delta_check's rows (EXCEPT DISTINCT
+    over the payload columns) — the digest only narrows the keys. Also
     pins the point of the change: the stored digests equal what the
     read-back side would recompute (parquet round-trips the digest
     inputs exactly)."""
@@ -345,16 +339,14 @@ def test_stored_digest_delta_equals_anti_hash(spark, tmp_path):
     assert mism.isEmpty()
     state = back.where(F.col("k") % 2 == 0)
     got = delta_check_stored_digests(back, state)
-    want = delta_check_anti_hash(
-        back.drop("__h1", "__h2"), state.drop("__h1", "__h2")
-    )
+    want = delta_check(back.drop("__h1", "__h2"), state.drop("__h1", "__h2"))
     assert got.columns == want.columns
     # row-level equality (exceptAll trips INTERNAL_ERROR_ATTRIBUTE_NOT
     # _FOUND on this dedup+anti plan in 4.1.2; the frames are tiny)
     assert sorted(map(tuple, got.collect())) == sorted(
         map(tuple, want.collect())
     )
-    # first-sync path (state None) dedups like the anti-hash form
+    # first-sync path (state None) dedups like delta_check
     got0 = delta_check_stored_digests(back, None)
-    want0 = delta_check_anti_hash(back.drop("__h1", "__h2"), None)
+    want0 = delta_check(back.drop("__h1", "__h2"), None)
     assert got0.count() == want0.count() == 4
