@@ -88,23 +88,6 @@ def gram_table(
     )
 
 
-def shingle_table(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-) -> DataFrame:
-    """(id, shingle) exploded table plus per-doc shingle counts."""
-    with_sh = df.select(
-        F.col(id_col).alias("id"), word_shingles(F.col(text_col), n).alias("shingles")
-    )
-    return with_sh.select(
-        "id",
-        F.size("shingles").alias("n_shingles"),
-        F.explode("shingles").alias("shingle"),
-    )
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -483,7 +466,7 @@ def minhash_band_table(
     min aggregates, one shuffle keyed by doc id).
 
     r13: grams come from ``gram_table`` (codegen explode, duplicates
-    KEPT) instead of ``shingle_table``'s interpreted per-row
+    KEPT) instead of ``word_shingles``' interpreted per-row
     ``array_distinct`` HOF — a min aggregate is duplicate-
     insensitive (min over the gram multiset == min over the distinct
     set), so the signatures are bit-identical while the corpus scan

@@ -26,7 +26,6 @@ from __future__ import annotations
 
 import zlib
 from collections.abc import Callable, Iterator
-from contextlib import contextmanager
 from typing import Any
 
 import pandas as pd
@@ -363,28 +362,6 @@ def real_decoder(content: bytes, kind: str) -> dict[str, Any]:
     )
 
 
-@contextmanager
-def arrow_batch_rows(spark, n: int):
-    """Bound Arrow batch row count around an ACTION (it is read at
-    execution time, not plan-build time): big binary payloads need
-    small batches or executor Python workers balloon. Restores the
-    previous session value on exit — use as::
-
-        with arrow_batch_rows(spark, 64):
-            decode_media(media).write.parquet(out)
-    """
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    old = spark.conf.get(key, None)
-    spark.conf.set(key, str(n))
-    try:
-        yield
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
-
-
 def decode_media(df: DataFrame, decoder: Decoder | None = None) -> DataFrame:
     """Arrow-batched feature extraction over the binary column.
 
@@ -395,9 +372,12 @@ def decode_media(df: DataFrame, decoder: Decoder | None = None) -> DataFrame:
     the decoder is real or fake.
 
     Deliberately does NOT touch session conf: Arrow batch sizing is the
-    caller's choice at action time — wrap the action in
-    ``arrow_batch_rows`` (a leaked session-wide override here would
-    throttle every later Arrow/pandas operation).
+    caller's choice at action time — set
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` around the action
+    (it is read at execution time; big binary payloads need small
+    batches or executor Python workers balloon, and a leaked
+    session-wide override here would throttle every later Arrow/pandas
+    operation).
     """
     if decoder is None:
         decoder = real_decoder
@@ -415,68 +395,6 @@ def decode_media(df: DataFrame, decoder: Decoder | None = None) -> DataFrame:
             yield pd.DataFrame(out)
 
     return df.mapInPandas(decode_batches, FEATURE_SCHEMA)
-
-
-def sample_frames(df: DataFrame, every_n_bytes: int = 16) -> DataFrame:
-    """Frame-sampling plumbing for video-like binaries: slice the
-    payload into fixed-stride chunks Catalyst-side (no Python), one
-    output row per sampled "frame". Real frame extraction replaces the
-    byte slicing once a codec exists; the fan-out/partitioning shape
-    is what matters here."""
-    n_frames = F.greatest(
-        (F.col("meta.n_bytes") / every_n_bytes).cast("int"), F.lit(1)
-    )
-    return df.select(
-        "media_id",
-        "kind",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), n_frames - 1),
-                lambda i: F.substring(
-                    F.col("content"), (i * every_n_bytes + 1).cast("int"), every_n_bytes
-                ),
-            )
-        ).alias("frame_no", "frame_bytes"),
-    )
-
-
-def read_media_dir(
-    spark,
-    path: str,
-    kind: str = "image",
-    glob: str | None = None,
-    max_bytes: int | None = None,
-) -> DataFrame:
-    """Ingest a directory of media files into the MEDIA_SCHEMA shape
-    via Spark's native ``binaryFile`` source (content + path + length
-    per file, read JVM-side — no Python in the scan).
-
-    ``media_id`` is the xxhash64 of the file path — stable across
-    reruns and clusters, no driver-side numbering. ``max_bytes``
-    maps to the source's pathGlobFilter-independent size pushdown:
-    files larger than the cap are EXCLUDED at the listing, which is
-    the guard against one 4 GB video blowing an Arrow batch. At scale
-    pair this with ``arrow_batch_rows`` around the decode action and
-    partition the listing by size so each task holds a bounded byte
-    budget.
-    """
-    reader = spark.read.format("binaryFile")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    df = reader.load(path)
-    if max_bytes is not None:
-        df = df.where(F.col("length") <= max_bytes)
-    ext = F.lower(F.element_at(F.split(F.col("path"), r"\."), -1))
-    mime = F.concat(F.lit(f"{kind}/"), ext)
-    return df.select(
-        F.xxhash64(F.col("path")).alias("media_id"),
-        F.lit(kind).alias("kind"),
-        F.col("content"),
-        F.struct(
-            mime.alias("mime"),
-            F.col("length").cast("long").alias("n_bytes"),
-        ).alias("meta"),
-    )
 
 
 def image_pixels(content: bytes):
@@ -545,9 +463,9 @@ def resize_images(
     """Arrow-batched image resize over a MEDIA_SCHEMA frame — the
     preprocessing stage that turns heterogeneous stored images into
     fixed-shape tensors for a training job. Same ``mapInPandas``
-    plumbing (and batch-size caveats — wrap the action in
-    ``arrow_batch_rows``) as ``decode_media``; rows whose bytes can't
-    be decoded by the stdlib codecs are dropped when ``on_error='skip'``
+    plumbing (and Arrow batch-size caveats) as ``decode_media``; rows
+    whose bytes can't be decoded by the stdlib codecs are dropped when
+    ``on_error='skip'``
     (count them upstream via ``decode_media``'s error path) or raised
     when ``on_error='raise'``."""
 
@@ -642,8 +560,8 @@ def frame_energies(df: DataFrame, frame_ms: int = 1000) -> DataFrame:
     one mapInPandas pass, each input row fanning out to its frames —
     the generator shape of ``decode_media`` with a 1→N explode, so a
     billion clips parallelize by input partition and no frame list
-    ever materializes driver-side. Wrap the action in
-    ``arrow_batch_rows`` for large payloads (see decode_media)."""
+    ever materializes driver-side. Bound the Arrow batch size for
+    large payloads (see decode_media)."""
 
     def explode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

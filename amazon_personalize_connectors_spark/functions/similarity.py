@@ -25,6 +25,7 @@ from pyspark.sql.window import Window
 
 from amazon_personalize_connectors_spark.streaming.epoch_store import (
     run_concurrently,
+    write_atomic,
 )
 
 
@@ -1702,11 +1703,10 @@ def _hnsw_assemble(
     ])
     # version stamp: which hash family produced the signatures/qv grid
     # (block_col builds record the trusted key + grid suffix — their
-    # candidate geometry never touched _rp_weight). The sidecar uses
-    # DRIVER-LOCAL filesystem semantics, the same convention as every
-    # versioned store's _MANIFEST/_VERSION here (the driver
-    # coordinates pointer flips); an object-store/HDFS index path
-    # needs a Hadoop-FS port of exactly these few lines.
+    # candidate geometry never touched _rp_weight). The sidecar goes
+    # through epoch_store's meta writer, with the DRIVER-LOCAL
+    # filesystem semantics of every versioned store's
+    # _MANIFEST/_VERSION here (the driver coordinates pointer flips).
     meta = {
         "hash_family": hash_family,
         "m": m,
@@ -1715,10 +1715,7 @@ def _hnsw_assemble(
         "n_tables": n_tables,
         "entry_sample": entry_sample,
     }
-    tmp = os.path.join(index_path, "_META.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, os.path.join(index_path, "_META.json"))
+    write_atomic(os.path.join(index_path, "_META.json"), json.dumps(meta))
     out_m.unpersist()
 
 

@@ -49,24 +49,6 @@ def bitmap_partials(
     ).agg(F.bitmap_construct_agg(F.bitmap_bit_position(F.col(id_col))).alias("bm"))
 
 
-def bitmap_distinct_rollup(
-    df: DataFrame,
-    group_cols: Sequence[str],
-    id_col: str,
-    out_col: str = "n_distinct",
-) -> DataFrame:
-    """Exact distinct-``id_col`` count per group via Spark's bitmap
-    aggregates: one shuffle keyed (group, id-bucket) where state is a
-    compressed bitmap (not a hash set of raw ids), then a tiny
-    per-group sum over bucket counts (rows ∝ groups × touched
-    buckets, already aggregated)."""
-    return (
-        bitmap_partials(df, group_cols, id_col)
-        .groupBy(*group_cols)
-        .agg(F.sum(F.bitmap_count("bm")).cast("bigint").alias(out_col))
-    )
-
-
 def bitmap_distinct_merge(
     partials: DataFrame,
     group_cols: Sequence[str],

@@ -135,12 +135,30 @@ def delta_check_stored_digests(
     )
 
 
+def _swap_in(spark, staged: str, path: str) -> None:
+    """Replace ``path`` with the fully written sibling ``staged``:
+    delete, then FileSystem rename (atomic on HDFS/local; copy-on-rename
+    stores like S3 should write to a versioned path instead). A write
+    that fails before the swap leaves ``path`` as it was."""
+    fs, dst = hadoop_path(spark, path)
+    _, src = hadoop_path(spark, staged)
+    fs.delete(dst, True)
+    fs.rename(src, dst)
+
+
 def write_sync_state(decorated: DataFrame, state_path: str) -> None:
     """K5 — persist the new last-sync snapshot (closes README.md:150's
     TODO). Overwrite: state is a full snapshot, not a log, so a record
     that reverts to earlier content is delivered again. The digest
-    store below is not a substitute: it never forgets a digest."""
-    decorated.write.mode("overwrite").json(state_path)
+    store below is not a substitute: it never forgets a digest.
+
+    The snapshot is written to ``<state_path>__next`` and swapped in
+    only once complete: an overwrite in place deletes the old snapshot
+    before its job runs, so a failed write would leave ``state_path``
+    empty and every later run would fail to read it."""
+    staged = state_path.rstrip("/") + "__next"
+    decorated.write.mode("overwrite").json(staged)
+    _swap_in(decorated.sparkSession, staged, state_path)
 
 
 # --- Digest state store (once-per-content delivery) ------------------
@@ -198,15 +216,10 @@ def append_state_digests(delta: DataFrame, path: str) -> None:
 
 def compact_state_digests(spark, path: str) -> None:
     """Merge the accumulated run-files and drop duplicate digests.
-    Writes to a sibling temp dir then swaps via FileSystem rename
-    (atomic on HDFS/local; copy-on-rename stores like S3 should
-    compact to a versioned path instead)."""
+    Writes to a sibling temp dir, then swaps it in (``_swap_in``)."""
     digests = read_state_digests(spark, path)
     if digests is None:
         return
     tmp = path.rstrip("/") + "__compacting"
     digests.dropDuplicates(["h1", "h2"]).write.mode("overwrite").parquet(tmp)
-    fs, dst = hadoop_path(spark, path)
-    _, src = hadoop_path(spark, tmp)
-    fs.delete(dst, True)
-    fs.rename(src, dst)
+    _swap_in(spark, tmp, path)

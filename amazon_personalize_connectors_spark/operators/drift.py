@@ -1,73 +1,17 @@
-"""Schema-drift handling — the engine's answer to DynamicFrame choice
-types (SURVEY.md §7.4).
+"""Drift and provenance operators.
 
 Glue DynamicFrames tolerate per-record schema drift by carrying
-self-describing rows. Spark fixes one schema per scan, so drift is
-handled at two levels instead:
-
-* scan level — explicit schemas + PERMISSIVE mode put non-conforming
-  lines in ``_corrupt_record`` (sources/readers.py);
-* relation level — ``union_drifted`` below aligns frames whose schemas
-  diverged across files/batches (added columns, reordered columns,
-  widened numeric types) into one relation, by name.
+self-describing rows (SURVEY.md §7.4). Spark fixes one schema per
+scan, so scan-level drift is handled by explicit schemas + PERMISSIVE
+mode, which put non-conforming lines in ``_corrupt_record``
+(sources/readers.py). This module holds the F8 source-file gate and
+the embedding-distribution drift statistic.
 """
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-_WIDENING: dict[tuple[str, str], str] = {
-    ("int", "bigint"): "bigint",
-    ("bigint", "int"): "bigint",
-    ("int", "double"): "double",
-    ("double", "int"): "double",
-    ("bigint", "double"): "double",
-    ("double", "bigint"): "double",
-    ("float", "double"): "double",
-    ("double", "float"): "double",
-}
-
-
-def _widen(a: T.DataType, b: T.DataType) -> T.DataType:
-    if a == b:
-        return a
-    widened = _WIDENING.get((a.simpleString(), b.simpleString()))
-    if widened is None:
-        # the DynamicFrame "choice" fallback: keep both as strings
-        return T.StringType()
-    return T.StructType.fromDDL(f"x {widened}")[0].dataType
-
-
-def union_drifted(*frames: DataFrame) -> DataFrame:
-    """UNION ALL of frames with drifted schemas: resolve columns by
-    name, add missing columns as nulls, widen conflicting numeric
-    types, fall back to string for irreconcilable conflicts (the
-    choice-type surrender case)."""
-    if not frames:
-        raise ValueError("union_drifted needs at least one frame")
-    merged: dict[str, T.DataType] = {}
-    for df in frames:
-        for field in df.schema.fields:
-            merged[field.name] = (
-                _widen(merged[field.name], field.dataType)
-                if field.name in merged
-                else field.dataType
-            )
-
-    def conform(df: DataFrame) -> DataFrame:
-        cols = []
-        for name, dt in merged.items():
-            if name in df.columns:
-                cols.append(F.col(name).cast(dt).alias(name))
-            else:
-                cols.append(F.lit(None).cast(dt).alias(name))
-        return df.select(*cols)
-
-    return reduce(DataFrame.unionByName, (conform(df) for df in frames))
 
 
 def filter_by_source_file(df: DataFrame, key_regex: str) -> DataFrame:

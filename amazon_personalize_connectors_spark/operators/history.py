@@ -1,5 +1,5 @@
-"""Dimension-history operators: SCD2 interval builds, point-in-time
-snapshots, and incremental aggregate maintenance.
+"""Dimension-history operators: SCD2 interval builds and incremental
+aggregate maintenance.
 
 The reference's state loop (README.md:150, closed by plans/job.py K5)
 keeps only the LATEST snapshot; warehouse users also need the history
@@ -12,9 +12,10 @@ Scale shapes:
 * SCD2 is one window pass per key (lead over the change log). The
   window partition is a key's change count — tiny — never the fact
   table. No joins, no second shuffle.
-* Point-in-time snapshot is a filter on the interval columns —
-  partition-prunable if the table is written partitioned by
-  valid_to_bucket, and never a window at read time.
+* A point-in-time read of an SCD2 table is a plain filter,
+  ``valid_from <= at < valid_to`` — partition-prunable if the table
+  is written partitioned by valid_to_bucket, and never a window at
+  read time.
 * Rollup merge is union + one re-aggregate over (state ∪ delta):
   cost ∝ |state| + |delta|, not ∝ history. Sums stay decimal so
   merged totals are bit-identical to a full recompute at any
@@ -25,7 +26,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -70,16 +71,6 @@ def scd2_from_changelog(
         .alias("valid_to"),
         valid_to.isNull().alias("is_current"),
     )
-
-
-def snapshot_at(scd2: DataFrame, at: Column | str) -> DataFrame:
-    """Point-in-time read of an SCD2 table: rows whose interval covers
-    ``at`` ([valid_from, valid_to) semantics). A plain filter — at
-    scale this is a metadata-pruned scan, not a window or join."""
-    at_col = F.lit(at) if isinstance(at, str) else at
-    return scd2.where(
-        (F.col("valid_from") <= at_col) & (F.col("valid_to") > at_col)
-    ).drop("is_current")
 
 
 def merge_rollup(

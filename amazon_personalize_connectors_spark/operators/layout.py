@@ -61,30 +61,6 @@ def zorder_unkey(z: Column, n_dims: int, bits: int = 10) -> list[Column]:
     return out
 
 
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    dims: list[Column],
-    bits: int = 10,
-    num_files: int | None = None,
-) -> None:
-    """Write ``df`` clustered by the Z-order of ``dims``: range-
-    partition on the Morton key (one skew-aware sampling shuffle),
-    sort within partitions, drop the key, write parquet. Each output
-    file then covers a compact hyper-rectangle of the dimension
-    space, so min/max file statistics prune multi-dimensional
-    predicates — the query side needs no code changes at all."""
-    keyed = df.withColumn("__z", zorder_key(dims, bits))
-    parts = (
-        keyed.repartitionByRange(num_files, "__z")
-        if num_files
-        else keyed.repartitionByRange("__z")
-    )
-    parts.sortWithinPartitions("__z").drop("__z").write.mode(
-        "overwrite"
-    ).parquet(path)
-
-
 def compaction_bins(
     df: DataFrame,
     part_cols: list[str],

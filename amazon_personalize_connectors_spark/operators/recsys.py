@@ -394,40 +394,6 @@ def negative_sampling(
     )
 
 
-def mean_vectors_by_key(
-    df: DataFrame,
-    key_col: str,
-    vec_col: str,
-    round_decimals: int = 6,
-) -> DataFrame:
-    """Elementwise mean embedding per key, long-form output
-    (key, dim, mean_val) — the user-profile-vector build: average the
-    embeddings of everything a user interacted with.
-
-    Shape: posexplode + groupBy(key, dim) + avg. The explode looks
-    expensive but map-side combine collapses each task's stream to at
-    most keys x dims rows before the exchange — the shuffle is the
-    PROFILE size, not interactions x dims. (The collect_list
-    alternative holds every member vector in the aggregate buffer;
-    this holds one running sum per dim.) Means are rounded for
-    engine-portable comparison; raw doubles differ in the last ulp
-    with accumulation order.
-    """
-    exploded = df.select(
-        F.col(key_col), F.posexplode(F.col(vec_col)).alias("dim", "_v")
-    )
-    # ORDER-INDEPENDENT mean: a double avg() is accumulation-order
-    # sensitive (last-ulp drift flips a 6-dp rounding at the boundary
-    # — observed as a partitioning-dependent hash mismatch). Decimal
-    # addition is exact and associative, so sum as decimal and divide
-    # ONCE; the result is identical under any partitioning/merge order.
-    s = F.sum(F.col("_v").cast("double").cast("decimal(38,12)"))
-    n = F.count(F.lit(1))
-    return exploded.groupBy(key_col, "dim").agg(
-        F.round((s / n).cast("double"), round_decimals).alias("mean_val")
-    )
-
-
 def profile_vector_sums(
     df: DataFrame,
     key_col: str,
@@ -448,9 +414,8 @@ def profile_vector_sums(
     scaling (``round(v * scale)``) is a deterministic IEEE multiply +
     half-away-from-zero round, identical across engines.
 
-    Same shuffle shape as ``mean_vectors_by_key``: posexplode +
-    map-side-combinable groupBy — the exchange carries profile-sized
-    partial sums, not interactions x dims rows."""
+    Shape: posexplode + map-side-combinable groupBy — the exchange
+    carries profile-sized partial sums, not interactions x dims rows."""
     exploded = df.select(
         F.col(key_col), F.posexplode(F.col(vec_col)).alias("dim", "_v")
     )

@@ -41,7 +41,6 @@ def related_items_pipeline(
     connector: ConnectorConfig,
     config: PipelineConfig,
     state: DataFrame | None = None,
-    legacy_window_mode: bool = False,
 ) -> PipelineResult:
     """Entry point 1 (related_items_etl.py main): error split (F1/F2) →
     decorate (G1/J2/E1/E2/A1) → attribution join (J1) → delta (D1) →
@@ -68,7 +67,7 @@ def related_items_pipeline(
         raise ValueError("related_items requires a user-item mapping")
     return _connector_pipeline(
         batch_inference, ("input.itemId", "queryItemId"), mapping, metadata,
-        connector, config, state, legacy_window_mode,
+        connector, config, state,
     )
 
 
@@ -78,7 +77,6 @@ def user_personalization_pipeline(
     connector: ConnectorConfig,
     config: PipelineConfig,
     state: DataFrame | None = None,
-    legacy_window_mode: bool = False,
 ) -> PipelineResult:
     """Entry point 2 (user_personalization_etl.py main): same skeleton
     minus the attribution join — recs are already per-user (keyed on
@@ -87,13 +85,12 @@ def user_personalization_pipeline(
     queryUserId. State and caching as in ``related_items_pipeline``."""
     return _connector_pipeline(
         batch_inference, ("input.userId", "queryUserId"), None, metadata,
-        connector, config, state, legacy_window_mode,
+        connector, config, state,
     )
 
 
 def _connector_pipeline(
-    batch_inference, key, mapping, metadata, connector, config, state,
-    legacy_window_mode,
+    batch_inference, key, mapping, metadata, connector, config, state
 ) -> PipelineResult:
     """split → decorate on ``key`` (source path, output name) →
     attribute when ``mapping`` is given → delta → stamp."""
@@ -103,7 +100,6 @@ def _connector_pipeline(
         metadata,
         key_cols=[key],
         metadata_fields=connector.item_metadata_fields or None,
-        legacy_window_mode=legacy_window_mode,
         max_recommendations=connector.max_recommendations,
     )
     if mapping is not None:

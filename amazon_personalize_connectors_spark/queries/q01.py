@@ -1150,15 +1150,21 @@ def q_events_props(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_renest_legacy_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W1+A1 literal form (window prefix collect + groupBy/max,
     ri:202-214) — checked against the SAME oracle as the flagship to
-    prove the idiomatic single-aggregate replacement is equivalent."""
-    decorated = related_items_pipeline(
-        synthetic.related_items_batch_inference(spark, sf_dir),
-        synthetic.user_item_mapping(spark, sf_dir),
+    prove the idiomatic single-aggregate replacement is equivalent.
+    The pipeline body with the legacy re-nest swapped in."""
+    ok = _ok_recs(spark, sf_dir)
+    mapping = synthetic.user_item_mapping(spark, sf_dir)
+    decorated = decorate_items(
+        ok,
         synthetic.item_metadata(spark, sf_dir),
-        _CONNECTOR,
-        _CONFIG,
+        key_cols=[("input.itemId", "queryItemId")],
+        metadata_fields=_CONNECTOR.item_metadata_fields or None,
         legacy_window_mode=True,
-    ).pre_delta
+        max_recommendations=_CONNECTOR.max_recommendations,
+    )
+    decorated = attribute_users(
+        decorated, mapping, recs_item_col="queryItemId"
+    ).select("queryItemId", "userId", "recommendations")
     return _flatten_decorated(decorated, ["queryItemId", "userId"]).withColumnsRenamed(
         {"queryItemId": "query_item_id", "userId": "user_id"}
     )

@@ -10,7 +10,6 @@ unchanged) and always gzip, as the Lambda half expects
 
 from __future__ import annotations
 
-from collections.abc import Sequence
 from datetime import datetime
 
 from pyspark.sql import DataFrame
@@ -48,68 +47,6 @@ def write_errors(errors: DataFrame, base: str, run_datetime: datetime) -> str | 
         return None
     path = partitioned_output_path(base, "errors", run_datetime)
     return _write_jsonl_gz(errors, path)
-
-
-def compact_write(
-    df: DataFrame,
-    path: str,
-    target_file_mb: int = 256,
-    format: str = "parquet",
-    mode: str = "overwrite",
-    est_bytes: int | None = None,
-) -> int:
-    """Write ``df`` with a bounded number of output files sized near
-    ``target_file_mb`` — the small-files control a 100 TB pipeline
-    needs (a 1000-executor job otherwise emits one shard per task;
-    millions of tiny files destroy downstream listing and scan
-    throughput).
-
-    File count comes from Catalyst's size estimate for the plan
-    (column-pruned, post-filter), so upstream selectivity is taken
-    into account. Uses ``coalesce`` when shrinking (no shuffle — it
-    merges task outputs) and ``repartition`` only when the frame has
-    too few partitions to fill the target. Returns the file count.
-    """
-    if target_file_mb <= 0:
-        raise ValueError("target_file_mb must be > 0")
-    if est_bytes is None:
-        # accurate when the frame scans files (parquet footer sizes);
-        # a lower bound for purely computed frames — pass est_bytes
-        # when the caller knows better
-        est_bytes = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    n_files = max(1, min(100_000, -(-est_bytes // (target_file_mb << 20))))
-    current = df.rdd.getNumPartitions()
-    shaped = df.coalesce(n_files) if n_files <= current else df.repartition(n_files)
-    shaped.write.mode(mode).format(format).save(path)
-    return n_files
-
-
-def write_partitioned_idempotent(
-    df: DataFrame,
-    base: str,
-    partition_cols: Sequence[str],
-    format: str = "parquet",
-) -> None:
-    """Idempotent backfill write: dynamic partition overwrite replaces
-    ONLY the partitions present in ``df`` — re-running one day (or one
-    connector/date slice) of a 100 TB output never touches sibling
-    partitions, unlike static overwrite which truncates the whole
-    table root. The session conf is set per-write and restored."""
-    spark = df.sparkSession
-    key = "spark.sql.sources.partitionOverwriteMode"
-    old = spark.conf.get(key)
-    try:
-        spark.conf.set(key, "dynamic")
-        (
-            df.write.mode("overwrite")
-            .partitionBy(*partition_cols)
-            .format(format)
-            .save(base)
-        )
-    finally:
-        spark.conf.set(key, old)
 
 
 def compact_dataset(

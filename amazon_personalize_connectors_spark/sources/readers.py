@@ -209,15 +209,3 @@ def parse_batch_inference_drift(
         F.when(corrupt, F.col(value_col)).alias("_corrupt_record"),
         F.when(~corrupt, drift).alias("_drift"),
     )
-
-
-def read_batch_inference_drift(
-    spark: SparkSession, path: str, job_type: str = "related_items"
-) -> DataFrame:
-    """S1-drift over a path: text scan (a folder read is an implicit
-    UNION ALL, same as the PERMISSIVE reader) + variant parse. On
-    clean input this is row-identical to ``read_batch_inference``
-    modulo the extra ``_drift=false`` column (test-pinned)."""
-    return parse_batch_inference_drift(
-        spark.read.text(path), job_type=job_type
-    )

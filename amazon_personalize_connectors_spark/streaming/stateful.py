@@ -1,40 +1,25 @@
-"""Arbitrary stateful streaming on Spark 4's transformWithState API —
-the successor to applyInPandasWithState (windows.py uses that for
-sessionization; this module exercises the NEW surface: named state
-variables with per-state TTL, timers, and Arrow-batched row handling).
+"""Arbitrary stateful streaming on ``applyInPandasWithState``.
 
 Operator: running per-user engagement stats. Each micro-batch updates
-a per-user ValueState (event count, first/last event time — all
+a per-user group state (event count, first/last event time — all
 integers, so batch-equivalence is exact) and emits the user's updated
-running totals (Update semantics). State TTL bounds the store at
-scale: a user idle past the TTL is evicted and restarts from zero —
-the knob that keeps 100 TB of lifetime users from living in the state
-store forever.
+running totals (Update semantics).
 
-Batch equivalence (pinned in tests/test_stateful.py): draining the
-whole events table through AvailableNow and keeping each user's LAST
-emit equals the plain batch groupBy — the law that makes the
-streaming operator trustworthy.
+Batch equivalence (pinned in tests/test_stateful.py and oracle-checked
+by q:stream_running_stats): draining the whole events table through
+AvailableNow and keeping each user's LAST emit equals the plain batch
+groupBy — the law that makes the streaming operator trustworthy.
 
-Environment note: the transformWithState runtime requires the
-protobuf package for its state-server protocol. This container ships
-no protobuf, so the tests importorskip and the operator runs where
-protobuf exists; the code below is plain public PySpark API. The
-applyInPandasWithState path (windows.py) has no such dependency and
-is fully exercised here.
+The second operator, a two-sided clamped running balance, is the one
+that needs per-key sequential state (see the note above
+``CAPPED_BALANCE_SCHEMA``).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.stateful_processor import (
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
 from pyspark.sql.types import (
     LongType,
     StructField,
@@ -51,70 +36,6 @@ USER_STATS_SCHEMA = StructType(
 )
 
 _STATE_SCHEMA = "n BIGINT, first_us BIGINT, last_us BIGINT"
-
-
-class RunningUserStats(StatefulProcessor):
-    """Per-user running (count, first, last) over an event stream."""
-
-    def __init__(self, ttl_ms: int | None = None):
-        self._ttl_ms = ttl_ms
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._stats = handle.getValueState(
-            "stats", _STATE_SCHEMA, ttlDurationMs=self._ttl_ms
-        )
-
-    def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-        n, first_us, last_us = 0, None, None
-        if self._stats.exists():
-            n, first_us, last_us = self._stats.get()
-        for pdf in rows:
-            ts = pdf["ts_us"]
-            n += len(pdf)
-            lo, hi = int(ts.min()), int(ts.max())
-            first_us = lo if first_us is None else min(first_us, lo)
-            last_us = hi if last_us is None else max(last_us, hi)
-        self._stats.update((n, first_us, last_us))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "first_ts_us": [first_us],
-                "last_ts_us": [last_us],
-            }
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def running_user_stats(
-    events: DataFrame, ttl_ms: int | None = None
-) -> DataFrame:
-    """Attach the stateful running-stats operator to a stream keyed by
-    user. ``events`` needs (user_id, ts_us); output is one updated row
-    per (user, micro-batch) — Update mode, downstream sinks upsert."""
-    return (
-        events.selectExpr("user_id", "ts_us")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=RunningUserStats(ttl_ms=ttl_ms),
-            outputStructType=USER_STATS_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# The SAME operator on applyInPandasWithState — no protobuf dependency,
-# so THIS form carries the runtime evidence in environments (like this
-# container) where the transformWithState state-server protocol cannot
-# load. Semantics are identical: per-user (count, first, last) with
-# Update emits; the TTL knob is the one feature transformWithState adds
-# that this surface lacks (GroupStateTimeout evicts on processing time
-# instead).
-# ---------------------------------------------------------------------------
 
 
 def _stats_group(key, pdfs, state):

@@ -1,12 +1,15 @@
 """Connector-core contracts: run_job's Spark job count, its release of
-the cached scan when a run fails, the keyword options of run_job and
+the cached scan when a run fails, its last snapshot surviving a failed
+sync-state write, the keyword options of run_job and
 the pipelines, job-type validation in the readers and the job,
 compact_dataset over plain paths and ``file:`` URIs, and the flat
 digest state store's file count and reading of the earlier ``bucket=``
 layout."""
 
+import dataclasses
 import glob
 import inspect
+import json
 import os
 from datetime import datetime, timezone
 
@@ -105,6 +108,60 @@ def test_failed_run_job_releases_cached_scan(spark, tmp_path, monkeypatch):
     assert by_user["u1"] == ["201"]
 
 
+def test_failed_state_write_keeps_last_snapshot(spark, tmp_path, monkeypatch):
+    """A sync-state write that fails mid-job must leave the previous
+    snapshot in place: the next run then delivers what a clean re-run
+    of the failed one would have, instead of failing to read an empty
+    ``state/``."""
+    changed = [dict(RECS[0], output={"recommendedItems": ["201"]}), *RECS[1:]]
+
+    def delivered(report):
+        return {
+            name: sorted(json.dumps(r, sort_keys=True) for r in _read_jsonl_tree(p))
+            for name, p in report.output_paths.items()
+        }
+
+    # reference: run 1, then a clean run 2 on the changed inputs
+    ref_root = str(tmp_path / "ref")
+    _write_inputs(ref_root, RECS)
+    run_job(spark, "related_items", ref_root, _config(13))
+    _write_inputs(ref_root, changed)
+    want = run_job(spark, "related_items", ref_root, _config(15))
+
+    root = str(tmp_path / "job")
+    _write_inputs(root, RECS)
+    run_job(spark, "related_items", root, _config(13))
+
+    @F.udf("string")
+    def fail_on_u1(user_id):
+        if user_id == "u1":
+            raise ValueError("state write fails")
+        return user_id
+
+    real_pipeline = job.related_items_pipeline
+
+    def failing_state(*args):
+        res = real_pipeline(*args)
+        return dataclasses.replace(
+            res, pre_delta=res.pre_delta.withColumn("userId", fail_on_u1("userId"))
+        )
+
+    _write_inputs(root, changed)
+    monkeypatch.setattr(job, "related_items_pipeline", failing_state)
+    with pytest.raises(Exception, match="state write fails"):
+        run_job(spark, "related_items", root, _config(14))
+    monkeypatch.undo()
+
+    got = run_job(spark, "related_items", root, _config(15))
+    assert got.delivered_rows == want.delivered_rows
+    assert got.delivered_rows["braze"] == 2  # u1 and u2 (item 100 changed)
+    assert delivered(got) == delivered(want)
+    assert got.state_paths == {
+        name: f"{root}/output/{name}/state" for name in ("braze", "jsonl")
+    }
+    assert not os.path.exists(f"{root}/output/braze/state__next")
+
+
 def _keyword_options(fn):
     return [
         name
@@ -115,10 +172,12 @@ def _keyword_options(fn):
 
 def test_connector_entry_points_keyword_options():
     """Sync state is always the JSON snapshot and the pipelines never
-    cache: no state-format or cache option on run_job or the pipelines."""
+    cache: no state-format or cache option on run_job or the pipelines,
+    and no legacy re-nest switch (q:renest_legacy_window builds that
+    plan from the operators)."""
     assert _keyword_options(run_job) == []
     for pipeline in (related_items_pipeline, user_personalization_pipeline):
-        assert _keyword_options(pipeline) == ["state", "legacy_window_mode"]
+        assert _keyword_options(pipeline) == ["state"]
 
 
 def test_unknown_job_type_is_rejected(spark, tmp_path):

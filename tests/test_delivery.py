@@ -12,17 +12,19 @@ from amazon_personalize_connectors_spark.functions.multimodal import (
     attach_fake_media,
     decode_media,
     fake_decoder,
-    sample_frames,
 )
 from amazon_personalize_connectors_spark.sinks.transport import (
     SQS_MAX_BATCH,
-    RecordingTransport,
-    SpoolingQueueTransport,
     deliver,
     deliver_and_collect_failures,
 )
 from amazon_personalize_connectors_spark.streaming.incremental import (
     incremental_pipeline_run,
+)
+from transport_doubles import (
+    FlakyTransport,
+    RecordingTransport,
+    SpoolingQueueTransport,
 )
 
 
@@ -195,10 +197,6 @@ def test_multimodal_decode_roundtrip(spark):
 
 
 def test_decode_media_leaves_arrow_conf_untouched(spark):
-    from amazon_personalize_connectors_spark.functions.multimodal import (
-        arrow_batch_rows,
-    )
-
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     before = spark.conf.get(key)
     media = attach_fake_media(
@@ -206,26 +204,12 @@ def test_decode_media_leaves_arrow_conf_untouched(spark):
     )
     decode_media(media, decoder=fake_decoder).collect()
     assert spark.conf.get(key) == before
-    with arrow_batch_rows(spark, 7):
-        assert spark.conf.get(key) == "7"
-        decode_media(media, decoder=fake_decoder).collect()
-    assert spark.conf.get(key) == before
 
 
 def test_multimodal_decode_stub_raises_without_decoder(spark):
     media = attach_fake_media(spark.range(1, 3).withColumnRenamed("id", "media_id"), "media_id")
     with pytest.raises(Exception, match="NotImplementedError|media decoding"):
         decode_media(media).collect()
-
-
-def test_sample_frames_strides_content(spark):
-    media = attach_fake_media(spark.range(4, 5).withColumnRenamed("id", "media_id"), "media_id")
-    n_bytes = media.first().meta.n_bytes
-    frames = sample_frames(media, every_n_bytes=16).collect()
-    assert len(frames) == max(n_bytes // 16, 1)
-    assert all(len(f.frame_bytes) <= 16 for f in frames)
-    joined = b"".join(bytes(f.frame_bytes) for f in sorted(frames, key=lambda f: f.frame_no))
-    assert bytes(media.first().content).startswith(joined[:16])
 
 
 def test_incremental_content_ingest_delivers_each_content_once(spark, tmp_path):
@@ -445,10 +429,6 @@ def test_redrive_four_failures_then_success_delivers_exactly_once(
     exactly maxReceiveCount=5 receives consumed."""
     import os
 
-    from amazon_personalize_connectors_spark.sinks.transport import (
-        FlakyTransport,
-    )
-
     spool = str(tmp_path / "flaky4")
     payloads = spark.createDataFrame(
         [("u1",), ("u2",), ("u3",)], "external_id string"
@@ -471,10 +451,6 @@ def test_redrive_exhausted_lands_in_dlq_with_receive_count(
     every record row carries receive_count=5, nothing is spooled, and
     the transport saw exactly 5 receives (no infinite redelivery)."""
     import os
-
-    from amazon_personalize_connectors_spark.sinks.transport import (
-        FlakyTransport,
-    )
 
     spool = str(tmp_path / "flaky5")
     payloads = spark.createDataFrame(

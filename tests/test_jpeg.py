@@ -1,16 +1,14 @@
-"""Baseline JPEG codec (functions/jpeg.py): encoder/decoder roundtrip
-(quant tables of ones so the only loss is DCT rounding), covering
-4:4:4, grayscale, 4:2:0 subsampling, restart markers, and lossy
-uniform quantization; out-of-scope coding modes must raise
-NotImplementedError."""
+"""Baseline JPEG decoder (functions/jpeg.py) against the test encoder
+(jpeg_encoder.py): roundtrips (quant tables of ones so the only loss
+is DCT rounding) covering 4:4:4, grayscale, 4:2:0 subsampling, restart
+markers, and lossy uniform quantization; out-of-scope coding modes
+must raise NotImplementedError."""
 
 import numpy as np
 import pytest
 
-from amazon_personalize_connectors_spark.functions.jpeg import (
-    jpeg_encode,
-    jpeg_pixels,
-)
+from amazon_personalize_connectors_spark.functions.jpeg import jpeg_pixels
+from jpeg_encoder import jpeg_encode
 
 
 def _rng(seed=7):

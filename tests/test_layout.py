@@ -8,7 +8,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from amazon_personalize_connectors_spark.operators.layout import (
-    write_zordered,
     zorder_key,
     zorder_unkey,
 )
@@ -46,7 +45,9 @@ def test_zordered_files_bound_both_dimensions(spark, tmp_path):
         (F.col("id") % n).alias("x"), (F.col("id") / n).cast("bigint").alias("y")
     )
     zpath = str(tmp_path / "zordered")
-    write_zordered(grid, zpath, [F.col("x"), F.col("y")], bits=6, num_files=16)
+    keyed = grid.withColumn("z", zorder_key([F.col("x"), F.col("y")], bits=6))
+    clustered = keyed.repartitionByRange(16, "z").sortWithinPartitions("z")
+    clustered.drop("z").write.parquet(zpath)
 
     xpath = str(tmp_path / "xsorted")
     grid.repartitionByRange(16, "x").sortWithinPartitions("x").write.parquet(xpath)

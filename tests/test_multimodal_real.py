@@ -208,39 +208,6 @@ def test_real_decoder_through_spark_map_in_pandas(spark):
     assert decode_media(media, decoder=real_decoder).schema == FEATURE_SCHEMA
 
 
-def test_read_media_dir_binary_file_source(spark, tmp_path):
-    """binaryFile ingestion → MEDIA_SCHEMA → real decode, end to end."""
-    from amazon_personalize_connectors_spark.functions.multimodal import (
-        read_media_dir,
-    )
-
-    d = tmp_path / "media"
-    d.mkdir()
-    (d / "a.png").write_bytes(make_png(5, 4, (255, 0, 128)))
-    (d / "b.png").write_bytes(make_png(3, 3, (0, 255, 0)))
-    # noise pixels defeat deflate: reliably > 2000 bytes
-    import random as _random
-
-    rng = _random.Random(0)
-    noise = np.array(
-        [rng.randrange(256) for _ in range(32 * 32 * 3)], dtype=np.uint8
-    ).reshape(32, 32, 3)
-    big = make_png_from_array(noise)
-    assert len(big) > 2000
-    (d / "big.png").write_bytes(big)
-    (d / "skip.txt").write_bytes(b"not media")
-
-    media = read_media_dir(
-        spark, str(d), kind="image", glob="*.png", max_bytes=2000
-    )
-    rows = media.collect()
-    assert len(rows) == 2  # glob drops .txt, size cap drops big.png
-    assert {r.meta.mime for r in rows} == {"image/png"}
-    feats = decode_media(media, decoder=real_decoder).collect()
-    assert sorted(f.features[:2] for f in feats) == [[3.0, 3.0], [5.0, 4.0]]
-    assert len({f.media_id for f in feats}) == 2  # stable distinct ids
-
-
 def test_resize_nearest_neighbor_exact():
     # 4x4 gradient -> 2x2: nearest-neighbor picks src rows/cols 0 and 2
     import numpy as np

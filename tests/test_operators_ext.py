@@ -1,4 +1,4 @@
-"""Extended operators: observe metrics, schema drift, salted join,
+"""Extended operators: observe metrics, source-file filter, salted join,
 as-of join, and streaming windows/stateful sessionization."""
 
 import pytest
@@ -6,10 +6,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from amazon_personalize_connectors_spark.operators.asof import asof_join
-from amazon_personalize_connectors_spark.operators.drift import (
-    filter_by_source_file,
-    union_drifted,
-)
+from amazon_personalize_connectors_spark.operators.drift import filter_by_source_file
 from amazon_personalize_connectors_spark.operators.metrics import observe_counts
 from amazon_personalize_connectors_spark.operators.skew import salted_join
 from amazon_personalize_connectors_spark.streaming.windows import (
@@ -24,25 +21,6 @@ def test_observe_counts_no_extra_jobs(spark):
     observed.write.format("noop").mode("overwrite").save()
     assert obs.get["n_rows"] == 30
     assert obs.get["n_flagged"] == 10
-
-
-def test_union_drifted_aligns_and_widens(spark):
-    a = spark.createDataFrame([(1, 10)], "id int, v int")
-    b = spark.createDataFrame([(2.5, "x", 2)], "v double, extra string, id int")
-    out = union_drifted(a, b)
-    assert dict(out.dtypes)["v"] == "double"
-    assert "extra" in out.columns
-    rows = {r.id: r for r in out.collect()}
-    assert rows[1].v == 10.0 and rows[1].extra is None
-    assert rows[2].v == 2.5 and rows[2].extra == "x"
-
-
-def test_union_drifted_choice_conflict_falls_back_to_string(spark):
-    a = spark.createDataFrame([(1, 5)], "id int, v int")
-    b = spark.createDataFrame([(2, "five")], "id int, v string")
-    out = union_drifted(a, b)
-    assert dict(out.dtypes)["v"] == "string"
-    assert {r.v for r in out.collect()} == {"5", "five"}
 
 
 def test_filter_by_source_file(spark, tmp_path):

@@ -51,73 +51,3 @@ def test_partition_values_roundtrip(spark, tmp_path):
     finally:
         spark.conf.set(key, old)
     assert got_s == {("2026", "01", "05"), ("2026", "01", "06")}
-
-
-def test_compact_write_bounds_file_count(spark, tmp_path):
-    import os
-
-    from amazon_personalize_connectors_spark.sinks.jsonl import compact_write
-
-    df = spark.range(0, 50_000).selectExpr(
-        "id", "repeat('x', 100) AS pad"
-    ).repartition(16)
-
-    out1 = str(tmp_path / "one")
-    n1 = compact_write(df, out1, target_file_mb=1024)
-    files1 = [f for f in os.listdir(out1) if f.endswith(".parquet")]
-    assert n1 == 1 and len(files1) == 1  # ~5MB << 1GB target -> one file
-
-    out2 = str(tmp_path / "many")
-    # tiny target forces a split into multiple bounded files
-    n2 = compact_write(df, out2, target_file_mb=1, est_bytes=6 << 20)
-    files2 = [f for f in os.listdir(out2) if f.endswith(".parquet")]
-    assert n2 > 1 and len(files2) == n2
-
-    back = spark.read.parquet(out2)
-    assert back.count() == 50_000
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        compact_write(df, str(tmp_path / "bad"), target_file_mb=0)
-
-
-def test_dynamic_partition_overwrite_replaces_only_written_partitions(
-    spark, tmp_path
-):
-    from pyspark.sql import functions as F
-
-    from amazon_personalize_connectors_spark.sinks.jsonl import (
-        write_partitioned_idempotent,
-    )
-
-    base = str(tmp_path / "out")
-    full = spark.createDataFrame(
-        [(i, ["a", "b", "c"][i % 3], i * 10) for i in range(30)],
-        "id long, part string, v long",
-    )
-    write_partitioned_idempotent(full, base, ["part"])
-
-    # re-run ONLY partition 'b' with corrected values
-    fixed = spark.createDataFrame(
-        [(i, "b", i * 1000) for i in range(1, 30, 3)],
-        "id long, part string, v long",
-    )
-    write_partitioned_idempotent(fixed, base, ["part"])
-
-    out = spark.read.parquet(base)
-    by_part = {
-        r["part"]: (r["n"], r["s"])
-        for r in out.groupBy("part")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("v").alias("s"))
-        .collect()
-    }
-    assert by_part["b"] == (10, sum(i * 1000 for i in range(1, 30, 3)))
-    # untouched partitions keep their original rows
-    assert by_part["a"] == (10, sum(i * 10 for i in range(0, 30, 3)))
-    assert by_part["c"] == (10, sum(i * 10 for i in range(2, 30, 3)))
-    # conf restored
-    assert (
-        spark.conf.get("spark.sql.sources.partitionOverwriteMode").lower()
-        == "static"
-    )

@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from amazon_personalize_connectors_spark.config import ConnectorConfig, PipelineConfig
+from amazon_personalize_connectors_spark.operators.attribution import attribute_users
 from amazon_personalize_connectors_spark.operators.decorate import decorate_items
 from amazon_personalize_connectors_spark.operators.delta import delta_check
 from amazon_personalize_connectors_spark.operators.split import split_errors
@@ -153,13 +154,23 @@ def test_max_recommendations_caps_delivery(fixtures, config):
 
 def test_legacy_window_mode_equivalence(fixtures, config):
     """W1+A1 literal form == idiomatic single-aggregate form."""
-    args = (
-        fixtures["recs"], fixtures["mapping"], fixtures["meta"],
-        config.connectors[0], config,
-    )
+    conn = config.connectors[0]
     # compare pre-stamp frames: set ops reject MapType (syncDirectives)
-    idiomatic = related_items_pipeline(*args).pre_delta
-    legacy = related_items_pipeline(*args, legacy_window_mode=True).pre_delta
+    idiomatic = related_items_pipeline(
+        fixtures["recs"], fixtures["mapping"], fixtures["meta"], conn, config
+    ).pre_delta
+    ok, _ = split_errors(fixtures["recs"], cache=False)
+    legacy = attribute_users(
+        decorate_items(
+            ok,
+            fixtures["meta"],
+            key_cols=[("input.itemId", "queryItemId")],
+            metadata_fields=conn.item_metadata_fields,
+            legacy_window_mode=True,
+        ),
+        fixtures["mapping"],
+        recs_item_col="queryItemId",
+    ).select("queryItemId", "userId", "recommendations")
     assert idiomatic.exceptAll(legacy).isEmpty()
     assert legacy.exceptAll(idiomatic).isEmpty()
 

@@ -146,8 +146,8 @@ def test_drift_reader_parity_on_clean_input(spark, tmp_path):
     import json
 
     from amazon_personalize_connectors_spark.sources.readers import (
+        parse_batch_inference_drift,
         read_batch_inference,
-        read_batch_inference_drift,
     )
 
     p = tmp_path / "clean"
@@ -171,7 +171,7 @@ def test_drift_reader_parity_on_clean_input(spark, tmp_path):
         )
 
     base = read_batch_inference(spark, str(p))
-    drift = read_batch_inference_drift(spark, str(p))
+    drift = parse_batch_inference_drift(spark.read.text(str(p)))
     assert snap(base) == snap(drift)
     assert [r["_drift"] for r in drift.collect()] == [False] * 3
 
@@ -182,8 +182,8 @@ def test_drift_reader_absorbs_choice_types(spark, tmp_path):
     schema and flagged, instead of landing in _corrupt_record; only
     unparseable lines are corrupt."""
     from amazon_personalize_connectors_spark.sources.readers import (
+        parse_batch_inference_drift,
         read_batch_inference,
-        read_batch_inference_drift,
     )
 
     p = tmp_path / "drifty"
@@ -201,7 +201,7 @@ def test_drift_reader_absorbs_choice_types(spark, tmp_path):
     )
     out = {
         (r["input"]["itemId"] if r["input"] else None): r
-        for r in read_batch_inference_drift(spark, str(p)).collect()
+        for r in parse_batch_inference_drift(spark.read.text(str(p))).collect()
     }
     assert out["1"]["_drift"] is False
     assert out["34"]["_drift"] is True  # absorbed, typed, flagged

@@ -164,22 +164,6 @@ def test_negative_sampling_properties(spark, interactions):
     assert again == {(r["user_id"], r["neg_item"], r["rank"]) for r in rows}
 
 
-def test_mean_vectors_by_key(spark):
-    from amazon_personalize_connectors_spark.operators.recsys import (
-        mean_vectors_by_key,
-    )
-
-    df = spark.createDataFrame(
-        [("u1", [1.0, 2.0]), ("u1", [3.0, 6.0]), ("u2", [5.0, 0.0])],
-        "k string, v array<double>",
-    )
-    got = {
-        (r["k"], r["dim"]): r["mean_val"]
-        for r in mean_vectors_by_key(df, "k", "v").collect()
-    }
-    assert got == {("u1", 0): 2.0, ("u1", 1): 4.0, ("u2", 0): 5.0, ("u2", 1): 0.0}
-
-
 def test_covisitation_increments_merge_law(spark):
     """merge(pairs(old), increments(old, delta)) == pairs(old ∪ delta),
     including delta rows that duplicate state (must contribute 0)."""

@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 
 from amazon_personalize_connectors_spark.functions.sketches import (
     bitmap_distinct_merge,
-    bitmap_distinct_rollup,
+    bitmap_partials,
     bloom_prune_semi_join,
     hll_partials,
     hll_rollup,
@@ -15,7 +15,6 @@ from amazon_personalize_connectors_spark.functions.sketches import (
 from amazon_personalize_connectors_spark.operators.history import (
     merge_rollup,
     scd2_from_changelog,
-    snapshot_at,
 )
 
 
@@ -34,7 +33,9 @@ def facts(spark):
 def test_bitmap_rollup_is_exact(spark, facts):
     got = {
         (r["event_type"],): r["n_distinct"]
-        for r in bitmap_distinct_rollup(facts, ["event_type"], "user_id").collect()
+        for r in bitmap_distinct_merge(
+            bitmap_partials(facts, ["event_type"], "user_id"), ["event_type"]
+        ).collect()
     }
     want = {
         (r["event_type"],): r["x"]
@@ -47,8 +48,6 @@ def test_bitmap_rollup_is_exact(spark, facts):
 
 def test_bitmap_merge_equals_direct(spark, facts):
     # daily partial bitmaps → per-type rollup must equal direct distinct
-    from amazon_personalize_connectors_spark.functions.sketches import bitmap_partials
-
     partials = bitmap_partials(facts, ["day", "event_type"], "user_id")
     merged = {
         r["event_type"]: r["n_distinct"]
@@ -56,7 +55,9 @@ def test_bitmap_merge_equals_direct(spark, facts):
     }
     direct = {
         r["event_type"]: r["n_distinct"]
-        for r in bitmap_distinct_rollup(facts, ["event_type"], "user_id").collect()
+        for r in bitmap_distinct_merge(
+            bitmap_partials(facts, ["event_type"], "user_id"), ["event_type"]
+        ).collect()
     }
     assert merged == direct
 
@@ -169,7 +170,8 @@ def test_scd2_intervals_and_collapse(spark):
         (1, "2024-04-01", "9999-12-31", "gold", True),
         (2, "2024-01-15", "9999-12-31", "bronze", True),
     ]
-    snap = snapshot_at(scd, "2024-03-15").collect()
+    at = F.lit("2024-03-15").cast("date")
+    snap = scd.where((F.col("valid_from") <= at) & (F.col("valid_to") > at)).collect()
     assert {(r.cust, r.tier) for r in snap} == {(1, "silver"), (2, "bronze")}
 
 

@@ -1,112 +1,23 @@
-"""Stateful streaming running-stats: the operator must agree with the
-batch aggregate, with state carrying across sequential drains.
-
-Two surfaces, one semantics: the transformWithStateInPandas form
-(named state + TTL; its runtime needs protobuf, absent here, so those
-tests skip) and the applyInPandasWithState twin, which runs fully in
-this container and carries the operator's runtime evidence — plus the
-driver-side oracle query q:stream_running_stats.
+"""Stateful streaming running-stats: the applyInPandasWithState
+operator must agree with the batch aggregate, with state carrying
+across sequential drains — plus the driver-side oracle query
+q:stream_running_stats.
 """
-
-import pytest
 
 from pyspark.sql import functions as F
 
 from amazon_personalize_connectors_spark.sources import synthetic
 from amazon_personalize_connectors_spark.streaming.stateful import (
-    running_user_stats,
     running_user_stats_pandas,
 )
 from amazon_personalize_connectors_spark.streaming.windows import (
     run_stream_to_memory,
 )
 
-# the transformWithStateInPandas RUNTIME needs protobuf (its state
-# server protocol); the applyInPandasWithState twin below has no such
-# dependency and carries the runtime evidence in this container
-def _protobuf_available() -> bool:
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-requires_protobuf = pytest.mark.skipif(
-    not _protobuf_available(),
-    reason="transformWithStateInPandas requires protobuf, absent here",
-)
-
-
-@requires_protobuf
-def test_running_user_stats_equals_batch(spark, sf_dir, tmp_path):
-    landing = str(tmp_path / "landing")
-    batch = synthetic.load_events(spark, sf_dir).select("user_id", "ts_us")
-    batch.write.mode("overwrite").parquet(landing)
-    stream = spark.readStream.schema(batch.schema).parquet(landing)
-    out = run_stream_to_memory(
-        running_user_stats(stream), output_mode="update"
-    )
-    # AvailableNow may run several micro-batches: the LAST emit per
-    # user is the running total to compare (monotone n_events)
-    final = (
-        out.groupBy("user_id")
-        .agg(
-            F.max("n_events").alias("n_events"),
-            F.min("first_ts_us").alias("first_ts_us"),
-            F.max("last_ts_us").alias("last_ts_us"),
-        )
-    )
-    want = {
-        r["user_id"]: (r["n"], r["f"], r["l"])
-        for r in batch.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min("ts_us").alias("f"),
-            F.max("ts_us").alias("l"),
-        )
-        .collect()
-    }
-    got = {
-        r["user_id"]: (r["n_events"], r["first_ts_us"], r["last_ts_us"])
-        for r in final.collect()
-    }
-    assert got == want and len(got) > 10
-
-
-@requires_protobuf
-def test_running_user_stats_accumulates_across_batches(spark, tmp_path):
-    """Two sequential drains against the SAME checkpoint: state from
-    run 1 must carry into run 2 (n_events keeps counting)."""
-    landing = str(tmp_path / "landing2")
-    ckpt = str(tmp_path / "ckpt2")
-    df1 = spark.createDataFrame(
-        [(1, 100), (1, 200), (2, 50)], "user_id long, ts_us long"
-    )
-    df1.write.mode("overwrite").parquet(landing)
-    stream = spark.readStream.schema(df1.schema).parquet(landing)
-    out1 = run_stream_to_memory(
-        running_user_stats(stream), output_mode="update", checkpoint_dir=ckpt
-    )
-    assert {(r["user_id"], r["n_events"]) for r in out1.collect()} == {(1, 2), (2, 1)}
-
-    df2 = spark.createDataFrame([(1, 300), (3, 10)], "user_id long, ts_us long")
-    df2.write.mode("append").parquet(landing)
-    stream2 = spark.readStream.schema(df1.schema).parquet(landing)
-    out2 = run_stream_to_memory(
-        running_user_stats(stream2), output_mode="update", checkpoint_dir=ckpt
-    )
-    got = {(r["user_id"], r["n_events"], r["last_ts_us"]) for r in out2.collect()}
-    assert (1, 3, 300) in got and (3, 1, 10) in got  # user 1 resumed at 2+1
-
-
 
 def test_running_user_stats_pandas_equals_batch(spark, sf_dir, tmp_path):
-    """The applyInPandasWithState twin: drain the events table through
-    AvailableNow; the last emit per user equals the batch aggregate.
-    No protobuf needed — this is the runtime evidence for the
-    running-stats operator in this container."""
+    """Drain the events table through AvailableNow; the last emit per
+    user equals the batch aggregate."""
     landing = str(tmp_path / "landing-p")
     batch = synthetic.load_events(spark, sf_dir).select("user_id", "ts_us")
     batch.write.mode("overwrite").parquet(landing)
