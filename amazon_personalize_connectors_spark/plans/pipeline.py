@@ -8,9 +8,12 @@ decorate → re-nest → delta → stamp as one plan and optimizes across
 operator boundaries (filter pushdown through the joins, broadcast of
 both dimensions, a single shuffle at the re-nest aggregate).
 
-Both job types run one body, ``_connector_pipeline``: split →
-decorate → [attribute] → delta → stamp, attributing only when a
-user-item mapping is given.
+Both job types run one body in two steps: ``_decorated`` (split →
+decorate → [attribute], attributing only when a user-item mapping is
+given) and ``_finish`` (project the connector's fields → delta →
+stamp). ``run_job`` runs ``_decorated`` once per run for all its
+connectors, caches that shared frame and runs ``_finish`` on it per
+connector.
 """
 
 from __future__ import annotations
@@ -18,6 +21,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from amazon_personalize_connectors_spark.config import ConnectorConfig, PipelineConfig
 from amazon_personalize_connectors_spark.operators.attribution import attribute_users
@@ -50,8 +54,8 @@ def related_items_pipeline(
     delta is the EXCEPT DISTINCT against it. The pipeline caches
     nothing: Spark keys cached plans by plan text, so a cache pinned
     here and never released would serve stale bytes to a later run over
-    the same paths in a long-lived session. A caller that reuses the
-    scan caches it and releases it itself (``run_job`` does).
+    the same paths in a long-lived session. ``run_job`` caches the scan
+    and the shared decorated frame, and releases both itself.
 
     Operator order differs from the reference deliberately: the
     reference attributes first (ri:159-165) and decorates the fanned-out
@@ -65,8 +69,11 @@ def related_items_pipeline(
     """
     if mapping is None:
         raise ValueError("related_items requires a user-item mapping")
-    return _connector_pipeline(
-        batch_inference, ("input.itemId", "queryItemId"), mapping, metadata,
+    return _finish(
+        *_decorated(
+            batch_inference, RELATED_ITEMS_KEY, mapping, metadata,
+            connector.item_metadata_fields or None, connector.max_recommendations,
+        ),
         connector, config, state,
     )
 
@@ -83,33 +90,65 @@ def user_personalization_pipeline(
     ``input.userId → queryUserId``, up:167). Fixes the reference's
     up:180 wrong-window-key crash path by always re-nesting on
     queryUserId. State and caching as in ``related_items_pipeline``."""
-    return _connector_pipeline(
-        batch_inference, ("input.userId", "queryUserId"), None, metadata,
+    return _finish(
+        *_decorated(
+            batch_inference, USER_PERSONALIZATION_KEY, None, metadata,
+            connector.item_metadata_fields or None, connector.max_recommendations,
+        ),
         connector, config, state,
     )
 
 
-def _connector_pipeline(
-    batch_inference, key, mapping, metadata, connector, config, state
-) -> PipelineResult:
-    """split → decorate on ``key`` (source path, output name) →
-    attribute when ``mapping`` is given → delta → stamp."""
+# (source path, output name) of each job type's query entity
+RELATED_ITEMS_KEY = ("input.itemId", "queryItemId")
+USER_PERSONALIZATION_KEY = ("input.userId", "queryUserId")
+
+
+def _decorated(
+    batch_inference, key, mapping, metadata, fields, max_recommendations
+) -> tuple[DataFrame, DataFrame]:
+    """split → decorate on ``key`` with the metadata ``fields`` (None:
+    all but ``id``) → attribute when ``mapping`` is given. Returns the
+    decorated frame and the error rows."""
     ok, errors = split_errors(batch_inference, cache=False)
     decorated = decorate_items(
         ok,
         metadata,
         key_cols=[key],
-        metadata_fields=connector.item_metadata_fields or None,
-        max_recommendations=connector.max_recommendations,
+        metadata_fields=fields,
+        max_recommendations=max_recommendations,
     )
     if mapping is not None:
         decorated = attribute_users(
             decorated, mapping, recs_item_col=key[1]
         ).select(key[1], "userId", "recommendations")
-    delta = decorated
+    return decorated, errors
+
+
+def _finish(
+    frame: DataFrame,
+    errors: DataFrame,
+    connector: ConnectorConfig,
+    config: PipelineConfig,
+    state: DataFrame | None,
+) -> PipelineResult:
+    """Project ``frame``'s recs to ``connector``'s metadata fields when
+    it carries more (a frame decorated for several connectors) → delta
+    → stamp. A frame decorated with exactly the connector's fields, or
+    without metadata (bare ``itemId`` structs), passes unchanged."""
+    have = frame.schema["recommendations"].dataType.elementType.fieldNames()
+    want = [*connector.item_metadata_fields, "itemId"]
+    if connector.item_metadata_fields and have not in (want, ["itemId"]):
+        # when(): a null rec stays null, so the element type keeps the
+        # nullability the connector's own decoration gives it
+        frame = frame.withColumn("recommendations", F.transform(
+            "recommendations",
+            lambda r: F.when(r.isNotNull(), F.struct(*[r[f].alias(f) for f in want])),
+        ))
+    delta = frame
     if config.delta_enabled(connector):
-        delta = delta_check(decorated, state)
+        delta = delta_check(frame, state)
     stamped = add_job_and_sync_info(
         delta, config.job_name, config.run_datetime, connector
     )
-    return PipelineResult(decorated=stamped, pre_delta=decorated, errors=errors)
+    return PipelineResult(decorated=stamped, pre_delta=frame, errors=errors)

@@ -6,6 +6,17 @@ re-planning, skew-join handling), explicit shuffle partitioning, UTC
 session time zone (the reference's run timestamps are naive datetimes —
 related_items_etl.py:36 — we pin UTC to keep plans deterministic), and
 Arrow enabled for any Pandas-UDF path.
+
+Cached plans may change their output partitioning
+(``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning``). By
+default a ``persist``ed frame keeps the partitioning it was planned
+with, so AQE cannot coalesce its shuffle partitions: a small cached
+frame then runs one task per shuffle partition in every job that reads
+it, and writes one file per partition. With the conf, AQE coalesces
+the cached plan as it would an uncached one (its default
+``parallelismFirst`` merges only partitions under 1 MB, so a large
+cache keeps its parallelism). ``run_job``'s shared decorated frame and
+``incremental_content_ingest``'s fresh rows are such caches.
 """
 
 from __future__ import annotations
@@ -49,6 +60,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         # 10 MB default is sized for small executors; with 100+ GiB
         # executors a 64 MB dimension (mapping/metadata) is cheap to
         # broadcast and saves a full shuffle+sort of the fact side.

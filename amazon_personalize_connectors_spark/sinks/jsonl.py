@@ -38,15 +38,11 @@ def write_connector_output(
     return _write_jsonl_gz(df, partitioned_output_path(base, connector, run_datetime))
 
 
-def write_errors(errors: DataFrame, base: str, run_datetime: datetime) -> str | None:
-    """K2 — failed inference rows, only when nonempty (ri:114-133).
-    The ``isEmpty`` probe is a limit-1 job: an ``observe()`` upstream of
-    ``errors`` must have fired already, or the probe fulfils it with
-    partial counts."""
-    if errors.isEmpty():
-        return None
-    path = partitioned_output_path(base, "errors", run_datetime)
-    return _write_jsonl_gz(errors, path)
+def write_errors(errors: DataFrame, base: str, run_datetime: datetime) -> str:
+    """K2 — failed inference rows (ri:114-133). The reference writes
+    them only when there are some; the caller knows its error count
+    (``run_job`` observes it) and calls this only then."""
+    return _write_jsonl_gz(errors, partitioned_output_path(base, "errors", run_datetime))
 
 
 def compact_dataset(

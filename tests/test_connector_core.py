@@ -1,22 +1,24 @@
-"""Connector-core contracts: run_job's Spark job count, its release of
-the cached scan when a run fails, its last snapshot surviving a failed
-sync-state write, the keyword options of run_job and
-the pipelines, job-type validation in the readers and the job,
-compact_dataset over plain paths and ``file:`` URIs, and the flat
-digest state store's file count and reading of the earlier ``bucket=``
-layout."""
+"""Connector-core contracts: run_job's Spark job and task counts, its
+release of the cached scan and shared frame when a run fails, its last
+snapshot surviving a failed sync-state write, each connector's output
+and state from the shared frame matching its own pipeline, the keyword
+options of run_job and the pipelines, job-type validation in the
+readers and the job, compact_dataset over plain paths and ``file:``
+URIs, and the flat digest state store's file count (one per small
+trigger) and reading of the earlier ``bucket=`` layout."""
 
 import dataclasses
 import glob
 import inspect
 import json
 import os
+import shutil
 from datetime import datetime, timezone
 
 import pytest
 from pyspark.sql import functions as F
 
-from amazon_personalize_connectors_spark.config import PipelineConfig
+from amazon_personalize_connectors_spark.config import ConnectorConfig, PipelineConfig
 from amazon_personalize_connectors_spark.operators.delta import (
     append_state_digests,
     compact_state_digests,
@@ -33,6 +35,10 @@ from amazon_personalize_connectors_spark.sinks.jsonl import compact_dataset
 from amazon_personalize_connectors_spark.sources.readers import (
     parse_batch_inference_drift,
     read_batch_inference,
+    read_item_metadata,
+    read_last_sync_state,
+    read_user_item_mapping,
+    split_corrupt,
 )
 from amazon_personalize_connectors_spark.streaming.incremental import (
     incremental_content_ingest,
@@ -48,9 +54,11 @@ def _config(day):
     )
 
 
-def _spark_jobs(spark, group, fn):
+def _spark_jobs(spark, group, fn, tasks=False):
     """Run ``fn`` under job group ``group``; return how many Spark jobs
-    it started (broadcast and subquery jobs inherit the group)."""
+    it started (broadcast and subquery jobs inherit the group), or with
+    ``tasks`` the pair (jobs, tasks run by their stages; a skipped
+    stage runs none)."""
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
     try:
@@ -59,13 +67,20 @@ def _spark_jobs(spark, group, fn):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    if not tasks:
+        return len(jobs)
+    stages = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
+    return len(jobs), sum(tracker.getStageInfo(s).numCompletedTasks for s in stages)
 
 
-# (first run, second run over the first run's state) on the test_job
-# inputs: two connectors, delta check on, errors saved; the state is a
-# JSON snapshot
-@pytest.mark.parametrize("state_format, expected", [("json", [20, 24])])
+# (jobs, tasks) of a first run and of a second run over the first run's
+# state, on the test_job inputs: two connectors, delta check on, errors
+# saved; the state is a JSON snapshot. The task count fails when a
+# cached frame keeps every shuffle partition instead of letting AQE
+# coalesce it.
+@pytest.mark.parametrize("state_format, expected", [("json", [(11, 11), (15, 15)])])
 def test_run_job_spark_job_count(spark, tmp_path, state_format, expected):
     root = str(tmp_path / "job")
     _write_inputs(root, RECS)
@@ -74,6 +89,7 @@ def test_run_job_spark_job_count(spark, tmp_path, state_format, expected):
             spark,
             f"run-job-{run}-{tmp_path.name}",
             lambda: run_job(spark, "related_items", root, _config(13 + run)),
+            tasks=True,
         )
         for run in range(2)
     ]
@@ -94,13 +110,17 @@ def test_failed_run_job_releases_cached_scan(spark, tmp_path, monkeypatch):
         raise RuntimeError("sink down")
 
     monkeypatch.setattr(job, "write_connector_output", write_then_fail)
+    spark.catalog.clearCache()  # what earlier test modules left cached
+    cache = spark._jsparkSession.sharedState().cacheManager()
     with pytest.raises(RuntimeError, match="sink down"):
         run_job(spark, "related_items", root, _config(13))
     monkeypatch.undo()
+    assert cache.isEmpty()  # the scan and the shared decorated frame
 
     changed = [dict(RECS[0], output={"recommendedItems": ["201"]}), *RECS[1:]]
     _write_inputs(root, changed)
     report = run_job(spark, "related_items", root, _config(14))
+    assert cache.isEmpty()
     by_user = {
         r["userId"]: [rec["itemId"] for rec in r["recommendations"]]
         for r in _read_jsonl_tree(report.output_paths["braze"])
@@ -138,16 +158,16 @@ def test_failed_state_write_keeps_last_snapshot(spark, tmp_path, monkeypatch):
             raise ValueError("state write fails")
         return user_id
 
-    real_pipeline = job.related_items_pipeline
+    real_finish = job._finish
 
     def failing_state(*args):
-        res = real_pipeline(*args)
+        res = real_finish(*args)
         return dataclasses.replace(
             res, pre_delta=res.pre_delta.withColumn("userId", fail_on_u1("userId"))
         )
 
     _write_inputs(root, changed)
-    monkeypatch.setattr(job, "related_items_pipeline", failing_state)
+    monkeypatch.setattr(job, "_finish", failing_state)
     with pytest.raises(Exception, match="state write fails"):
         run_job(spark, "related_items", root, _config(14))
     monkeypatch.undo()
@@ -160,6 +180,90 @@ def test_failed_state_write_keeps_last_snapshot(spark, tmp_path, monkeypatch):
         name: f"{root}/output/{name}/state" for name in ("braze", "jsonl")
     }
     assert not os.path.exists(f"{root}/output/braze/state__next")
+
+
+SHARED_CONNECTORS = (
+    # a reordered subset, every field, and a capped subset: the first two
+    # share one frame decorated with every field, the third its own
+    ConnectorConfig("subset", item_metadata_fields=("price", "name")),
+    ConnectorConfig("all"),
+    ConnectorConfig("top2", item_metadata_fields=("name",), max_recommendations=2),
+)
+
+
+def _write_shared_inputs(root, job_type, metadata, changed):
+    key = "itemId" if job_type == "related_items" else "userId"
+    recs = [
+        # the null rec is dropped by the re-nest, so a cap of 2 keeps
+        # one rec here, where slicing the finished array would keep two
+        ("100", ["200", None, "201", "202"]),
+        ("101", ["201", "999", "202"] if changed else ["201", "999"]),
+        ("102", []),
+    ]
+    lines = [{"input": {key: k}, "output": {"recommendedItems": r}} for k, r in recs]
+    lines.append({"input": {key: "bad"}, "error": "ITEM_NOT_IN_DATASET"})
+    _write_inputs(root, lines)
+    if not metadata:
+        shutil.rmtree(f"{root}/item_metadata")
+    elif changed:
+        with open(f"{root}/item_metadata/items.json", "a") as f:
+            f.write('{"id": "202", "name": "Gizmo", "price": 4.0}\n')
+
+
+@pytest.mark.parametrize("metadata", [True, False], ids=["metadata", "no-metadata"])
+@pytest.mark.parametrize("job_type", ["related_items", "user_personalization"])
+def test_run_job_shared_frame_matches_own_pipelines(
+    spark, tmp_path, monkeypatch, job_type, metadata
+):
+    """Each connector's output and state, read from run_job's shared
+    decorated frame, have the rows and the exact schema (nullability
+    included) of the connector's own pipeline, on a first run and on a
+    second run's delta against the JSON state."""
+    root = str(tmp_path / "job")
+    written = {}
+
+    def recording(fn, kind):
+        def record(df, *args):
+            name = args[1] if kind == "output" else args[0].split("/")[-2]
+            written[kind, name] = (df.schema, sorted(map(repr, df.collect())))
+            return fn(df, *args)
+        return record
+
+    monkeypatch.setattr(
+        job, "write_connector_output", recording(job.write_connector_output, "output")
+    )
+    monkeypatch.setattr(job, "write_sync_state", recording(job.write_sync_state, "state"))
+    for run, changed in enumerate([False, True]):
+        _write_shared_inputs(root, job_type, metadata, changed)
+        config = PipelineConfig(
+            batch_inference_path=f"{root}/batch_inference",
+            connectors=SHARED_CONNECTORS,
+            perform_delta_check=True,
+            run_datetime=datetime(2026, 8, 13 + run, tzinfo=timezone.utc),
+        )
+        batch, _ = split_corrupt(
+            read_batch_inference(spark, f"{root}/batch_inference", job_type), cache=False
+        )
+        meta = read_item_metadata(spark, f"{root}/item_metadata")
+        want = {}
+        for connector in SHARED_CONNECTORS:
+            state = read_last_sync_state(
+                spark, f"{root}/output/{connector.name}/state"
+            )
+            if job_type == "related_items":
+                mapping = read_user_item_mapping(spark, f"{root}/user_item_mapping")
+                res = related_items_pipeline(batch, mapping, meta, connector, config, state)
+            else:
+                res = user_personalization_pipeline(batch, meta, connector, config, state)
+            for kind, df in (("output", res.decorated), ("state", res.pre_delta)):
+                want[kind, connector.name] = (df.schema, sorted(map(repr, df.collect())))
+        written.clear()
+        report = run_job(spark, job_type, root, config)
+        assert written == want, f"run {run}"
+        assert report.delivered_rows == {
+            name: len(rows) for (kind, name), (_, rows) in want.items() if kind == "output"
+        }
+    assert report.delivered_rows["subset"] > 0  # the second run has a delta
 
 
 def _keyword_options(fn):
@@ -244,6 +348,29 @@ def test_digest_store_writes_few_flat_files(spark, tmp_path):
     assert 0 < len(files) <= limit
     assert not glob.glob(f"{state}/bucket=*")
     assert read_state_digests(spark, state).count() == 60
+
+
+def test_digest_append_writes_one_file_per_trigger(spark, tmp_path):
+    """A small trigger's fresh rows are cached and AQE may coalesce the
+    cached plan, so each trigger appends one digest file, not one per
+    shuffle partition."""
+    landing = str(tmp_path / "landing")
+    state = str(tmp_path / "state")
+    for lo in (0, 20):
+        spark.createDataFrame(
+            [(i, f"doc body {i}") for i in range(lo, lo + 30)], "doc_id long, text string"
+        ).coalesce(1).write.mode("append").parquet(landing)
+    stream = (
+        spark.readStream.schema("doc_id long, text string")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(landing)
+    )
+    query = incremental_content_ingest(
+        stream, state, str(tmp_path / "ckpt"), lambda df, i: None
+    )
+    assert len(query.recentProgress) == 2
+    assert len(_parquet_files(state)) == 2
+    assert read_state_digests(spark, state).count() == 50
 
 
 def _digest_set(df):
